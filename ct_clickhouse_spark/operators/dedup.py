@@ -614,6 +614,18 @@ def remove_duplicate_spans(
 INCREMENTAL_MOD = 5
 
 
+# Below this corpus size incremental_dedup takes the plain anti-join
+# unless the caller hands it a maintained sketch: the Bloom route (a key
+# count, a sketch build, two filter branches, membership eval and a
+# union) costs more than the anti-join it avoids, and AQE broadcasts a
+# tiny corpus side anyway. Same size-adaptive routing as
+# embedding_dedup_groups' pair source (GEMM small / LSH at scale). The
+# value dates from 3218c22; its crossover has not been measured, since no
+# benchmark corpus reaches it. The Bloom route stays tested at every size
+# through prebuilt sketches (tests/test_incremental_dedup.py).
+INCREMENTAL_BLOOM_MIN_CORPUS = 100_000
+
+
 def incremental_dedup(
     new_batch: DataFrame,
     corpus: DataFrame,
@@ -622,13 +634,13 @@ def incremental_dedup(
     prebuilt_bloom: list[int] | None = None,
 ) -> DataFrame:
     """Rows of ``new_batch`` whose ``key`` does not appear in ``corpus`` —
-    row-identical to ``new_batch.join(corpus, key, 'left_anti')`` but with
-    the corpus-sized shuffle reserved for the rows that need it.
+    row-identical to ``new_batch.join(corpus, key, 'left_anti')`` on
+    every route.
 
     The LLM-pipeline shape: each crawl increment is deduped against the
     full historical corpus. A plain anti-join shuffles BOTH sides on the
-    key — at 100 TB that re-shuffles the whole corpus per increment. Here
-    a Bloom sketch over the corpus keys routes the batch first:
+    key — at 100 TB that re-shuffles the whole corpus per increment. At
+    scale a Bloom sketch over the corpus keys routes the batch first:
 
     - bloom-NEGATIVE rows are DEFINITELY new (a clear bit cannot lie) and
       skip the join entirely — at typical increment/corpus overlap this
@@ -643,11 +655,28 @@ def incremental_dedup(
     keeps — the union of the negative branch with the verified positive
     branch is the composition that stays row-identical.
 
-    At 100 TB the sketch is a maintained artifact of the corpus (rebuilt
-    per merge window, same lifecycle as the persisted IVF index), not
-    rebuilt per call — pass it as ``prebuilt_bloom``; otherwise it is
-    built here, sized by ``expected_items`` (defaulting to a count over
-    the corpus key column — one cheap single-column scan).
+    Routing — this is the one place it is decided:
+
+    - ``prebuilt_bloom`` given: the Bloom route, always. At 100 TB the
+      sketch is a maintained artifact of the corpus (rebuilt per merge
+      window, same lifecycle as the persisted IVF index), not rebuilt per
+      call; ``streaming.ingest.start_incremental_dedup`` and the
+      ``dedup_doc_exact`` slot pass theirs here.
+    - otherwise the corpus size is ``expected_items`` if given, else a
+      count over the corpus key column (the builder's only eager work
+      on the small route). Below
+      ``INCREMENTAL_BLOOM_MIN_CORPUS`` keys the result is the plain
+      anti-join against the distinct corpus keys; at or above it the
+      sketch is built here, sized by that count, and the Bloom route
+      runs.
+
+    Degenerate inputs, the same on both routes:
+
+    - an empty corpus removes nothing: the whole batch is returned;
+    - an empty batch returns an empty frame with the batch's schema;
+    - batch rows whose ``key`` is NULL always survive (NULL equals
+      nothing);
+    - NULL corpus keys remove nothing.
     """
     from .bloomjoin import _membership, _tag_words, build_bloom
 
@@ -661,7 +690,9 @@ def incremental_dedup(
         bitmap = prebuilt_bloom
     else:
         if expected_items is None:
-            expected_items = max(keys.count(), 1)
+            expected_items = keys.count()
+        if expected_items < INCREMENTAL_BLOOM_MIN_CORPUS:
+            return new_batch.join(keys.distinct(), key, "left_anti")
         bitmap = build_bloom(keys, key, expected_items)
     # large sketches ride as broadcast data, not a literal expression
     # tree (the r11 sf10 shakeout measured 36 s/query of plan-side cost
@@ -677,27 +708,20 @@ def incremental_dedup(
 # The corpus Bloom sketch is a maintained artifact (rebuilt per merge
 # window, not per query — the lifecycle argued in incremental_dedup's
 # docstring); cache it per (session, sf) like the IVF index path. The
-# cache keeps (bitmap, corpus_count) so the slot can also size-route.
+# cache keeps (bitmap, corpus_count): the count is what incremental_dedup
+# routes on, so the slot never re-counts the corpus.
 _INC_BLOOM_CACHE: dict[tuple[str, str], tuple[list[int], int]] = {}
-
-# Below this corpus size the Bloom routing is pure overhead (two filter
-# branches + membership eval + union cost more than the anti-join it
-# avoids — AQE broadcasts a tiny corpus side anyway), so the slot uses
-# the plain anti-join and reserves the Bloom path for at-scale corpora —
-# the same size-adaptive routing embedding_dedup_groups applies to its
-# pair source (GEMM small / LSH at scale). The Bloom path itself stays
-# pytest-gated at every size (tests/test_incremental_dedup.py).
-INCREMENTAL_BLOOM_MIN_CORPUS = 100_000
 
 
 def _corpus_bloom_cached(
     spark: SparkSession, sf_dir: str, corpus: DataFrame
 ) -> tuple[list[int] | None, int]:
     """(bitmap_or_None, corpus_count), cached per (session, sf). The
-    bitmap is built ONLY when the corpus is large enough for the Bloom
-    route to be taken — below the threshold the routing goes plain
-    anti-join and building the sketch would be pure waste (the exact
-    overhead the routing exists to remove)."""
+    bitmap is built ONLY when the corpus is large enough for
+    incremental_dedup to take the Bloom route — below
+    INCREMENTAL_BLOOM_MIN_CORPUS it routes to the plain anti-join and
+    building the sketch would be pure waste (the exact overhead the
+    routing exists to remove)."""
     from ..catalog import _session_key
 
     from .bloomjoin import build_bloom
@@ -765,12 +789,13 @@ def doc_incremental_new(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text_hash"
     )
     bitmap, n_corpus = _corpus_bloom_cached(spark, sf_dir, corpus)
-    if bitmap is not None:
-        new = incremental_dedup(
-            new_batch, corpus, "text_hash", prebuilt_bloom=bitmap
-        )
-    else:  # row-identical by the operator's own contract
-        new = new_batch.join(corpus.distinct(), "text_hash", "left_anti")
+    new = incremental_dedup(
+        new_batch,
+        corpus,
+        "text_hash",
+        expected_items=n_corpus,
+        prebuilt_bloom=bitmap,
+    )
     return new.select(
         F.lit("incremental").alias("kind"),
         "text_hash",
@@ -814,10 +839,12 @@ def doc_exact_and_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
       words removed, aux = total words). A wrong covered-position set or
       reassembly order anywhere breaks the value hash;
     - kind='incremental': the new-batch docs (doc_id % INCREMENTAL_MOD
-      == 0) absent from the rest-of-corpus by content hash, via the
-      Bloom-routed incremental dedup — a dropped bloom-negative row or a
-      surviving false positive breaks the value hash against the plain
-      NOT EXISTS oracle.
+      == 0) absent from the rest-of-corpus by content hash, via
+      ``incremental_dedup`` (plain anti-join below
+      INCREMENTAL_BLOOM_MIN_CORPUS corpus docs, the cached sketch's Bloom
+      route at or above it) — a dropped bloom-negative row or a surviving
+      false positive breaks the value hash against the plain NOT EXISTS
+      oracle.
 
     All three sections read the ONE persisted tokenized/hashed base
     (``_doc_base_cached``) instead of re-deriving text intermediates per

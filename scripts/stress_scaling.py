@@ -276,10 +276,13 @@ def main() -> None:
             orders, dim_k, "o_custkey", expected_items=max(2000 * k, 2000)
         ).agg(F.count(F.lit(1))).collect())
 
-        # incremental dedup (round 4): Bloom-routed new-batch vs corpus.
-        # Both sides scale k x; the sketch build is linear in corpus keys
-        # and the anti-join sees only the bloom-positive sliver.
+        # incremental dedup (round 4): new-batch vs corpus. Both sides
+        # scale k x. Below INCREMENTAL_BLOOM_MIN_CORPUS corpus keys the
+        # operator is a plain anti-join; at or above it the sketch build is
+        # linear in corpus keys and the anti-join sees only the
+        # bloom-positive sliver. The route each size took goes to stderr.
         from ct_clickhouse_spark.operators.dedup import incremental_dedup
+        from ct_clickhouse_spark.plans import executed_plan
 
         batch_k = docs.filter(F.col("doc_id") % 5 == 0).select(
             "doc_id", F.md5("text").alias("h")
@@ -288,9 +291,19 @@ def main() -> None:
             F.md5("text").alias("h")
         )
         n_corpus = corpus_k.count()
-        timed("incremental_dedup", k, lambda: incremental_dedup(
-            batch_k, corpus_k, "h", expected_items=n_corpus
-        ).agg(F.count(F.lit(1))).collect())
+
+        def inc_dedup():
+            return incremental_dedup(batch_k, corpus_k, "h", expected_items=n_corpus)
+
+        timed("incremental_dedup", k, lambda: inc_dedup().agg(
+            F.count(F.lit(1))).collect())
+        if not only or "incremental_dedup" in only:
+            # the Bloom route's membership predicate hashes with xxhash64
+            route = "bloom" if "xxhash64" in executed_plan(inc_dedup()) else "anti-join"
+            print(
+                f"incremental_dedup x{k}: {route} route ({n_corpus} corpus keys)",
+                file=sys.stderr,
+            )
 
         # KMV sketch (round 4): distinct hash agg + spillable per-group
         # window top-k; output bounded at k doubles per group

@@ -163,9 +163,14 @@ def test_incremental_dedup_broadcast_carrier_row_identical(spark, monkeypatch):
             corpus.distinct(), "text_hash", "left_anti"
         ).collect()
     )
+    # a prebuilt sketch forces the Bloom route at fixture size
+    bitmap = bloomjoin.build_bloom(corpus, "text_hash", corpus.count())
     monkeypatch.setattr(bloomjoin, "LITERAL_WORDS_MAX", 8)
     got = sorted(
-        r.doc_id for r in incremental_dedup(new_batch, corpus, "text_hash").collect()
+        r.doc_id
+        for r in incremental_dedup(
+            new_batch, corpus, "text_hash", prebuilt_bloom=bitmap
+        ).collect()
     )
     assert got == want
 

@@ -1,19 +1,27 @@
-"""Incremental (cross-snapshot) dedup: the Bloom-routed composition must
-be row-identical to a plain left_anti join — including under a
-deliberately undersized sketch (high false-positive rate) — and must
-actually route most definitely-new rows around the join."""
+"""Incremental (cross-snapshot) dedup: both routes — the plain anti-join
+a small corpus takes and the Bloom route a prebuilt or at-scale sketch
+takes — must be row-identical to a plain left_anti join, including under
+a deliberately undersized sketch (high false-positive rate) and on
+degenerate input; the Bloom route must actually send most definitely-new
+rows around the join."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from ct_clickhouse_spark import plans
 from ct_clickhouse_spark.catalog import load_table
+from ct_clickhouse_spark.operators.bloomjoin import build_bloom
 from ct_clickhouse_spark.operators.dedup import (
+    INCREMENTAL_BLOOM_MIN_CORPUS,
     INCREMENTAL_MOD,
     doc_incremental_new,
     incremental_dedup,
 )
 from tests.conftest import SF_DIR
+
+ROUTES = ("anti", "bloom")
 
 
 def _frames(spark):
@@ -25,9 +33,23 @@ def _frames(spark):
     return batch, corpus
 
 
-def test_incremental_equals_plain_anti_join(spark):
+def _route(route: str, corpus) -> dict:
+    """incremental_dedup kwargs that force ``route``: a small corpus with
+    no sketch takes the plain anti-join; a prebuilt sketch always takes
+    the Bloom route."""
+    if route == "anti":
+        return {}
+    return {"prebuilt_bloom": build_bloom(corpus, "k", max(corpus.count(), 1))}
+
+
+def _rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("route", ROUTES)
+def test_incremental_equals_plain_anti_join(spark, route):
     batch, corpus = _frames(spark)
-    got = incremental_dedup(batch, corpus, "k")
+    got = incremental_dedup(batch, corpus, "k", **_route(route, corpus))
     want = batch.join(corpus, "k", "left_anti")
     assert got.count() == want.count() == 300
     g = {tuple(r) for r in got.collect()}
@@ -37,9 +59,12 @@ def test_incremental_equals_plain_anti_join(spark):
 
 def test_incremental_sound_under_tiny_sketch(spark):
     """An undersized sketch saturates (every probe bloom-positive); the
-    verification anti-join must still make the result exact."""
+    verification anti-join must still make the result exact. The sketch
+    is prebuilt so the Bloom route is taken at this corpus size."""
     batch, corpus = _frames(spark)
-    got = incremental_dedup(batch, corpus, "k", expected_items=1)
+    got = incremental_dedup(
+        batch, corpus, "k", prebuilt_bloom=build_bloom(corpus, "k", 1)
+    )
     want = batch.join(corpus, "k", "left_anti")
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
 
@@ -89,18 +114,17 @@ def test_doc_incremental_new_matches_sql_semantics(spark):
 
 
 def test_prebuilt_bloom_equals_inline_build(spark):
-    from ct_clickhouse_spark.operators.bloomjoin import build_bloom
-
     batch, corpus = _frames(spark)
     bitmap = build_bloom(corpus.select("k"), "k", 500)
     got = incremental_dedup(batch, corpus, "k", prebuilt_bloom=bitmap)
-    want = incremental_dedup(batch, corpus, "k")
+    # expected_items at the routing threshold builds the sketch inline
+    want = incremental_dedup(
+        batch, corpus, "k", expected_items=INCREMENTAL_BLOOM_MIN_CORPUS
+    )
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
 
 
 def test_empty_prebuilt_bloom_rejected(spark):
-    import pytest
-
     batch, corpus = _frames(spark)
     with pytest.raises(ValueError, match="non-empty"):
         incremental_dedup(batch, corpus, "k", prebuilt_bloom=[])
@@ -123,8 +147,6 @@ def test_small_corpus_skips_bloom_build(spark):
 
 
 def test_span_removal_rejects_mismatched_prebuilt_grams(spark):
-    import pytest
-
     from ct_clickhouse_spark.operators import dedup
 
     docs = spark.createDataFrame(
@@ -136,3 +158,74 @@ def test_span_removal_rejects_mismatched_prebuilt_grams(spark):
     grams = dedup._span_grams(base)
     with pytest.raises(ValueError, match="k="):
         dedup.remove_duplicate_spans(base, k=3, grams=grams)
+
+
+@pytest.mark.parametrize(
+    "n, bloom",
+    [(INCREMENTAL_BLOOM_MIN_CORPUS - 1, False), (INCREMENTAL_BLOOM_MIN_CORPUS, True)],
+)
+def test_routing_threshold_row_identical(spark, n, bloom):
+    """``expected_items`` decides the route at the threshold: one below it
+    plans the plain anti-join, at it the Bloom route; both return the
+    plain anti-join's rows."""
+    batch, corpus = _frames(spark)
+    got = incremental_dedup(batch, corpus, "k", expected_items=n)
+    assert ("xxhash64" in plans.executed_plan(got)) is bloom
+    assert _rows(got) == _rows(batch.join(corpus, "k", "left_anti"))
+
+
+def _jobs_fired(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_small_route_builder_fires_only_the_routing_count(spark):
+    """On the anti-join route the builder's only eager work is the corpus
+    key count it routes on (under AQE that one count is two jobs: its
+    shuffle stage and its result); a caller-supplied ``expected_items``
+    leaves the builder with no job at all."""
+    batch, corpus = _frames(spark)
+    count_jobs = _jobs_fired(
+        spark, "test-inc-count", lambda: corpus.select("k").count()
+    )
+    assert count_jobs > 0
+    assert (
+        _jobs_fired(
+            spark, "test-inc-route", lambda: incremental_dedup(batch, corpus, "k")
+        )
+        == count_jobs
+    )
+    assert (
+        _jobs_fired(
+            spark,
+            "test-inc-sized",
+            lambda: incremental_dedup(batch, corpus, "k", expected_items=500),
+        )
+        == 0
+    )
+
+
+@pytest.mark.parametrize("route", ROUTES)
+def test_degenerate_inputs(spark, route):
+    """The docstring's degenerate-input contract, on both routes."""
+    batch = spark.createDataFrame(
+        [(None, 1), ("a", 2), ("b", 3)], "k string, v int"
+    )
+    empty_corpus = spark.createDataFrame([], "k string")
+    got = incremental_dedup(batch, empty_corpus, "k", **_route(route, empty_corpus))
+    assert _rows(got) == _rows(batch)  # empty corpus: the whole batch
+
+    corpus = spark.createDataFrame([(None,), ("a",)], "k string")
+    empty_batch = spark.createDataFrame([], "k string, v int")
+    got = incremental_dedup(empty_batch, corpus, "k", **_route(route, corpus))
+    assert got.collect() == [] and got.schema == empty_batch.schema
+
+    # the NULL-keyed batch row survives; the NULL corpus key removes
+    # nothing, so only "a" goes
+    got = incremental_dedup(batch, corpus, "k", **_route(route, corpus))
+    assert _rows(got) == _rows(batch.filter("k IS NULL OR k = 'b'"))

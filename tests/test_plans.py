@@ -98,15 +98,33 @@ def test_asof_join_is_window_not_range_join(spark):
 def test_incremental_dedup_filters_before_join(spark):
     """The bloom routing must plan as codegen Filters over the batch scan
     (no Python eval), and the only join is the confirm anti-join over
-    the positive sliver — no cartesian anywhere."""
+    the positive sliver — no cartesian anywhere. A prebuilt sketch forces
+    the Bloom route at this corpus size."""
+    from ct_clickhouse_spark.operators.bloomjoin import build_bloom
+    from ct_clickhouse_spark.operators.dedup import incremental_dedup
+
+    batch = spark.range(0, 1000).select(F.col("id").cast("string").alias("k"))
+    corpus = spark.range(0, 500).select(F.col("id").cast("string").alias("k"))
+    plan = plans.executed_plan(
+        incremental_dedup(
+            batch, corpus, "k", prebuilt_bloom=build_bloom(corpus, "k", 500)
+        )
+    )
+    assert "BatchEvalPython" not in plan and "CartesianProduct" not in plan
+    assert "xxhash64" in plan  # membership predicate compiled to expressions
+    assert "LeftAnti" in plan, plan[:2000]
+
+
+def test_incremental_dedup_small_corpus_plans_plain_anti_join(spark):
+    """Below INCREMENTAL_BLOOM_MIN_CORPUS with no sketch passed in, the
+    operator is the plain anti-join: one LeftAnti, no membership hashing."""
     from ct_clickhouse_spark.operators.dedup import incremental_dedup
 
     batch = spark.range(0, 1000).select(F.col("id").cast("string").alias("k"))
     corpus = spark.range(0, 500).select(F.col("id").cast("string").alias("k"))
     plan = plans.executed_plan(incremental_dedup(batch, corpus, "k"))
-    assert "BatchEvalPython" not in plan and "CartesianProduct" not in plan
-    assert "xxhash64" in plan  # membership predicate compiled to expressions
-    assert "LeftAnti" in plan, plan[:2000]
+    assert plan.count("LeftAnti") == 1, plan[:2000]
+    assert "xxhash64" not in plan, plan[:2000]
 
 
 def test_lm_scoring_aggregates_map_side(spark):
