@@ -23,6 +23,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from . import artifacts
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 _f = StructField
@@ -143,9 +145,10 @@ def table_path(sf_dir: str, name: str) -> str:
 def path_state(path: str) -> tuple:
     """Cheap staleness fingerprint of a local table path (file OR
     directory): (file count, total bytes, max mtime_ns). One os.stat per
-    file — the same contract as serving's `_dir_state` (serving/app.py):
-    a token that changes iff the file listing changed. Missing paths
-    fingerprint as (0, 0, 0) so a later write is always a change."""
+    file — a token that changes iff the file listing changed: a
+    streaming append adds files, a compaction rewrites them (count/size)
+    and a mutation lands new mtimes. Missing paths fingerprint as
+    (0, 0, 0) so a later write is always a change."""
     try:
         st = os.stat(path)
     except OSError:
@@ -158,6 +161,8 @@ def path_state(path: str) -> tuple:
             try:
                 s = os.stat(os.path.join(root, fn))
             except OSError:
+                # a rewrite can remove a file between the listing and
+                # the stat; the changed listing perturbs the fingerprint
                 continue
             n += 1
             total += s.st_size
@@ -165,73 +170,22 @@ def path_state(path: str) -> tuple:
     return (n, total, mx)
 
 
-# TTL-memoized path_state dicts (keyed by sf_dir) registered by artifact
-# caches; invalidate_table clears them so in-ENGINE mutations (merge /
-# delete / compaction, which all route through invalidate_table) become
-# visible immediately, while out-of-band rewrites are detected within
-# the memo's TTL (r14 advice #3).
-_STATE_MEMOS: list[dict] = []
-
-
-def register_state_memo(memo: dict) -> dict:
-    _STATE_MEMOS.append(memo)
-    return memo
-
-
 def invalidate_table(spark: SparkSession, sf_dir: str, name: str) -> None:
-    """Drop every driver-side memo of one fixture table (logical-plan
-    cache, rowcount memo, and Spark's own cached listings/data for the
-    path) so the next load_table re-lists and re-reads. Called by
-    staleness-fingerprinted artifact caches when a path's `path_state`
-    changes (r13 verdict #5 — mutable table dirs must re-resolve)."""
-    key = (_session_key(spark), sf_dir, name)
-    _DF_CACHE.pop(key, None)
-    _ROWCOUNT_CACHE.pop(key, None)
-    for memo in _STATE_MEMOS:
-        memo.pop(sf_dir, None)
+    """Drop every artifact of ``sf_dir`` (``artifacts.invalidate``:
+    logical plans, rowcounts, probes and derived artifacts of all its
+    tables) and Spark's own cached listing/data for the table's path, so
+    the next load_table re-lists and re-reads. Reached from the
+    staleness check of the embeddings artifacts when the table's
+    ``path_state`` changes; the mutation operators do not call it."""
+    artifacts.invalidate(sf_dir)
+    _refresh_path(spark, table_path(sf_dir, name))
+
+
+def _refresh_path(spark: SparkSession, path: str) -> None:
     try:
-        spark.catalog.refreshByPath(table_path(sf_dir, name))
+        spark.catalog.refreshByPath(path)
     except Exception:  # refresh is best-effort (connect-only sessions)
         pass
-
-
-# DataFrame-lineage cache: repeated load_table calls re-list files and
-# re-read footers on the driver (~50-100 ms each), which dominates small
-# interactive queries. The cached object is just the immutable logical
-# plan — no data is pinned. Keyed on the JVM application id (stable for a
-# session's lifetime, never reused within a JVM) rather than ``id(spark)``,
-# which CPython can recycle after GC and alias a fresh session.
-_DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-# Artifact caches (persisted DataFrames, on-disk index dirs) pin REAL
-# resources, unlike _DF_CACHE's logical plans. They are bounded: inserting
-# past the cap evicts the oldest entry (dict preserves insertion order)
-# and calls ``release`` on it (unpersist / rmtree), so a long-lived
-# session sweeping many fixture dirs — scripts/stress_scaling.py builds
-# one per multiplier — cannot grow executor storage or /tmp monotonically.
-ARTIFACT_CACHE_MAX = 4
-
-
-def bounded_cache_put(cache: dict, key, value, release=None, max_entries: int = ARTIFACT_CACHE_MAX):
-    """Insert ``value`` under ``key``; evict (and ``release``) the oldest
-    entries beyond ``max_entries``. Mutates and returns ``value``.
-
-    Re-inserting an existing key moves it to the NEWEST position (r14
-    advice #4: a plain ``cache[key] = value`` on a present key keeps the
-    old insertion slot, so a staleness-refreshed entry sat oldest and
-    could be evicted immediately after being rebuilt, silently re-running
-    its construction pass on the next lookup)."""
-    cache.pop(key, None)
-    cache[key] = value
-    while len(cache) > max_entries:
-        old_key = next(iter(cache))
-        old = cache.pop(old_key)
-        if release is not None:
-            try:
-                release(old)
-            except Exception:  # releasing a stale artifact is best-effort
-                pass
-    return value
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
@@ -259,25 +213,6 @@ def release_local_checkpoint(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass  # blocks are then freed by ContextCleaner on GC
-
-
-def _session_key(spark: SparkSession) -> str:
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:  # pragma: no cover - connect-only sessions
-        # no sparkContext: tag the session object itself with a one-time
-        # uuid. Falling back to id(spark) would reintroduce the CPython
-        # id-recycling aliasing this key exists to avoid.
-        tag = getattr(spark, "_ct_cache_tag", None)
-        if tag is None:
-            import uuid
-
-            tag = uuid.uuid4().hex
-            try:
-                spark._ct_cache_tag = tag
-            except Exception:
-                return f"uuid:{tag}"  # untaggable: never cache-hit, still safe
-        return f"uuid:{tag}"
 
 
 def _read_events(spark: SparkSession, path: str) -> DataFrame:
@@ -383,20 +318,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events`` additionally gets a physical-type-aware read (see
     ``_read_events``) because its nanos variant cannot be read at all
     without a legacy conf."""
-    key = (_session_key(spark), sf_dir, name)
-    cached = _DF_CACHE.get(key)
-    if cached is not None:
-        return cached
-    if name == "events":
-        df = _read_events(spark, table_path(sf_dir, name))
-    else:
-        df = spark.read.parquet(table_path(sf_dir, name))
-    df = _normalize(df, SCHEMAS[name])
-    _DF_CACHE[key] = df
-    return df
+    # The cached object is the table's logical plan, not data: repeated
+    # loads would re-list files and re-read footers on the driver
+    # (~50-100 ms each), which dominates small interactive queries.
+    # Dropping the entry refreshes Spark's cached listing of the path.
+    path = table_path(sf_dir, name)
 
+    def build() -> DataFrame:
+        if name == "events":
+            df = _read_events(spark, path)
+        else:
+            df = spark.read.parquet(path)
+        return _normalize(df, SCHEMAS[name])
 
-_ROWCOUNT_CACHE: dict[tuple[str, str, str], int] = {}
+    return artifacts.get_or_build(
+        spark, "table", (sf_dir, name), build,
+        release=lambda _df: _refresh_path(spark, path), max_entries=None,
+    )
 
 
 def table_rowcount(spark: SparkSession, sf_dir: str, name: str) -> int:
@@ -408,16 +346,14 @@ def table_rowcount(spark: SparkSession, sf_dir: str, name: str) -> int:
     invocation is a redundant scan for a number that cannot change
     (r7 verdict #7). The one count that does run resolves from parquet
     footer metadata (aggregate pushdown), so even the miss is cheap."""
-    key = (_session_key(spark), sf_dir, name)
-    hit = _ROWCOUNT_CACHE.get(key)
-    if hit is None:
-        hit = load_table(spark, sf_dir, name).count()
-        # plain ints need no artifact-sized bound: ARTIFACT_CACHE_MAX=4
-        # is sized for checkpointed tables, and a session sweeping >4
-        # (sf, table) keys (one stress multiplier grid) would thrash
-        # this cache back into the per-invocation count jobs it removes
-        bounded_cache_put(_ROWCOUNT_CACHE, key, hit, max_entries=512)
-    return hit
+    # plain ints need no artifact-sized bound: ARTIFACT_CACHE_MAX=4 is
+    # sized for checkpointed tables, and a session sweeping >4 (sf,
+    # table) keys (one stress multiplier grid) would thrash this cache
+    # back into the per-invocation count jobs it removes
+    return artifacts.get_or_build(
+        spark, "rowcount", (sf_dir, name),
+        lambda: load_table(spark, sf_dir, name).count(), max_entries=512,
+    )
 
 
 def register_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
@@ -434,15 +370,6 @@ def register_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = 
 # many-hundred-core cluster must NOT pay a payload shuffle just for
 # being narrower than the core count (r15 advice, medium).
 NARROW_SCAN_MAX_SPLITS = 2
-
-# Split-count memo per widened table, keyed sf_dir -> {(session, table):
-# n}. Registered as a state memo so in-engine mutations invalidate it;
-# fixture tables are immutable otherwise. Avoids re-running the
-# partition probe (one physical planning of the sub-frame) on every
-# query invocation (r15 verdict #9).
-_SCAN_WIDTH_MEMO: dict = {}
-register_state_memo(_SCAN_WIDTH_MEMO)
-
 
 def widen_narrow_scan(
     df: DataFrame,
@@ -463,8 +390,8 @@ def widen_narrow_scan(
     paid only where the near-serial alternative is strictly worse.
 
     ``table_key``: (sf_dir, table name) when ``df`` is the raw scan of a
-    fixture table — memoizes the split-count probe per (session, table
-    state) so the gate costs a dict lookup per call instead of one
+    fixture table — memoizes the split-count probe per (session, table)
+    so the gate costs a dict lookup per call instead of one
     physical planning of the sub-frame. Sessions without the RDD API
     (Spark Connect) return ``df`` unchanged — the probe is impossible
     there and single-task execution is only a performance, not a
@@ -473,18 +400,17 @@ def widen_narrow_scan(
         target = spark.sparkContext.defaultParallelism
     except Exception:  # pragma: no cover - connect-only sessions
         return df
-    nparts = None
-    skey = _session_key(spark)
-    if table_key is not None:
-        sf_dir, name = table_key
-        nparts = _SCAN_WIDTH_MEMO.get(sf_dir, {}).get((skey, name))
-    if nparts is None:
-        try:
-            nparts = df.rdd.getNumPartitions()
-        except Exception:  # pragma: no cover - connect-only sessions
-            return df
-        if table_key is not None:
-            _SCAN_WIDTH_MEMO.setdefault(sf_dir, {})[(skey, name)] = nparts
+    def probe() -> int:
+        return df.rdd.getNumPartitions()
+
+    try:
+        # the split count of a fixture table's scan is memoized per
+        # (session, table), unbounded (r15 verdict #9)
+        nparts = probe() if table_key is None else artifacts.get_or_build(
+            spark, "scan_width", table_key, probe, max_entries=None
+        )
+    except Exception:  # pragma: no cover - connect-only sessions
+        return df
     if nparts > NARROW_SCAN_MAX_SPLITS or nparts >= target:
         return df
     return df.repartition(target)

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import artifacts
 from .catalog import load_table
 
 _TEMPLATE = """
@@ -123,19 +124,13 @@ def oracle_with_cert_domains(select_sql: str) -> str:
     return f"WITH cert_domains AS (\n{cert_domains_duckdb_sql()}\n)\n{select_sql}"
 
 
-_CERT_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def build_cert_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the cert_domains DataFrame and register it as a temp view.
     The (immutable) lineage is cached per (session, sf_dir) so repeated
     queries skip re-parsing the construction SQL; views are re-registered
     each call so spark.sql always resolves."""
-    from .catalog import _session_key
 
-    key = (_session_key(spark), sf_dir)
-    df = _CERT_CACHE.get(key)
-    if df is None:
+    def build() -> DataFrame:
         load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
         # .cache(): the reference stores cert_domains as a physical table
         # (init.sql) — in-memory columnar caching is the engine's analog,
@@ -153,8 +148,11 @@ def build_cert_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
         # consumer (dedup exact distinct) improved only 1.70 -> 1.27 s at
         # width 8. On a real cluster the construction scan has its own
         # split parallelism, so this is purely a small-fixture trade.
-        df = spark.sql(cert_domains_spark_sql()).cache()
-        _CERT_CACHE[key] = df
+        return spark.sql(cert_domains_spark_sql()).cache()
+
+    df = artifacts.get_or_build(
+        spark, "cert_domains", (sf_dir,), build, release=artifacts.unpersist
+    )
     df.createOrReplaceTempView("cert_domains")
     return df
 

@@ -29,7 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import bounded_cache_put as _bounded_cache_put
+from .. import artifacts
 from ..catalog import load_table, table_rowcount
 from ..cert_domains import (
     build_cert_domains,
@@ -173,26 +173,6 @@ MUT_SEL = 3
 MUT_DELETE_PRED = "base_domain LIKE '%.net'"
 
 
-_MUT_FRAME_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def _cleanup_mut_snapshots() -> None:  # pragma: no cover - exit hook
-    """Sweep the on-disk mutation snapshots at interpreter exit — cache
-    eviction releases them during the run (same contract as the IVF
-    index dirs), but a process that exits before evicting (every bench
-    and test run) would otherwise leak one tmpdir per (session, sf)."""
-    import shutil
-
-    for v in _MUT_FRAME_CACHE.values():
-        shutil.rmtree(os.path.dirname(v[2]), ignore_errors=True)
-    _MUT_FRAME_CACHE.clear()
-
-
-import atexit  # noqa: E402  (registered next to the registry it sweeps)
-
-atexit.register(_cleanup_mut_snapshots)
-
-
 def _mutation_frames(spark: SparkSession, sf_dir: str) -> tuple:
     """(base, updates, snapshot_dir, part_values) for the mutation
     sections. base = the deduped cert slice with version 0 and partition
@@ -209,13 +189,21 @@ def _mutation_frames(spark: SparkSession, sf_dir: str) -> tuple:
     is written once into ``snapshot_dir`` (each invocation OS-copies it
     instead of re-running the Spark write — r7 verdict #2, the
     per-invocation fixed cost), and the update batch's distinct pt
-    values are collected once so merge_upsert skips its discovery job."""
-    from ..catalog import _session_key
+    values are collected once so merge_upsert skips its discovery job.
+    The snapshot dir is removed on eviction and at interpreter exit."""
 
-    ckey = (_session_key(spark), sf_dir)
-    hit = _MUT_FRAME_CACHE.get(ckey)
-    if hit is not None:
-        return hit
+    def release(v: tuple) -> None:
+        v[0].unpersist()
+        v[1].unpersist()
+        artifacts.remove_dir(os.path.dirname(v[2]))
+
+    return artifacts.get_or_build(
+        spark, "mutation_frames", (sf_dir,),
+        lambda: _build_mutation_frames(spark, sf_dir), release=release,
+    )
+
+
+def _build_mutation_frames(spark: SparkSession, sf_dir: str) -> tuple:
     cert = build_cert_domains(spark, sf_dir)
     cnum = F.regexp_extract("base_domain", r"cust(\d+)\.", 1).cast("int")
     base = (
@@ -247,11 +235,7 @@ def _mutation_frames(spark: SparkSession, sf_dir: str) -> tuple:
     )
     updates = wins.unionByName(stale).unionByName(news).persist()
     updates.count()
-    import os
-    import shutil
-    import tempfile
-
-    snap_root = tempfile.mkdtemp(prefix="ctspark_mut_snap_")
+    snap_root = artifacts.mkdtemp("ctspark_mut_snap_")
     snapshot_dir = os.path.join(snap_root, "t")
     # pt-aligned write at an EXPLICIT width (pt = cnum % 4, so 4): one
     # file per partition value instead of one per corpus-width shuffle
@@ -266,17 +250,7 @@ def _mutation_frames(spark: SparkSession, sf_dir: str) -> tuple:
     part_values = sorted(
         r["pt"] for r in updates.select("pt").distinct().collect()
     )
-    # released on eviction like every sibling artifact cache
-    return _bounded_cache_put(
-        _MUT_FRAME_CACHE,
-        ckey,
-        (base, updates, snapshot_dir, part_values),
-        release=lambda v: (
-            v[0].unpersist(),
-            v[1].unpersist(),
-            shutil.rmtree(os.path.dirname(v[2]), ignore_errors=True),
-        ),
-    )
+    return base, updates, snapshot_dir, part_values
 
 
 def cert_mutations_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -490,28 +464,18 @@ def _span_grams(base: DataFrame, k: int = SPAN_GRAM_WORDS) -> DataFrame:
 # a pure function of the corpus — persisted per (session, sf) like the
 # shingle table (the physical gram/shingle table a 100 TB pipeline
 # materializes once per corpus snapshot, not per query).
-_SPAN_GRAM_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _span_grams_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import _session_key
-
-    key = (_session_key(spark), sf_dir)
-    grams = _SPAN_GRAM_CACHE.get(key)
-    if grams is None:
-        # persisted PARTITIONED BY gh: the duplicate-count aggregate and
-        # the starts semi-join both cluster on the gram hash, so neither
-        # re-shuffles the gram table (HashPartitioning(gh) satisfies the
-        # (gh, doc_id) clustering the distinct-count partial needs)
-        grams = (
-            _span_grams(_doc_base_cached(spark, sf_dir))
-            .repartition(default_parallelism(), "gh")
-            .persist()
-        )
-        _bounded_cache_put(
-            _SPAN_GRAM_CACHE, key, grams, release=lambda v: v.unpersist()
-        )
-    return grams
+    # persisted PARTITIONED BY gh: the duplicate-count aggregate and the
+    # starts semi-join both cluster on the gram hash, so neither
+    # re-shuffles the gram table (HashPartitioning(gh) satisfies the
+    # (gh, doc_id) clustering the distinct-count partial needs)
+    return artifacts.get_or_build(
+        spark, "span_grams", (sf_dir,),
+        lambda: _span_grams(_doc_base_cached(spark, sf_dir))
+        .repartition(default_parallelism(), "gh")
+        .persist(),
+        release=artifacts.unpersist,
+    )
 
 
 def remove_duplicate_spans(
@@ -710,9 +674,6 @@ def incremental_dedup(
 # docstring); cache it per (session, sf) like the IVF index path. The
 # cache keeps (bitmap, corpus_count): the count is what incremental_dedup
 # routes on, so the slot never re-counts the corpus.
-_INC_BLOOM_CACHE: dict[tuple[str, str], tuple[list[int], int]] = {}
-
-
 def _corpus_bloom_cached(
     spark: SparkSession, sf_dir: str, corpus: DataFrame
 ) -> tuple[list[int] | None, int]:
@@ -722,21 +683,15 @@ def _corpus_bloom_cached(
     INCREMENTAL_BLOOM_MIN_CORPUS it routes to the plain anti-join and
     building the sketch would be pure waste (the exact overhead the
     routing exists to remove)."""
-    from ..catalog import _session_key
-
     from .bloomjoin import build_bloom
 
-    key = (_session_key(spark), sf_dir)
-    hit = _INC_BLOOM_CACHE.get(key)
-    if hit is None:
+    def build() -> tuple[list[int] | None, int]:
         n = max(corpus.count(), 1)
-        bitmap = (
-            build_bloom(corpus, "text_hash", n)
-            if n >= INCREMENTAL_BLOOM_MIN_CORPUS
-            else None
-        )
-        hit = _bounded_cache_put(_INC_BLOOM_CACHE, key, (bitmap, n))
-    return hit
+        if n < INCREMENTAL_BLOOM_MIN_CORPUS:
+            return None, n
+        return build_bloom(corpus, "text_hash", n), n
+
+    return artifacts.get_or_build(spark, "corpus_bloom", (sf_dir,), build)
 
 
 # The three dedup_doc_exact sections (exact, span-removal, incremental)
@@ -745,15 +700,8 @@ def _corpus_bloom_cached(
 # the same maintained-artifact lifecycle as the shingle/signature caches —
 # instead of each section re-scanning and re-deriving text per run (the
 # r4 verdict's one `weak` efficiency mark: 3 scans x md5 + split).
-_DOC_BASE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _doc_base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import _session_key
-
-    key = (_session_key(spark), sf_dir)
-    base = _DOC_BASE_CACHE.get(key)
-    if base is None:
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").repartition(
             default_parallelism()
         )
@@ -761,7 +709,7 @@ def _doc_base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the incremental anti-join both cluster on it, so they reuse the
         # stored partitioning with zero exchanges (and the repartition
         # still splits the single-file fixture scan across cores)
-        base = (
+        return (
             docs.select(
                 "doc_id",
                 "n_chars",
@@ -771,10 +719,10 @@ def _doc_base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(default_parallelism(), "text_hash")
             .persist()
         )
-        _bounded_cache_put(
-            _DOC_BASE_CACHE, key, base, release=lambda v: v.unpersist()
-        )
-    return base
+
+    return artifacts.get_or_build(
+        spark, "doc_base", (sf_dir,), build, release=artifacts.unpersist
+    )
 
 
 def doc_incremental_new(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -808,24 +756,17 @@ def doc_incremental_new(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The span-removal result frame per (session, sf): dup-gram set +
 # covered-start aggregation + reassembly join, materialized ONCE
 # (localCheckpoint) — a fixed point of the immutable corpus, same
-# lifecycle as _SPAN_GRAM_CACHE/_NGRAM_GROUP_CACHE. Checkpoint blocks
+# lifecycle as the span-gram and ngram-group artifacts. Checkpoint blocks
 # free via ContextCleaner on eviction (reference dropped, never eagerly
 # unpersisted — see catalog.release_local_checkpoint's note).
-_SPAN_REMOVAL_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _span_removal_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import _session_key
-
-    key = (_session_key(spark), sf_dir)
-    hit = _SPAN_REMOVAL_CACHE.get(key)
-    if hit is None:
-        hit = remove_duplicate_spans(
+    return artifacts.get_or_build(
+        spark, "span_removal", (sf_dir,),
+        lambda: remove_duplicate_spans(
             _doc_base_cached(spark, sf_dir),
             grams=_span_grams_cached(spark, sf_dir),
-        ).localCheckpoint(eager=True)
-        _bounded_cache_put(_SPAN_REMOVAL_CACHE, key, hit)
-    return hit
+        ).localCheckpoint(eager=True),
+    )
 
 
 def doc_exact_and_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -880,9 +821,6 @@ def doc_exact_and_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.unionByName(spans).unionByName(inc)
 
 
-_NGRAM_GROUP_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _ngram_pairs_and_labels_cached(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -895,13 +833,17 @@ def _ngram_pairs_and_labels_cached(
     Checkpoint blocks are dropped by Spark's ContextCleaner when the
     cache entry is evicted (no explicit unpersist handle exists for
     localCheckpoint)."""
-    from ..catalog import _session_key
+    return artifacts.get_or_build(
+        spark, "ngram_groups", (sf_dir,),
+        lambda: _build_ngram_pairs_and_labels(spark, sf_dir),
+    )
+
+
+def _build_ngram_pairs_and_labels(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
     from .similarity import label_propagate
 
-    key = (_session_key(spark), sf_dir)
-    hit = _NGRAM_GROUP_CACHE.get(key)
-    if hit is not None:
-        return hit
     pairs = doc_ngram_jaccard_pairs(spark, sf_dir).localCheckpoint(eager=True)
     ids = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id")
@@ -910,7 +852,7 @@ def _ngram_pairs_and_labels_cached(
         ids,
         pairs.select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")),
     ).localCheckpoint(eager=True)
-    return _bounded_cache_put(_NGRAM_GROUP_CACHE, key, (pairs, labels))
+    return pairs, labels
 
 
 def ngram_pairs_and_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1045,21 +987,14 @@ def _pairs_from_shingles(sh: DataFrame, corpus_n: int | None = None) -> DataFram
 # (session, sf_dir) — the in-memory analog of materializing the shingle /
 # sketch table that a 100 TB pipeline would store physically (same
 # precedent as the cached cert_domains fact table, cert_domains.py).
-_SHINGLE_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def _kept_shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import _session_key
-
-    key = (_session_key(spark), sf_dir)
-    sh = _SHINGLE_CACHE.get(key)
-    if sh is None:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            default_parallelism()
-        )
-        sh = _kept_shingles(docs).persist()
-        _SHINGLE_CACHE[key] = sh
-    return sh
+    return artifacts.get_or_build(
+        spark, "shingles", (sf_dir,),
+        lambda: _kept_shingles(
+            load_table(spark, sf_dir, "documents").repartition(default_parallelism())
+        ).persist(),
+        release=artifacts.unpersist,
+    )
 
 
 def doc_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1079,9 +1014,6 @@ def doc_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _kept_shingles_cached(spark, sf_dir),
         corpus_n=table_rowcount(spark, sf_dir, "documents"),
     )
-
-
-_SIG_CACHE: dict[tuple[int, str, int], DataFrame] = {}
 
 
 def _minhash_sig_df(
@@ -1107,38 +1039,32 @@ def _minhash_sig_df(
     other is served by projection instead of re-running the explode +
     min-aggregate over the corpus. Projections are not cached (free to
     recompute; the persisted parent carries the data)."""
-    from ..catalog import _session_key
+    for sdir, k_plan in artifacts.entries("minhash_sig", spark):
+        if sdir == sf_dir and k_plan >= k:
+            break
+    else:
+        k_plan = max(k, _minhash_plan(table_rowcount(spark, sf_dir, "documents"))[0])
 
-    skey = _session_key(spark)
-    key = (skey, sf_dir, k)
-    sig = _SIG_CACHE.get(key)
-    if sig is not None:
-        return sig
-    for (sid, sdir, kk), parent in _SIG_CACHE.items():
-        if sid == skey and sdir == sf_dir and kk > k:
-            return parent.select("doc_id", *[f"h{i}" for i in range(k)])
-    k_req = k
-    k = max(k, _minhash_plan(table_rowcount(spark, sf_dir, "documents"))[0])
-    docs = load_table(spark, sf_dir, "documents").repartition(default_parallelism())
-    # hash the shingle string ONCE, then derive the k family members by
-    # hashing the resulting long with the seed — k string hashes per
-    # shingle was the dominant cost at sf0.1
-    sh = docs.withColumn("_w", _words(F.col("text"))).select(
-        "doc_id",
-        F.explode(
-            F.transform(_shingles(F.col("_w")), lambda s: F.xxhash64(s))
-        ).alias("sh_h"),
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents").repartition(default_parallelism())
+        # hash the shingle string ONCE, then derive the k family members
+        # by hashing the resulting long with the seed — k string hashes
+        # per shingle was the dominant cost at sf0.1
+        sh = docs.withColumn("_w", _words(F.col("text"))).select(
+            "doc_id",
+            F.explode(
+                F.transform(_shingles(F.col("_w")), lambda s: F.xxhash64(s))
+            ).alias("sh_h"),
+        )
+        return sh.groupBy("doc_id").agg(
+            *[F.min(F.xxhash64("sh_h", F.lit(i))).alias(f"h{i}") for i in range(k_plan)]
+        ).persist()
+
+    sig = artifacts.get_or_build(
+        spark, "minhash_sig", (sf_dir, k_plan), build, release=artifacts.unpersist
     )
-    sig = sh.groupBy("doc_id").agg(
-        *[F.min(F.xxhash64("sh_h", F.lit(i))).alias(f"h{i}") for i in range(k)]
-    ).persist()
-    # keyed on _session_key, not id(spark): CPython can recycle an id and
-    # alias a fresh session to a dead one's cached frames (r14 advice #2)
-    _bounded_cache_put(
-        _SIG_CACHE, (skey, sf_dir, k), sig, release=lambda v: v.unpersist()
-    )
-    if k_req < k:
-        return sig.select("doc_id", *[f"h{i}" for i in range(k_req)])
+    if k < k_plan:
+        return sig.select("doc_id", *[f"h{i}" for i in range(k)])
     return sig
 
 
@@ -1292,24 +1218,16 @@ def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # SimHash signatures per (session, sf) — the same per-doc signature
-# artifact class as _SIG_CACHE (a SimHash is a pure function of its own
+# artifact class as the MinHash signatures (a SimHash is a pure function of its own
 # document); the sketch-signatures slot re-joined a fresh full-corpus
 # simhash projection per call while its minhash side was already served
 # from the persisted artifact.
-_SIMHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _doc_simhash_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import _session_key
-
-    key = (_session_key(spark), sf_dir)
-    sim = _SIMHASH_CACHE.get(key)
-    if sim is None:
-        sim = doc_simhash(spark, sf_dir).persist()
-        _bounded_cache_put(
-            _SIMHASH_CACHE, key, sim, release=lambda v: v.unpersist()
-        )
-    return sim
+    return artifacts.get_or_build(
+        spark, "simhash", (sf_dir,),
+        lambda: doc_simhash(spark, sf_dir).persist(),
+        release=artifacts.unpersist,
+    )
 
 
 def doc_sketch_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1342,7 +1260,7 @@ def doc_sketch_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Materialized 4-family pair artifact for the lsh_pairs slot, keyed
 # (session, sf) — the same slot-level pair-artifact lifecycle the ngram
-# slot has used since r6 (_NGRAM_GROUP_CACHE above): each family's
+# slot has used since r6 (the ngram-group artifact above): each family's
 # banded/cell-local pair construction converges to a fixed set for a
 # fixed corpus, so re-running all four pipelines per driver invocation
 # (~4.8 s/call at sf0.1, with multi-second GC-pressure outliers — the
@@ -1351,9 +1269,6 @@ def doc_sketch_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (doc_minhash_lsh_pairs, lsh_candidate_pairs, semdedup_pairs,
 # embedding_incremental_pairs) stay pure pipelines — their recall tests
 # keep exercising the real plans.
-_LSH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def lsh_pairs_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sub-quadratic candidate-pair families under one rows-only slot
     (sketch/cluster-derived pairs have no ANSI-SQL oracle; each family is
@@ -1375,11 +1290,8 @@ def lsh_pairs_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOTE: on a cold cache, building the semdedup side TRAINS the k-means
     centroids (IVF_ITERS distributed passes at construction time) — the
     same once-per-(session, sf) artifact build the IVF index pays."""
-    from ..catalog import _session_key
 
-    key = (_session_key(spark), sf_dir)
-    computed = _LSH_PAIRS_CACHE.get(key)
-    if computed is None:
+    def build() -> DataFrame:
         from .similarity import (
             embedding_incremental_pairs,
             lsh_candidate_pairs,
@@ -1415,13 +1327,12 @@ def lsh_pairs_all(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("corpus_id").alias("id_b"),
             F.col("cosine").alias("score"),
         )
-        computed = (
+        return (
             mh.unionByName(hp).unionByName(sd).unionByName(inc)
         ).localCheckpoint(eager=True)
-        # capacity eviction DROPS the reference only; ContextCleaner
-        # frees the checkpoint blocks once unreachable (see
-        # catalog.release_local_checkpoint's note)
-        _bounded_cache_put(_LSH_PAIRS_CACHE, key, computed)
+
+    # no release: capacity eviction DROPS the checkpointed reference only
+    computed = artifacts.get_or_build(spark, "lsh_pairs", (sf_dir,), build)
     # family='phash': image perceptual-hash near-dups over REAL decoded
     # pixels (multimodal.py multi-probe band-join; score = Hamming
     # distance), and family='phash_group': their components (id_b =

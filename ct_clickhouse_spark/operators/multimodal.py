@@ -45,7 +45,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..catalog import bounded_cache_put as _bounded_cache_put
+from .. import artifacts
 from ..catalog import load_table
 
 FRAME_BYTES = 256  # fake video "frame" size
@@ -447,9 +447,6 @@ def _wav_payload_udf(text: pd.Series, media_id: pd.Series) -> pd.Series:
 # would re-encode. Persist once per (session, sf) — the in-memory analog
 # of the physical media table a real pipeline stores (same precedent as
 # the cached cert_domains fact table).
-_MEDIA_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def build_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic media table from documents. Every format row carries
     a REAL container built from the text bytes: png via ``png_encode``
@@ -459,12 +456,13 @@ def build_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     via ``wav_encode`` (sample rate from media_id), mp4 via
     ``mp4_encode`` (duration = media_id % 30 + 1 s). Metadata derives
     from doc_id so both engines can reconstruct it."""
-    from ..catalog import _session_key
+    return artifacts.get_or_build(
+        spark, "media", (sf_dir,), lambda: _build_media(spark, sf_dir),
+        release=artifacts.unpersist,
+    )
 
-    ckey = (_session_key(spark), sf_dir)
-    hit = _MEDIA_CACHE.get(ckey)
-    if hit is not None:
-        return hit
+
+def _build_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import default_parallelism
 
     # encode parallelism must not depend on the input's row-group layout:
@@ -516,7 +514,7 @@ def build_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     rest = base.filter(
         ~F.col("format").isin("png", "jpeg", "wav", "mp4")
     ).withColumn("payload", F.encode("text", "utf-8"))
-    media = (
+    return (
         png.unionByName(jpeg)
         .unionByName(wav)
         .unionByName(mp4)
@@ -524,8 +522,6 @@ def build_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("text")
         .persist()
     )
-    _bounded_cache_put(_MEDIA_CACHE, ckey, media, release=lambda v: v.unpersist())
-    return media
 
 
 def media_meta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,8 +634,6 @@ def decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.mapInPandas(_decode, DECODE_SCHEMA)
 
 
-_RESIZE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 RESIZE_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -715,16 +709,13 @@ def resize_media(
     # pipeline materializes them once per corpus snapshot; queries read
     # the thumbnail table, they don't re-decode the corpus) — same
     # per-(session, sf) lifecycle as the media table and signatures
-    from ..catalog import _session_key
+    def build() -> DataFrame:
+        thumbs = out.persist()
+        thumbs.count()
+        return thumbs
 
-    ckey = (_session_key(spark), sf_dir)
-    hit = _RESIZE_CACHE.get(ckey)
-    if hit is not None:
-        return hit
-    out = out.persist()
-    out.count()
-    return _bounded_cache_put(
-        _RESIZE_CACHE, ckey, out, release=lambda v: v.unpersist()
+    return artifacts.get_or_build(
+        spark, "resize", (sf_dir,), build, release=artifacts.unpersist
     )
 
 
@@ -920,9 +911,6 @@ def dhash64(img) -> int:
     return _to_i64(bits)
 
 
-_SIGNATURE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def image_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(media_id, format, phash, dhash) for every decodable image in the
     media table — png via png_decode_pixels, jpeg via the real baseline
@@ -931,13 +919,15 @@ def image_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     DCT kernel is the expensive step and every consumer (signature rows,
     band-join pairs, groups) reads the same deterministic table — the
     same persisted-artifact lifecycle as the media table itself."""
-    from ..catalog import _session_key
-    from ..functions.jpeg import jpeg_decode_gray
+    return artifacts.get_or_build(
+        spark, "image_signatures", (sf_dir,),
+        lambda: _build_image_signatures(spark, sf_dir),
+        release=artifacts.unpersist,
+    )
 
-    ckey = (_session_key(spark), sf_dir)
-    hit = _SIGNATURE_CACHE.get(ckey)
-    if hit is not None:
-        return hit
+
+def _build_image_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.jpeg import jpeg_decode_gray
 
     def _sign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -970,9 +960,7 @@ def image_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigs = media.mapInPandas(_sign, PHASH_SCHEMA).persist()
     sigs.count()  # eager, like every sibling artifact cache
-    return _bounded_cache_put(
-        _SIGNATURE_CACHE, ckey, sigs, release=lambda v: v.unpersist()
-    )
+    return sigs
 
 
 def image_near_dup_pairs(
@@ -1157,20 +1145,18 @@ AFP_SCHEMA = StructType(
     [StructField("media_id", LongType()), StructField("afp", LongType())]
 )
 
-_AFP_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def audio_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(media_id, afp) for every decodable audio clip in the media table
     — REAL PCM decode (wav_decode_samples) + the spectral-sign kernel.
     Cached per (session, sf) like the image signatures."""
-    from ..catalog import _session_key
+    return artifacts.get_or_build(
+        spark, "audio_signatures", (sf_dir,),
+        lambda: _build_audio_signatures(spark, sf_dir),
+        release=artifacts.unpersist,
+    )
 
-    ckey = (_session_key(spark), sf_dir)
-    hit = _AFP_CACHE.get(ckey)
-    if hit is not None:
-        return hit
 
+def _build_audio_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _sign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
@@ -1190,9 +1176,7 @@ def audio_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigs = media.mapInPandas(_sign, AFP_SCHEMA).persist()
     sigs.count()
-    return _bounded_cache_put(
-        _AFP_CACHE, ckey, sigs, release=lambda v: v.unpersist()
-    )
+    return sigs
 
 
 def audio_near_dup_pairs(
@@ -1219,9 +1203,6 @@ def audio_near_dup_groups(
     )
 
 
-_PERCEPTUAL_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
 def perceptual_near_dups_cached(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -1235,13 +1216,16 @@ def perceptual_near_dups_cached(
     checkpoint blocks once no holder (caller or in-flight job) can reach
     them (r14 advice, medium: eager release broke still-held references
     unrecoverably; see catalog.release_local_checkpoint)."""
-    from ..catalog import _session_key, bounded_cache_put
+    return artifacts.get_or_build(
+        spark, "perceptual", (sf_dir,), lambda: _build_perceptual(spark, sf_dir)
+    )
+
+
+def _build_perceptual(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     from .similarity import label_propagate
 
-    key = (_session_key(spark), sf_dir)
-    hit = _PERCEPTUAL_CACHE.get(key)
-    if hit is not None:
-        return hit
     sigs = image_signatures(spark, sf_dir)
     ph_pairs = image_near_dup_pairs(sigs).localCheckpoint(eager=True)
     ids = sigs.select(F.col("media_id").alias("id"))
@@ -1252,11 +1236,7 @@ def perceptual_near_dups_cached(
     afp_pairs = audio_near_dup_pairs(
         audio_signatures(spark, sf_dir)
     ).localCheckpoint(eager=True)
-    return bounded_cache_put(
-        _PERCEPTUAL_CACHE,
-        key,
-        (ph_pairs, ph_labels, afp_pairs),
-    )
+    return ph_pairs, ph_labels, afp_pairs
 
 
 QUERIES = {

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import bounded_cache_put as _bounded_cache_put
+from .. import artifacts
 from ..catalog import load_table
 
 SHIP_CUTOFF = "1998-09-02"
@@ -230,14 +230,13 @@ QUANTILE_RANGE_PARTITIONS = 64
 # only thing at stake.
 QUANTILE_BOUNDARY_ACCURACY = 500
 
-# Bounded cache of frozen per-group boundary frames, keyed per (session,
-# dataset identity). Boundaries are a property of the DATA, not the query:
+# Frozen per-group boundary frames are cached per (session, dataset
+# identity). Boundaries are a property of the DATA, not the query:
 # repeated quantile queries over one immutable fixture dir re-derive the
 # same |groups|-row aggregate, so caching it (same discipline as the ANN
 # index / pair caches) drops one of the three base scans from the warm
 # path. A cached frame is a localCheckpoint of a tiny aggregated frame —
 # never row-level data.
-_BOUNDS_CACHE: dict = {}
 
 # Sample fraction for the boundary sketch scan (balance-only, see
 # _group_bounds). 1% keeps the boundary job at roughly the cost of the
@@ -262,33 +261,27 @@ def _group_bounds(
     (both consumers LEFT-join the boundary frame), which is correct and
     only costs a whole-group window for that (by construction small)
     group."""
-    from ..catalog import bounded_cache_put
-
-    if cache_key is not None:
-        hit = _BOUNDS_CACHE.get(cache_key)
-        if hit is not None:
-            return hit
     fracs = [i / n_b for i in range(1, n_b)]
-    bounds = (
-        base.sample(fraction=BOUNDS_SAMPLE_FRACTION, seed=42)
-        .groupBy(gcol)
-        .agg(
-            F.percentile_approx(vcol, fracs, QUANTILE_BOUNDARY_ACCURACY).alias(
-                "_bounds"
+
+    def build() -> DataFrame:
+        return (
+            base.sample(fraction=BOUNDS_SAMPLE_FRACTION, seed=42)
+            .groupBy(gcol)
+            .agg(
+                F.percentile_approx(
+                    vcol, fracs, QUANTILE_BOUNDARY_ACCURACY
+                ).alias("_bounds")
             )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
+
+    if cache_key is None:
+        return build()
+    # no release: capacity eviction DROPS a checkpointed frame (r14
+    # advice, medium) — see the artifacts module docstring
+    return artifacts.get_or_build(
+        base.sparkSession, "group_bounds", cache_key, build
     )
-    if cache_key is not None:
-        # Capacity eviction DROPS the reference only (r14 advice, medium,
-        # reversing the r13 eager rdd-unpersist): a checkpointed frame's
-        # lineage is truncated, so eagerly freeing its blocks breaks any
-        # still-held reference (e.g. a concurrent bench thread mid-action)
-        # unrecoverably. Dropping instead lets ContextCleaner unpersist
-        # the blocks once nothing — Python holders or in-flight jobs —
-        # can reach the RDD; see catalog.release_local_checkpoint's note.
-        bounded_cache_put(_BOUNDS_CACHE, cache_key, bounds)
-    return bounds
 
 
 def _bucket_of(v: Column, bounds_col: str, n_bounds: int) -> Column:
@@ -545,14 +538,11 @@ def price_quantiles_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     full shuffles. The jobs read the column-pruned parquet directly;
     scan parallelism comes from file splits (maxPartitionBytes), which
     is the real shape at cluster scale."""
-    from ..catalog import _session_key
-
     ps = [0.25, 0.5, 0.75]
     li = _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
     # boundaries are a property of the (immutable) fixture table — cache
     # them per (session, dir), same keying as the ANN/pair artifact caches
     ckey = (
-        _session_key(spark),
         sf_dir,
         "lineitem",
         "l_returnflag",
@@ -860,7 +850,6 @@ BLOOM_DIM_MOD = 50  # ~2% of customers: selective but not broadcast-trivial
 # IVF index): building it costs a dim scan + a bounded collect, probing it
 # is a codegen filter. Cache per (session, sf) so repeated slot runs pay
 # the probe, not the build.
-_BLOOM_CACHE: dict[tuple[str, str], tuple[list[int], int]] = {}
 
 
 def bloom_join_section(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -869,7 +858,6 @@ def bloom_join_section(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact side pre-filtered through the dim's Bloom sketch. The oracle is
     the PLAIN inner join — Bloom pruning admits false positives only, so
     any fact row the sketch wrongly drops breaks the value hash."""
-    from ..catalog import _session_key
     from .bloomjoin import bloom_prune_prebuilt, build_bloom
 
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -878,13 +866,10 @@ def bloom_join_section(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") % BLOOM_DIM_MOD == 0)
         .select(F.col("c_custkey").alias("o_custkey"), "c_name")
     )
-    ckey = (_session_key(spark), sf_dir)
-    hit = _BLOOM_CACHE.get(ckey)
-    if hit is None:
-        n_dim = max(1, dim.count())
-        hit = (build_bloom(dim, "o_custkey", n_dim), n_dim)
-        _bounded_cache_put(_BLOOM_CACHE, ckey, hit)
-    bitmap, _ = hit
+    bitmap = artifacts.get_or_build(
+        spark, "bloom_dim", (sf_dir,),
+        lambda: build_bloom(dim, "o_custkey", max(1, dim.count())),
+    )
     return bloom_prune_prebuilt(orders, "o_custkey", bitmap).join(
         dim, "o_custkey", "inner"
     ).select(

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import bounded_cache_put as _bounded_cache_put
+from .. import artifacts
 from ..catalog import load_table, table_rowcount
 
 TOPK = 10
@@ -103,13 +103,6 @@ def _gemm_blocks(n_rows: int) -> int:
     return max(MIN_GEMM_BLOCKS, -(-n_rows // GEMM_ROWS_PER_TILE))
 
 
-# The exact pair table is consumed by its own slot AND as the default
-# edge source of embedding_dedup_groups, and each lazy consumer would
-# re-run the full blocked GEMM. Persist per (session, sf) — the in-memory
-# analog of the near-dup edge list a 100 TB pipeline materializes
-# physically (same precedent as the shingle / signature caches).
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 # Resolved query vectors, cached per (session, sf_dir) -> {vec_id: list}.
 # Every point-ANN tier resolved its query vector with a per-request Spark
 # job (parquet scan + 1-row collect) — measured as one of /similar's two
@@ -124,12 +117,11 @@ _PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
 # STALENESS ENFORCED (r13 verdict #5 — was a documented immutable-fixture
 # assumption): this cache and the SQ8 caches below carry the
 # `path_state` fingerprint of the embeddings path they were resolved
-# from; a fingerprint mismatch (a rewrite/compaction/mutation landed)
-# drops the stale entry, invalidates the table's driver-side memos
-# (catalog.invalidate_table), and re-resolves. The probe is a TTL-memoized
-# directory fingerprint (_emb_state) — amortized noise next to the Spark
-# job it guards.
-_QVEC_CACHE: dict[tuple[str, str], dict] = {}
+# from as their registry state; a fingerprint mismatch (a rewrite/
+# compaction/mutation landed) invalidates the directory's artifacts and
+# table memos, and re-resolves. The probe is a TTL-memoized directory
+# fingerprint (_emb_state) — amortized noise next to the Spark job it
+# guards.
 QVEC_CACHE_MAX_IDS = 4096
 
 
@@ -141,41 +133,28 @@ QVEC_CACHE_MAX_IDS = 4096
 # rewrite is visible on the next tick) while the hot path pays a dict
 # probe + one monotonic clock read.
 _EMB_STATE_TTL_S = 1.0
-_EMB_STATE_MEMO: dict[str, tuple[float, tuple]] = {}
-
-from ..catalog import register_state_memo as _register_state_memo  # noqa: E402
-
-_register_state_memo(_EMB_STATE_MEMO)
 
 
-def _emb_state(sf_dir: str) -> tuple:
+def _emb_state(spark: SparkSession, sf_dir: str) -> tuple:
     import time as _time
 
     from ..catalog import path_state, table_path
 
+    # [time of the last walk, its fingerprint], refreshed in place
+    memo = artifacts.get_or_build(
+        spark, "emb_state", (sf_dir,), lambda: [float("-inf"), None], max_entries=64
+    )
     now = _time.monotonic()
-    hit = _EMB_STATE_MEMO.get(sf_dir)
-    if hit is not None and now - hit[0] < _EMB_STATE_TTL_S:
-        return hit[1]
-    st = path_state(table_path(sf_dir, "embeddings"))
-    _EMB_STATE_MEMO[sf_dir] = (now, st)
-    while len(_EMB_STATE_MEMO) > 64:
-        _EMB_STATE_MEMO.pop(next(iter(_EMB_STATE_MEMO)))
-    return st
+    if now - memo[0] >= _EMB_STATE_TTL_S:
+        memo[1] = path_state(table_path(sf_dir, "embeddings"))
+        memo[0] = now
+    return memo[1]
 
 
 def _query_vector(spark: SparkSession, sf_dir: str, vec_id: int) -> list:
-    from ..catalog import _session_key, invalidate_table
-
-    key = (_session_key(spark), sf_dir)
-    st = _emb_state(sf_dir)
-    per = _QVEC_CACHE.get(key)
-    if per is not None and per.get("_state") != st:
-        invalidate_table(spark, sf_dir, "embeddings")
-        per = None
-    if per is None:
-        per = _bounded_cache_put(_QVEC_CACHE, key, {"_state": st, "vecs": {}})
-    vecs = per["vecs"]
+    vecs = artifacts.get_or_build(
+        spark, "query_vectors", (sf_dir,), dict, state=_emb_state(spark, sf_dir)
+    )
     v = vecs.get(vec_id)
     if v is None:
         v = (
@@ -206,23 +185,29 @@ def cosine_pairs(
     rows (the classic O(n·sqrt(P)) blocked-GEMM replication), each task
     holds only two tiles — sized to executor memory, never the corpus.
     The LSH/IVF tiers below remain the sub-quadratic 100 TB paths; this is
-    the exact tier done scale-honestly."""
+    the exact tier done scale-honestly. Auto-sized (``blocks=None``)
+    pairs are persisted once per (session, sf)."""
+    if blocks is not None:
+        return _cosine_pairs_plan(spark, sf_dir, blocks)
+    # The exact pair table is consumed by its own slot AND as the default
+    # edge source of embedding_dedup_groups, and each lazy consumer would
+    # re-run the full blocked GEMM — the in-memory analog of the near-dup
+    # edge list a 100 TB pipeline materializes physically. The corpus
+    # count is memoized per (session, sf) too.
+    return artifacts.get_or_build(
+        spark, "cosine_pairs", (sf_dir,),
+        lambda: _cosine_pairs_plan(
+            spark, sf_dir, _gemm_blocks(table_rowcount(spark, sf_dir, "embeddings"))
+        ).persist(),
+        release=artifacts.unpersist,
+    )
+
+
+def _cosine_pairs_plan(spark: SparkSession, sf_dir: str, blocks: int) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from ..catalog import _session_key
-
-    ckey = (_session_key(spark), sf_dir)
-    if blocks is None:
-        hit = _PAIRS_CACHE.get(ckey)
-        if hit is not None:
-            return hit
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    auto_sized = blocks is None
-    if blocks is None:
-        # corpus count memoized per (session, sf) — fixture tables are
-        # immutable, so re-counting per invocation is a redundant job
-        blocks = _gemm_blocks(table_rowcount(spark, sf_dir, "embeddings"))
     block = F.pmod(F.xxhash64("vec_id"), F.lit(blocks)).alias("block")
     tiles = emb.select("vec_id", "embedding", block)
 
@@ -275,13 +260,9 @@ def cosine_pairs(
         ib = np.maximum(a_ids, b_ids)
         return pd.DataFrame({"id_a": ia, "id_b": ib, "cosine": sims[ai, bj]})
 
-    out = both.groupBy("task").applyInPandas(
+    return both.groupBy("task").applyInPandas(
         _kernel, "id_a long, id_b long, cosine double"
     )
-    if auto_sized:
-        out = out.persist()
-        _bounded_cache_put(_PAIRS_CACHE, ckey, out, release=lambda v: v.unpersist())
-    return out
 
 
 def _hyperplanes(spark: SparkSession) -> DataFrame:
@@ -636,12 +617,6 @@ def semantic_dedup_groups(
     )
 
 
-# Trained centroids are k x d driver-held floats — tiny, but the TRAINING
-# is IVF_ITERS distributed passes; three consumers (IVF build, SemDeDup
-# assignment, per-call ivf_topk) would each retrain identically.
-_CENTROID_CACHE: dict[tuple[str, str], object] = {}
-
-
 # SemDeDup's linearity argument requires the MEAN CELL SIZE to stay
 # constant as the corpus grows (k ≈ n / target_size — Abbas et al. §2);
 # a fixed k would let the per-cell all-pairs kernel grow quadratically
@@ -670,16 +645,16 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str):
     leak into assignments — keeping the index deterministic at any
     parallelism. Nothing larger than k x d doubles is ever centralized,
     at any corpus size. Trained once per (session, sf): deterministic, so
-    every consumer would retrain the identical array."""
+    every consumer would retrain the identical array: the IVF build, the
+    SemDeDup assignment and per-call ivf_topk."""
+    return artifacts.get_or_build(
+        spark, "centroids", (sf_dir,), lambda: _train_ivf_centroids(spark, sf_dir)
+    )
+
+
+def _train_ivf_centroids(spark: SparkSession, sf_dir: str):
     import numpy as np
     import pandas as pd
-
-    from ..catalog import _session_key
-
-    ckey = (_session_key(spark), sf_dir)
-    hit = _CENTROID_CACHE.get(ckey)
-    if hit is not None:
-        return hit
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n_clusters = _adaptive_clusters(table_rowcount(spark, sf_dir, "embeddings"))
@@ -736,7 +711,7 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str):
             new[cl] = m / (np.linalg.norm(m) or 1.0)
         cents = np.round(new, 9)
         bc.destroy()
-    return _bounded_cache_put(_CENTROID_CACHE, ckey, cents)
+    return cents
 
 
 def ivf_topk(
@@ -1011,11 +986,6 @@ def ivf_build(spark: SparkSession, sf_dir: str, index_path: str) -> None:
     )
 
 
-# Collected centroid matrices of persisted IVF indexes, keyed
-# (session, index path, path_state fingerprint) — see ivf_probe.
-_IVF_PROBE_CENTS: dict[tuple, object] = {}
-
-
 def ivf_probe(
     spark: SparkSession,
     index_path: str,
@@ -1031,28 +1001,22 @@ def ivf_probe(
     import numpy as np
     import pandas as pd
 
-    from ..catalog import _session_key, path_state
+    from ..catalog import path_state
 
     # the centroid table is part of the persisted index ARTIFACT
     # (immutable once built — rebuilds land in a fresh tmpdir), so the
     # per-call collect job it cost (~0.6 s/probe: one scheduling-floor
-    # Spark job to fetch n_cells rows) is memoized with the same
-    # staleness fingerprint the sibling _CENTROID_CACHE uses; driver-side
-    # centroid RANKING below stays per-call (it depends on the query).
-    ckey = (_session_key(spark), index_path,
-            path_state(index_path + "/centroids"))
-    cents = _IVF_PROBE_CENTS.get(ckey)
-    if cents is None:
-        cents_rows = (
-            spark.read.parquet(index_path + "/centroids")
-            .orderBy("cluster")
-            .collect()
-        )
-        cents = _bounded_cache_put(
-            _IVF_PROBE_CENTS,
-            ckey,
-            np.array([r.centroid for r in cents_rows], dtype=np.float64),
-        )
+    # Spark job to fetch n_cells rows) is memoized per (session, index
+    # path, path_state fingerprint); driver-side centroid RANKING below
+    # stays per-call (it depends on the query).
+    def build():
+        rows = spark.read.parquet(index_path + "/centroids").orderBy("cluster").collect()
+        return np.array([r.centroid for r in rows], dtype=np.float64)
+
+    cents = artifacts.get_or_build(
+        spark, "ivf_probe_centroids",
+        (index_path, path_state(index_path + "/centroids")), build,
+    )
     q = np.array(query_vec, dtype=np.float64)
     q /= np.linalg.norm(q)
     probe = [int(c) for c in np.argsort(-(cents @ q))[:IVF_PROBES]]
@@ -1086,49 +1050,26 @@ def ivf_probe(
     )
 
 
-# Build-once registry for the driver-slot indexed search: (session, sf) ->
-# on-disk index path. The cached object is a path, not data; repeated
-# probes (the bench runs each query several times) pay the partition-
-# pruned scan only, exactly the at-scale serving shape. Bounded (oldest
-# dir rmtree'd on eviction) and swept at interpreter exit.
-_IVF_INDEX_PATHS: dict[tuple[str, str], str] = {}
-
-
-def _cleanup_ivf_dirs() -> None:  # pragma: no cover - exit hook
-    import shutil
-
-    for p in _IVF_INDEX_PATHS.values():
-        shutil.rmtree(p, ignore_errors=True)
-    _IVF_INDEX_PATHS.clear()
-
-
-import atexit  # noqa: E402  (registered next to the registry it sweeps)
-
-atexit.register(_cleanup_ivf_dirs)
-
-
 def ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The driver-slot IVF query: build the persisted index ONCE per
     (session, sf-dir) via ivf_build, then answer through ivf_probe — so
     the driver row exercises the partition-pruned path (PartitionFilters
     on the cluster column, test-asserted in tests/test_ivf_index.py)
     instead of retraining centroids per call. Same output contract as
-    ivf_topk: top-k against the vec_id=0 query vector, query excluded."""
-    import tempfile
+    ivf_topk: top-k against the vec_id=0 query vector, query excluded.
 
-    from ..catalog import _session_key
+    The cached object is the index path, not data; repeated probes pay
+    the partition-pruned scan only, exactly the at-scale serving shape.
+    The dir is removed on eviction and at interpreter exit."""
 
-    import shutil
-
-    key = (_session_key(spark), sf_dir)
-    path = _IVF_INDEX_PATHS.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="ivf_index_")
+    def build() -> str:
+        path = artifacts.mkdtemp("ivf_index_")
         ivf_build(spark, sf_dir, path)
-        _bounded_cache_put(
-            _IVF_INDEX_PATHS, key, path,
-            release=lambda p: shutil.rmtree(p, ignore_errors=True),
-        )
+        return path
+
+    path = artifacts.get_or_build(
+        spark, "ivf_index", (sf_dir,), build, release=artifacts.remove_dir
+    )
     qvec = _query_vector(spark, sf_dir, QUERY_VEC_ID)
     return ivf_probe(spark, path, qvec, exclude_vec_id=QUERY_VEC_ID)
 
@@ -1142,8 +1083,6 @@ def ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # back; quantization error is bounded by scale_d/2/127 per dimension.
 SQ8_LEVELS = 127
 SQ8_REFINE = 4  # candidates fetched per final result before exact re-rank
-
-_SQ8_CACHE: dict[tuple[str, str], tuple[DataFrame, list[float]]] = {}
 
 
 def sq8_quantize(
@@ -1188,25 +1127,18 @@ def sq8_quantize(
     return codes, scales
 
 
+def _sq8_persisted(emb: DataFrame) -> tuple[DataFrame, list[float]]:
+    codes, scales = sq8_quantize(emb)
+    return codes.persist(), scales
+
+
 def _sq8_cached(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[float]]:
-    from ..catalog import _session_key, invalidate_table
-
-    key = (_session_key(spark), sf_dir)
-    st = _emb_state(sf_dir)
-    hit = _SQ8_CACHE.get(key)
-    if hit is not None and hit[0] != st:
-        invalidate_table(spark, sf_dir, "embeddings")
-        hit[1].unpersist()
-        hit = None
-    if hit is None:
-        codes, scales = sq8_quantize(load_table(spark, sf_dir, "embeddings"))
-        hit = (st, codes.persist(), scales)
-        _bounded_cache_put(_SQ8_CACHE, key, hit, release=lambda v: v[1].unpersist())
-    return hit[1], hit[2]
-
-
-# Same `path_state` staleness enforcement as _QVEC_CACHE (see its note).
-_SQ8_SERVING_CACHE: dict = {}
+    # same `path_state` staleness enforcement as the query vectors
+    return artifacts.get_or_build(
+        spark, "sq8", (sf_dir,),
+        lambda: _sq8_persisted(load_table(spark, sf_dir, "embeddings")),
+        release=lambda v: v[0].unpersist(), state=_emb_state(spark, sf_dir),
+    )
 
 
 def _sq8_serving_index(spark: SparkSession, sf_dir: str):
@@ -1217,26 +1149,17 @@ def _sq8_serving_index(spark: SparkSession, sf_dir: str):
     the whole point lookup becomes ONE distributed job: approximate
     TakeOrdered returns candidates WITH their vectors, and the exact
     re-rank of k*refine rows runs driver-side. The codes-only
-    sq8_topk remains the scan-compression shape for batch/analytics."""
-    from ..catalog import _session_key, invalidate_table
-
-    key = (_session_key(spark), sf_dir)
-    st = _emb_state(sf_dir)
-    hit = _SQ8_SERVING_CACHE.get(key)
-    if hit is not None and hit[0] != st:
-        invalidate_table(spark, sf_dir, "embeddings")
-        hit[1].unpersist()
-        hit = None
-    if hit is None:
-        emb = load_table(spark, sf_dir, "embeddings").withColumn(
-            "embedding_raw", F.col("embedding")
-        )
-        codes, scales = sq8_quantize(emb)
-        hit = (st, codes.persist(), scales)
-        _bounded_cache_put(
-            _SQ8_SERVING_CACHE, key, hit, release=lambda v: v[1].unpersist()
-        )
-    return hit[1], hit[2]
+    sq8_topk remains the scan-compression shape for batch/analytics.
+    Same `path_state` staleness enforcement as the query vectors."""
+    return artifacts.get_or_build(
+        spark, "sq8_serving", (sf_dir,),
+        lambda: _sq8_persisted(
+            load_table(spark, sf_dir, "embeddings").withColumn(
+                "embedding_raw", F.col("embedding")
+            )
+        ),
+        release=lambda v: v[0].unpersist(), state=_emb_state(spark, sf_dir),
+    )
 
 
 def _round_half_up4(x: float) -> float:
@@ -1605,7 +1528,6 @@ ANN_PROBE_SAMPLE = 512  # vectors collected for the probe (sample_n x d
 ANN_PROBE_QUERIES = 64  # sample rows treated as queries
 ANN_CLUSTERED_MIN_RECALL = 0.6  # 1-probe sample recall above which the
 #   corpus counts as clustered (measured: 0.93 planted vs 0.20 sf1 noise)
-_ANN_ROUTE_CACHE: dict[tuple, dict] = {}
 
 
 def ann_regime_probe(
@@ -1635,17 +1557,19 @@ def ann_regime_probe(
     Cost: one distributed centroid training (cached per session/sf) +
     one TakeOrdered sample scan + numpy on sample_n x d — independent of
     corpus size."""
-    import numpy as np
-
-    from ..catalog import _session_key
-
     # the probe parameters are part of the key: a second call with a
     # different k/target_recall/sample_n must not reuse the first
     # call's verdict
-    ckey = (_session_key(spark), sf_dir, sample_n, k, target_recall)
-    hit = _ANN_ROUTE_CACHE.get(ckey)
-    if hit is not None:
-        return hit
+    return artifacts.get_or_build(
+        spark, "ann_route", (sf_dir, sample_n, k, target_recall),
+        lambda: _ann_regime_probe(spark, sf_dir, sample_n, k, target_recall),
+    )
+
+
+def _ann_regime_probe(
+    spark: SparkSession, sf_dir: str, sample_n: int, k: int, target_recall: float
+) -> dict:
+    import numpy as np
 
     cents = _ivf_centroids(spark, sf_dir)
     rows = (
@@ -1681,7 +1605,7 @@ def ann_regime_probe(
         need = int(np.ceil(target_recall * len(nbr_ranks)))
         probes_needed.append(nbr_ranks[need - 1] + 1)
     one_probe = float(np.mean(recalls))
-    result = {
+    return {
         "route": "ivf" if one_probe >= ANN_CLUSTERED_MIN_RECALL else "sq8",
         "cell_recall_1probe": round(one_probe, 4),
         "probes_for_target": int(
@@ -1691,7 +1615,6 @@ def ann_regime_probe(
         "sample_n": len(m),
         "target_recall": target_recall,
     }
-    return _bounded_cache_put(_ANN_ROUTE_CACHE, ckey, result)
 
 
 def ann_topk_auto(
@@ -1897,9 +1820,6 @@ def _label_propagate_rounds(
     return labels.unionByName(isolated), rounds
 
 
-_EMB_GROUP_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _emb_groups_cached(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -1913,17 +1833,15 @@ def _emb_groups_cached(
     holder (caller or in-flight job) can reach them (r14 advice, medium:
     the r13 eager release broke still-held references unrecoverably;
     see catalog.release_local_checkpoint)."""
-    from ..catalog import _session_key
 
-    key = (_session_key(spark), sf_dir)
-    hit = _EMB_GROUP_CACHE.get(key)
-    if hit is not None:
-        return hit
-    g = embedding_dedup_groups(spark, sf_dir).localCheckpoint(eager=True)
-    s = embedding_dedup_groups(
-        spark, sf_dir, pairs_fn=grid_cell_pairs
-    ).localCheckpoint(eager=True)
-    return _bounded_cache_put(_EMB_GROUP_CACHE, key, (g, s))
+    def build() -> tuple[DataFrame, DataFrame]:
+        g = embedding_dedup_groups(spark, sf_dir).localCheckpoint(eager=True)
+        s = embedding_dedup_groups(
+            spark, sf_dir, pairs_fn=grid_cell_pairs
+        ).localCheckpoint(eager=True)
+        return g, s
+
+    return artifacts.get_or_build(spark, "emb_groups", (sf_dir,), build)
 
 
 def groups_global_and_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import artifacts
 from ..catalog import load_table
 from ..session import default_parallelism
 
@@ -601,22 +602,15 @@ def fingerprint_and_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The merge table is k tuples of driver-held strings — tiny — but the
 # TRAINING is k distributed rounds; cache per (session, sf) like the
 # centroid trainer.
-_BPE_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _bpe_merges_cached(spark: SparkSession, sf_dir: str) -> list:
-    from ..catalog import _session_key, bounded_cache_put
-
     from .sampling import hash_sample
 
-    key = (_session_key(spark), sf_dir)
-    hit = _BPE_CACHE.get(key)
-    if hit is None:
-        sample = hash_sample(
-            load_table(spark, sf_dir, "documents"), "doc_id", BPE_SAMPLE
-        )
-        hit = bounded_cache_put(_BPE_CACHE, key, bpe_train(sample))
-    return hit
+    return artifacts.get_or_build(
+        spark, "bpe_merges", (sf_dir,),
+        lambda: bpe_train(
+            hash_sample(load_table(spark, sf_dir, "documents"), "doc_id", BPE_SAMPLE)
+        ),
+    )
 
 
 TOP_TERMS = 3
@@ -989,7 +983,15 @@ def train_bigram_lm(
     return c12, v
 
 
-_LM_CACHE: dict[tuple[str, str], tuple[DataFrame, int]] = {}
+def _lm_cached(spark: SparkSession, sf_dir: str, docs: DataFrame) -> tuple[DataFrame, int]:
+    """The bigram LM trained on ``docs``' ``lang = LM_LANG`` slice, once
+    per (session, sf); ``docs`` is the sf's documents table."""
+    return artifacts.get_or_build(
+        spark, "bigram_lm", (sf_dir,),
+        lambda: train_bigram_lm(docs.filter(F.col("lang") == LM_LANG)),
+        release=lambda v: v[0].unpersist(),
+    )
+
 
 # Inline-map gate (r15 optimization): an LM whose bigram table has at most
 # this many entries is scored through two FOLDED MAP LITERALS inside the
@@ -1013,7 +1015,6 @@ LM_INLINE_MAX_ENTRIES = 2048
 # served from the previous artifact's entry. (id() recycling can only
 # alias two artifacts of the SAME immutable (session, sf) corpus, whose
 # maps are identical by construction.)
-_LM_MAPS_CACHE: dict[tuple, tuple | None] = {}
 
 # Each lookup table is ONE string literal parsed by a foldable str_to_map
 # — not a map_from_arrays over per-entry literals, which costs one py4j
@@ -1031,33 +1032,32 @@ def _lm_maps(spark: SparkSession, sf_dir: str, lm: tuple[DataFrame, int]):
     when the LM is past LM_INLINE_MAX_ENTRIES (driver + plan size stay
     bounded: the collect is gated BEFORE it runs) or a key contains the
     encoding separators (the join path then guarantees correctness)."""
-    from ..catalog import _session_key, bounded_cache_put
-
     c12, _v = lm
-    key = (_session_key(spark), sf_dir, id(c12), _v)
-    if key in _LM_MAPS_CACHE:
-        return _LM_MAPS_CACHE[key]
-    maps = None
-    if 0 < c12.count() <= LM_INLINE_MAX_ENTRIES:
+
+    def build():
+        if not 0 < c12.count() <= LM_INLINE_MAX_ENTRIES:
+            return None
         rows = c12.collect()
         c1: dict[str, int] = {}
         for r in rows:
             c1[r["w1"]] = c1.get(r["w1"], 0) + int(r["c12"])
-        if not any(
+        if any(
             _LM_SEP_PAIR in r["w1"] + r["w2"] or _LM_SEP_KV in r["w1"] + r["w2"]
             for r in rows
         ):
-            m12_str = _LM_SEP_PAIR.join(
-                f"{r['w1']} {r['w2']}{_LM_SEP_KV}{int(r['c12'])}" for r in rows
-            )
-            m1_str = _LM_SEP_PAIR.join(
-                f"{w}{_LM_SEP_KV}{c}" for w, c in c1.items()
-            )
-            maps = tuple(
-                F.str_to_map(F.lit(s), F.lit(_LM_SEP_PAIR), F.lit(_LM_SEP_KV))
-                for s in (m12_str, m1_str)
-            )
-    return bounded_cache_put(_LM_MAPS_CACHE, key, maps, max_entries=16)
+            return None
+        m12_str = _LM_SEP_PAIR.join(
+            f"{r['w1']} {r['w2']}{_LM_SEP_KV}{int(r['c12'])}" for r in rows
+        )
+        m1_str = _LM_SEP_PAIR.join(f"{w}{_LM_SEP_KV}{c}" for w, c in c1.items())
+        return tuple(
+            F.str_to_map(F.lit(s), F.lit(_LM_SEP_PAIR), F.lit(_LM_SEP_KV))
+            for s in (m12_str, m1_str)
+        )
+
+    return artifacts.get_or_build(
+        spark, "lm_maps", (sf_dir, id(c12), _v), build, max_entries=16
+    )
 
 
 def _lm_encs(bigrams_col, maps: tuple):
@@ -1139,18 +1139,8 @@ def bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, sf)). Small LMs (<= LM_INLINE_MAX_ENTRIES bigrams) score
     through the inline literal-map projection — one scan, zero
     exchanges; larger LMs take lm_score's join path."""
-    from ..catalog import _session_key, bounded_cache_put
-
     docs = load_table(spark, sf_dir, "documents")
-    key = (_session_key(spark), sf_dir)
-    lm = _LM_CACHE.get(key)
-    if lm is None:
-        lm = bounded_cache_put(
-            _LM_CACHE,
-            key,
-            train_bigram_lm(docs.filter(F.col("lang") == LM_LANG)),
-            release=lambda val: val[0].unpersist(),
-        )
+    lm = _lm_cached(spark, sf_dir, docs)
     maps = _lm_maps(spark, sf_dir, lm)
     if maps is None:
         return lm_score(docs, lm=lm)
@@ -1554,18 +1544,8 @@ def doc_profile_with_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the profile subtree; plans/r15/text_doc_profile_*.txt). Large LMs
     # (past LM_INLINE_MAX_ENTRIES) keep the join shape — the path
     # decontamination uses.
-    from ..catalog import _session_key, bounded_cache_put
-
     docs_raw = load_table(spark, sf_dir, "documents")
-    lm_key = (_session_key(spark), sf_dir)
-    lm = _LM_CACHE.get(lm_key)
-    if lm is None:
-        lm = bounded_cache_put(
-            _LM_CACHE,
-            lm_key,
-            train_bigram_lm(docs_raw.filter(F.col("lang") == LM_LANG)),
-            release=lambda val: val[0].unpersist(),
-        )
+    lm = _lm_cached(spark, sf_dir, docs_raw)
     maps = _lm_maps(spark, sf_dir, lm)
     scored = scored.withColumn("pred_lang", pred)
     if maps is None:

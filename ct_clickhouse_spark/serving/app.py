@@ -36,7 +36,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..api_queries import human_readable_size
-from ..catalog import CERT_DOMAINS_SCHEMA
+from ..catalog import CERT_DOMAINS_SCHEMA, path_state
 
 try:
     from flask import Flask, Response, jsonify, request, stream_with_context
@@ -70,37 +70,6 @@ def _rows_json(df) -> list[list]:
     ]
 
 
-def _dir_state(path: str) -> tuple:
-    """Cheap staleness fingerprint of a LOCAL table directory: (file
-    count, total bytes, max mtime_ns) over every file under ``path``.
-    One os.stat per file — ~100x cheaper than the JVM-side
-    InMemoryFileIndex + parquet-footer schema inference a fresh
-    ``spark.read.parquet`` pays, and it changes whenever a streaming
-    ingest appends (new files), a compaction rewrites (count/size), or
-    a mutation lands (mtime). On an object store this probe would read
-    the versioned-publish marker (plans/versioned.py) instead of
-    stat-ing files; the contract is the same — a token that changes iff
-    the file listing changed."""
-    n = 0
-    total = 0
-    mx = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            try:
-                st = os.stat(os.path.join(root, fn))
-            except FileNotFoundError:
-                # compaction/rewrite (delete+write) can remove a file
-                # between the walk listing and the stat; skip it — the
-                # changed listing perturbs the fingerprint anyway, which
-                # forces the re-resolution the deletion calls for
-                continue
-            n += 1
-            total += st.st_size
-            if st.st_mtime_ns > mx:
-                mx = st.st_mtime_ns
-    return (n, total, mx)
-
-
 def create_app(
     spark: SparkSession,
     table_path: str,
@@ -127,7 +96,7 @@ def create_app(
     # the directory changed AGAIN. Stat-then-read (the same order table()
     # uses) at worst stores a stale fingerprint, which merely forces one
     # extra re-resolution.
-    _seed_state = _dir_state(table_path)
+    _seed_state = path_state(table_path)
     cert = spark.read.parquet(table_path)
     missing = set(f.name for f in CERT_DOMAINS_SCHEMA.fields) - set(cert.columns)
     if missing:
@@ -141,7 +110,7 @@ def create_app(
     # paid listing + parquet-footer schema inference (~100 ms at
     # sf0.01) on the point-lookup path the reference's ClickHouse
     # serves in ~ms. The fix keeps both properties: a sub-ms local
-    # _dir_state fingerprint decides per request whether the cached
+    # path_state fingerprint decides per request whether the cached
     # relation's listing is still the live one; any append/compaction/
     # mutation changes the fingerprint and forces one re-resolution.
     # The e2e stream-serving test still pins the freshness semantics.
@@ -151,7 +120,7 @@ def create_app(
     _tbl_cache: dict = {"state": None, "df": None}
 
     def table():
-        st = _dir_state(table_path)
+        st = path_state(table_path)
         with _tbl_lock:
             if st != _tbl_cache["state"]:
                 _tbl_cache["df"] = spark.read.parquet(table_path)

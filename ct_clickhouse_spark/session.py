@@ -64,15 +64,15 @@ def get_small_job_session(
     run CONCURRENTLY with corpus-sized jobs on the main session (FAIR
     scheduler) — the per-workload-SQLConf pattern
     ``SparkSession.newSession`` exists for.
-    Cached per (parent session, width) — keyed like the catalog's
-    artifact caches (``id(spark)`` would alias a new session allocated
+    Cached per (parent session, width) — keyed like the artifact
+    registry (``id(spark)`` would alias a new session allocated
     at a recycled address after the old one is collected), with
     ``partitions`` in the key so callers asking for different widths
     get distinct clones rather than whichever width was requested
     first. Bounded like every sibling cache: a process cycling
     get_spark()/stop() must not pin one dead clone per applicationId
     forever (a clone holds JVM-side SessionState via py4j)."""
-    from .catalog import _session_key, bounded_cache_put
+    from .artifacts import ARTIFACT_CACHE_MAX, _session_key
 
     key = (_session_key(spark), int(partitions))
     hit = _SMALL_SESSION_CACHE.get(key)
@@ -80,7 +80,10 @@ def get_small_job_session(
         return hit
     clone = spark.newSession()
     clone.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    return bounded_cache_put(_SMALL_SESSION_CACHE, key, clone)
+    _SMALL_SESSION_CACHE[key] = clone
+    while len(_SMALL_SESSION_CACHE) > ARTIFACT_CACHE_MAX:
+        _SMALL_SESSION_CACHE.pop(next(iter(_SMALL_SESSION_CACHE)))
+    return clone
 
 
 def get_spark(

@@ -381,62 +381,37 @@ RANGE_A = ("2024-01-01", "2024-01-08")
 RANGE_B = ("2024-01-08", "2024-01-15")
 RANGE_QS = [0.25, 0.5, 0.75]
 
-_ROLLUP_KMV_CACHE: dict[tuple[str, str], DataFrame] = {}
-_ROLLUP_HIST_CACHE: dict[tuple[str, str], DataFrame] = {}
-_ROLLUP_CMS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 # Fixed user_id probes for the range-frequency driver rows — present in
 # week 1 at every fixture SF (user_id spans [0, 15*sf*1000)).
 CMS_PROBE_USERS = [1, 2, 7]
 
 
-def rollup_kmv_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import _session_key, bounded_cache_put, load_table
+def _rollup_cached(spark: SparkSession, sf_dir: str, name: str, backfill) -> DataFrame:
+    """The events table's ``backfill`` rollup, persisted once per
+    (session, sf)."""
+    from .. import artifacts
+    from ..catalog import load_table
 
-    key = (_session_key(spark), sf_dir)
-    hit = _ROLLUP_KMV_CACHE.get(key)
-    if hit is None:
-        hit = bounded_cache_put(
-            _ROLLUP_KMV_CACHE,
-            key,
-            backfill_rollup_kmv(load_table(spark, sf_dir, "events")).persist(),
-            release=lambda v: v.unpersist(),
-        )
-    return hit
+    return artifacts.get_or_build(
+        spark, name, (sf_dir,),
+        lambda: backfill(load_table(spark, sf_dir, "events")).persist(),
+        release=artifacts.unpersist,
+    )
+
+
+def rollup_kmv_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _rollup_cached(spark, sf_dir, "rollup_kmv", backfill_rollup_kmv)
 
 
 def rollup_hist_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import _session_key, bounded_cache_put, load_table
-
-    key = (_session_key(spark), sf_dir)
-    hit = _ROLLUP_HIST_CACHE.get(key)
-    if hit is None:
-        hit = bounded_cache_put(
-            _ROLLUP_HIST_CACHE,
-            key,
-            backfill_rollup_histogram(
-                load_table(spark, sf_dir, "events"),
-                ROLLUP_HIST_LO,
-                ROLLUP_HIST_HI,
-            ).persist(),
-            release=lambda v: v.unpersist(),
-        )
-    return hit
+    return _rollup_cached(
+        spark, sf_dir, "rollup_hist",
+        lambda ev: backfill_rollup_histogram(ev, ROLLUP_HIST_LO, ROLLUP_HIST_HI),
+    )
 
 
 def rollup_cms_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import _session_key, bounded_cache_put, load_table
-
-    key = (_session_key(spark), sf_dir)
-    hit = _ROLLUP_CMS_CACHE.get(key)
-    if hit is None:
-        hit = bounded_cache_put(
-            _ROLLUP_CMS_CACHE,
-            key,
-            backfill_rollup_cms(load_table(spark, sf_dir, "events")).persist(),
-            release=lambda v: v.unpersist(),
-        )
-    return hit
+    return _rollup_cached(spark, sf_dir, "rollup_cms", backfill_rollup_cms)
 
 
 def range_freq_section(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -854,22 +854,14 @@ def isolate_session(spark) -> None:
     cost because ~40 earlier slots' persisted artifacts caused
     eviction/spill churn; the cold_slot_probe in
     BENCH_lsh_decomp_r14.json measured dedup_sketch_signatures at
-    241.3 s in-sweep vs 16.2 s fresh). Clears every driver-side artifact
-    cache in the package (dict module attrs named *_CACHE / *_MEMO),
-    Spark's CacheManager, and all persisted RDD blocks, so each slot's
-    time is its OWN kernel + construction cost — the same accounting the
+    241.3 s in-sweep vs 16.2 s fresh). Clears every artifact in the
+    package's registry (``artifacts.clear``), Spark's CacheManager, and
+    all persisted RDD blocks, so each slot's time is its OWN kernel + construction cost — the same accounting the
     DuckDB oracle gets (every oracle query pays full cost), making the
     matched table apples-to-apples and sf-growth ratios kernel-shaped."""
-    import sys as _sys
+    from ct_clickhouse_spark import artifacts
 
-    for mod_name, mod in list(_sys.modules.items()):
-        if not mod_name.startswith("ct_clickhouse_spark"):
-            continue
-        for attr, val in vars(mod).items():
-            if (attr.endswith("_CACHE") or attr.endswith("_MEMO")) and isinstance(
-                val, dict
-            ):
-                val.clear()
+    artifacts.clear()
     spark.catalog.clearCache()
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for jrdd in jmap.values():

@@ -38,6 +38,7 @@ sys.path.insert(0, ".")
 
 
 def measure(spark, sf_dir: str, plan: tuple[int, int, int]) -> dict:
+    from ct_clickhouse_spark import artifacts
     from ct_clickhouse_spark.operators import dedup as D
 
     k, r, b = plan
@@ -46,8 +47,7 @@ def measure(spark, sf_dir: str, plan: tuple[int, int, int]) -> dict:
     orig_plan = D._minhash_plan
     D._minhash_plan = lambda n: (k, r, b)
     try:
-        for key in [kk for kk in D._SIG_CACHE if kk[1] == sf_dir]:
-            D._SIG_CACHE.pop(key).unpersist()
+        artifacts.clear("minhash_sig")
         t0 = time.time()
         sig = D._minhash_sig_df(spark, sf_dir, k)
         n_docs = sig.count()  # materializes the persisted frame
@@ -124,8 +124,7 @@ def measure(spark, sf_dir: str, plan: tuple[int, int, int]) -> dict:
         }
     finally:
         D._minhash_plan = orig_plan
-        for key in [kk for kk in D._SIG_CACHE if kk[1] == sf_dir]:
-            D._SIG_CACHE.pop(key).unpersist()
+        artifacts.clear("minhash_sig")
 
 
 def main() -> int:

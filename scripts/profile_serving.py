@@ -9,7 +9,7 @@ the request path on the same table bench_serving.py builds:
   resolve_ms     spark.read.parquet(path)          — file listing +
                  parquet-footer schema inference (what the pre-r11
                  serving layer paid PER REQUEST)
-  dir_state_ms   _dir_state(path)                  — the os.stat
+  dir_state_ms   path_state(path)                  — the os.stat
                  fingerprint the r11 relation cache pays per request
   plan_ms        filter/orderBy/limit construction + analysis on a
                  cached relation (queryExecution forced via schema)
@@ -60,7 +60,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from ct_clickhouse_spark.cert_domains import write_cert_domains
-    from ct_clickhouse_spark.serving.app import _dir_state
+    from ct_clickhouse_spark.catalog import path_state
     from ct_clickhouse_spark.session import get_spark
 
     spark = get_spark(app_name="profile-serving", shuffle_partitions=8)
@@ -84,7 +84,7 @@ def main() -> int:
         "sf_dir": SF_DIR,
         "n": n,
         "resolve_ms": _med_ms(lambda: spark.read.parquet(table), n),
-        "dir_state_ms": _med_ms(lambda: _dir_state(table), n),
+        "dir_state_ms": _med_ms(lambda: path_state(table), n),
         "plan_ms": _med_ms(lambda: point_query(cached).schema, n),
         "job_floor_ms": _med_ms(
             lambda: spark.sparkContext.parallelize([1], 1).count(), n
@@ -94,7 +94,7 @@ def main() -> int:
             lambda: point_query(spark.read.parquet(table)).collect(), n
         ),
         "e2e_warm_ms": _med_ms(
-            lambda: (_dir_state(table), point_query(cached).collect()), n
+            lambda: (path_state(table), point_query(cached).collect()), n
         ),
     }
     print(json.dumps(out))

@@ -194,7 +194,7 @@ def main() -> None:
         n_emb = emb_for_gemm.count()
         results.setdefault("gemm_blocks", {})[k] = _gemm_blocks(n_emb)
         # pass blocks explicitly: the auto-sized call persists its result
-        # in _PAIRS_CACHE, so the timed re-run would measure a cached-scan,
+        # as the "cosine_pairs" artifact, so the timed re-run would measure a cached-scan,
         # not the n^2*d kernel this row exists to measure
         n_blocks = _gemm_blocks(n_emb)
         timed("gemm_pairs", k, lambda: cosine_pairs(spark, gemm_dir, blocks=n_blocks)

@@ -1,8 +1,8 @@
-"""Staleness enforcement for the embedding-derived serving caches (r13
-verdict #5): _QVEC_CACHE / _SQ8_CACHE / _SQ8_SERVING_CACHE were keyed on
-(session, sf_dir) under a DOCUMENTED immutable-fixture assumption; they
-now carry the `path_state` fingerprint of the embeddings path and
-re-resolve when a rewrite lands. These tests rewrite an embedding dir in
+"""Staleness enforcement for the embedding-derived serving artifacts (r13
+verdict #5): the query-vector, SQ8 and SQ8-serving artifacts were keyed
+on (session, sf_dir) under a DOCUMENTED immutable-fixture assumption;
+they now carry the `path_state` fingerprint of the embeddings path as
+their registry state and re-resolve when a rewrite lands. These tests rewrite an embedding dir in
 place and observe the re-resolution — without the fingerprint they fail
 by serving the stale vector.
 
@@ -69,7 +69,7 @@ def test_query_vector_reresolves_after_rewrite(spark, emb_dir):
     _write_embeddings(emb_dir, scale=10.0)
     v2 = _query_vector(spark, emb_dir, 3)
     assert v2[0] == pytest.approx(40.0), (
-        "stale _QVEC_CACHE entry served after the embeddings path changed"
+        "stale query vector served after the embeddings path changed"
     )
 
 
@@ -85,7 +85,7 @@ def test_sq8_serving_index_reresolves_after_rewrite(spark, emb_dir):
     # normalized dim0 component: scale/sqrt(scale^2+1) -> 0.707 at 1x,
     # 0.995 at 10x — a stale cache keeps the old per-dim scale
     assert scales2[0] == pytest.approx(10.0 / math.sqrt(101.0), rel=1e-3), (
-        "stale _SQ8_SERVING_CACHE entry served after the embeddings "
+        "stale sq8_serving entry served after the embeddings "
         "path changed"
     )
     assert scales1[0] == pytest.approx(1.0 / math.sqrt(2.0), rel=1e-3)
@@ -104,17 +104,16 @@ def test_sq8_cached_reresolves_after_rewrite(spark, emb_dir):
 
 
 def test_unchanged_path_is_a_cache_hit(spark, emb_dir):
+    from ct_clickhouse_spark import artifacts
     from ct_clickhouse_spark.operators import similarity as S
 
     S._query_vector(spark, emb_dir, 1)
-    from ct_clickhouse_spark.catalog import _session_key
-
-    per = S._QVEC_CACHE[(_session_key(spark), emb_dir)]
-    assert 1 in per["vecs"]
+    per = artifacts.entries("query_vectors", spark)[(emb_dir,)]
+    assert 1 in per
     # same fingerprint -> the dict object survives the second lookup
     S._query_vector(spark, emb_dir, 2)
-    assert per is S._QVEC_CACHE[(_session_key(spark), emb_dir)]
-    assert {1, 2} <= set(per["vecs"])
+    assert per is artifacts.entries("query_vectors", spark)[(emb_dir,)]
+    assert {1, 2} <= set(per)
 
 
 def test_release_local_checkpoint_frees_blocks(spark):
@@ -135,21 +134,34 @@ def test_release_local_checkpoint_frees_blocks(spark):
     )
 
 
-def test_bounded_cache_put_reinsert_moves_to_newest():
-    # r14 advice #4: assigning over a present key must refresh its
-    # insertion-order slot, or a staleness-refreshed entry sits oldest
-    # and is evicted right after being rebuilt
-    from ct_clickhouse_spark.catalog import bounded_cache_put
+def test_rebuilt_entry_moves_to_newest():
+    # r14 advice #4: a rebuilt entry must take the newest slot, or a
+    # staleness-refreshed entry sits oldest and is evicted right after
+    # being rebuilt
+    import types
 
-    cache: dict = {}
+    from ct_clickhouse_spark import artifacts
+
+    fake = types.SimpleNamespace()  # a session of its own
     released: list = []
-    for k in "abcd":
-        bounded_cache_put(cache, k, k, release=released.append, max_entries=4)
-    bounded_cache_put(cache, "a", "a2", release=released.append, max_entries=4)
-    bounded_cache_put(cache, "e", "e", release=released.append, max_entries=4)
-    assert released == ["b"], "re-inserted key was not moved to newest"
-    assert list(cache) == ["c", "d", "a", "e"]
-    assert cache["a"] == "a2"
+
+    def put(k, v, state=0):
+        artifacts.get_or_build(
+            fake, "reinsert_test", (k,), lambda: v,
+            release=released.append, state=state, max_entries=4,
+        )
+
+    try:
+        for k in "abcd":
+            put(k, k)
+        put("a", "a2", state=1)  # stale: "a" is released and rebuilt
+        put("e", "e")
+        assert released == ["a", "b"], "rebuilt key was not moved to newest"
+        cache = artifacts.entries("reinsert_test", fake)
+        assert list(cache) == [("c",), ("d",), ("a",), ("e",)]
+        assert cache[("a",)] == "a2"
+    finally:
+        artifacts.clear("reinsert_test")
 
 
 def test_evicted_checkpoint_frame_still_usable_by_held_reference(spark):
@@ -158,16 +170,17 @@ def test_evicted_checkpoint_frame_still_usable_by_held_reference(spark):
     # (e.g. a concurrent bench thread) would fail at action time with
     # block-not-found, unrecoverably (truncated lineage). Eviction drops
     # the reference; ContextCleaner frees blocks by reachability.
-    from ct_clickhouse_spark.catalog import ARTIFACT_CACHE_MAX
+    from ct_clickhouse_spark import artifacts
+    from ct_clickhouse_spark.artifacts import ARTIFACT_CACHE_MAX
     from ct_clickhouse_spark.operators import relational as R
 
-    R._BOUNDS_CACHE.clear()
+    artifacts.clear("group_bounds")
     base = spark.range(2_000).selectExpr("id % 7 AS g", "CAST(id AS DOUBLE) AS v")
     held = R._group_bounds(base, "g", "v", 4, cache_key=("t", "held"))
     n_before = held.count()  # (sampled sketch: group count may be < 7)
     for i in range(ARTIFACT_CACHE_MAX + 2):  # sweep the held entry out
         R._group_bounds(base, "g", "v", 4, cache_key=("t", f"fill{i}"))
-    assert ("t", "held") not in R._BOUNDS_CACHE
+    assert ("t", "held") not in artifacts.entries("group_bounds", spark)
     assert held.count() == n_before, (
         "held reference to an evicted checkpointed boundary frame broke"
     )

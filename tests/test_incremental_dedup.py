@@ -134,6 +134,7 @@ def test_small_corpus_skips_bloom_build(spark):
     """Below the routing threshold the corpus Bloom bitmap must not be
     built at all — the cached artifact is (None, n) and the slot takes
     the plain anti-join (the overhead the routing exists to remove)."""
+    from ct_clickhouse_spark import artifacts
     from ct_clickhouse_spark.operators import dedup
 
     docs = spark.createDataFrame(
@@ -141,7 +142,7 @@ def test_small_corpus_skips_bloom_build(spark):
         "doc_id long, n_chars int, text string",
     )
     corpus = docs.selectExpr("md5(text) AS text_hash")
-    dedup._INC_BLOOM_CACHE.clear()
+    artifacts.clear("corpus_bloom")
     bitmap, n = dedup._corpus_bloom_cached(spark, "/nonexistent-key", corpus)
     assert bitmap is None and n == 20
 

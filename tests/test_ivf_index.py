@@ -62,17 +62,15 @@ def test_ivf_topk_indexed_equals_per_call_ivf(spark):
     """The driver slot's build-once indexed search must return the same
     (vec_id, cosine) rows as the per-call ivf_topk (same trained
     quantizer, query excluded), and a second call must reuse the index."""
-    from ct_clickhouse_spark.operators.similarity import (
-        _IVF_INDEX_PATHS,
-        ivf_topk_indexed,
-    )
+    from ct_clickhouse_spark import artifacts
+    from ct_clickhouse_spark.operators.similarity import ivf_topk_indexed
 
     got = [(r.vec_id, r.cosine) for r in ivf_topk_indexed(spark, SF_DIR).collect()]
     want = [(r.vec_id, r.cosine) for r in ivf_topk(spark, SF_DIR).collect()]
     assert got == want and got
-    n_paths = len(_IVF_INDEX_PATHS)
+    n_paths = len(artifacts.entries("ivf_index", spark))
     ivf_topk_indexed(spark, SF_DIR).collect()
-    assert len(_IVF_INDEX_PATHS) == n_paths  # reused, not rebuilt
+    assert len(artifacts.entries("ivf_index", spark)) == n_paths  # reused, not rebuilt
 
 
 def test_batch_topk_single_query_equals_ivf_topk(spark):

@@ -151,18 +151,17 @@ def test_lm_inline_matches_join_path(spark):
     the join path serves corpus-scale vocabularies, and the driver oracle
     only ever sees whichever side of LM_INLINE_MAX_ENTRIES the fixture
     lands on."""
+    from ct_clickhouse_spark import artifacts
     from ct_clickhouse_spark.catalog import load_table
     from ct_clickhouse_spark.operators.text import (
-        _LM_CACHE,
         _lm_maps,
         bigram_lm_scores,
         lm_score,
     )
 
     sf_dir = "/root/testdata/sf0.001"
-    inline = bigram_lm_scores(spark, sf_dir)  # populates _LM_CACHE
-    key = next(k for k in _LM_CACHE if k[1] == sf_dir)
-    lm = _LM_CACHE[key]
+    inline = bigram_lm_scores(spark, sf_dir)  # populates the LM artifact
+    lm = artifacts.entries("bigram_lm", spark)[(sf_dir,)]
     maps = _lm_maps(spark, sf_dir, lm)
     assert maps is not None, "fixture LM should be under the inline gate"
     joined = lm_score(load_table(spark, sf_dir, "documents"), lm=lm)
@@ -179,8 +178,8 @@ def test_lm_paths_match_on_synthetic_edge_docs(spark):
     pre-aggregation + array_repeat re-expansion of the sorted fold)."""
     import pandas as pd
 
+    from ct_clickhouse_spark import artifacts
     from ct_clickhouse_spark.operators.text import (
-        _LM_CACHE,
         _lm_encs,
         _lm_agg_cols,
         _lm_maps,
@@ -194,8 +193,7 @@ def test_lm_paths_match_on_synthetic_edge_docs(spark):
     from ct_clickhouse_spark.operators.text import bigram_lm_scores
 
     bigram_lm_scores(spark, sf_dir)  # populate the LM artifact
-    key = next(k for k in _LM_CACHE if k[1] == sf_dir)
-    lm = _LM_CACHE[key]
+    lm = artifacts.entries("bigram_lm", spark)[(sf_dir,)]
     maps = _lm_maps(spark, sf_dir, lm)
     assert maps is not None
 

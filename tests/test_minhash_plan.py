@@ -25,6 +25,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from ct_clickhouse_spark import artifacts
 from ct_clickhouse_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     MINHASH_ADAPT_N,
@@ -158,13 +159,12 @@ def test_planted_recall_matches_banding_analytic(spark, tmp_path, n_doc, seed):
 def _fresh_sig_cache():
     from ct_clickhouse_spark.operators import dedup as D
 
-    saved = dict(D._SIG_CACHE)
-    D._SIG_CACHE.clear()
-    return D, saved
+    artifacts.clear("minhash_sig")
+    return D
 
 
 def test_smaller_k_served_by_projection(spark, tmp_path, monkeypatch):
-    D, saved = _fresh_sig_cache()
+    D = _fresh_sig_cache()
     try:
         sf_dir, _ = _make_corpus(tmp_path, 400, seed=23)
         full = D._minhash_sig_df(spark, sf_dir, k=48)
@@ -184,15 +184,14 @@ def test_smaller_k_served_by_projection(spark, tmp_path, monkeypatch):
         rhs = {r["doc_id"]: [r[f"h{i}"] for i in range(16)] for r in full.collect()}
         assert lhs == rhs  # seed-stable prefix property, observed
     finally:
-        D._SIG_CACHE.clear()
-        D._SIG_CACHE.update(saved)
+        artifacts.clear("minhash_sig")
 
 
 def test_miss_precomputes_at_plan_k(spark, tmp_path, monkeypatch):
     """Sweep order independence: when the adaptive plan wants k=48, a
     FIRST request for k=16 must compute (and cache) the k=48 frame so
     the later LSH request is also a cache hit — one aggregate total."""
-    D, saved = _fresh_sig_cache()
+    D = _fresh_sig_cache()
     try:
         sf_dir, _ = _make_corpus(tmp_path, 600, seed=29)
         monkeypatch.setattr(D, "MINHASH_ADAPT_N", 100)  # plan: k=48 at 600 docs
@@ -200,7 +199,7 @@ def test_miss_precomputes_at_plan_k(spark, tmp_path, monkeypatch):
         assert plan_k > 16
         small = D._minhash_sig_df(spark, sf_dir, k=16)
         assert small.columns == ["doc_id"] + [f"h{i}" for i in range(16)]
-        cached_ks = {k for (_sid, sdir, k) in D._SIG_CACHE if sdir == sf_dir}
+        cached_ks = {k for (sdir, k) in artifacts.entries("minhash_sig", spark) if sdir == sf_dir}
         assert cached_ks == {plan_k}
         monkeypatch.setattr(
             D,
@@ -212,8 +211,7 @@ def test_miss_precomputes_at_plan_k(spark, tmp_path, monkeypatch):
         full = D._minhash_sig_df(spark, sf_dir, k=plan_k)
         assert len([c for c in full.columns if c.startswith("h")]) == plan_k
     finally:
-        D._SIG_CACHE.clear()
-        D._SIG_CACHE.update(saved)
+        artifacts.clear("minhash_sig")
 
 
 def test_merge_pin_gated_on_corpus_size(spark, tmp_path, monkeypatch):
@@ -222,7 +220,7 @@ def test_merge_pin_gated_on_corpus_size(spark, tmp_path, monkeypatch):
     ABOVE the adaptive knee the band self-join must be sort-merge —
     regardless of Catalyst's size estimate — while BELOW it the pin is
     absent and Catalyst keeps its (faster, broadcastable) choice."""
-    D, saved = _fresh_sig_cache()
+    D = _fresh_sig_cache()
     try:
         sf_dir, _ = _make_corpus(tmp_path, 400, seed=29)
 
@@ -234,7 +232,7 @@ def test_merge_pin_gated_on_corpus_size(spark, tmp_path, monkeypatch):
 
         # above the knee (rowcount mocked; 400 physical rows keep the
         # plan build cheap): every band/sig join must be sort-merge
-        D._SIG_CACHE.clear()
+        artifacts.clear("minhash_sig")
         monkeypatch.setattr(D, "table_rowcount", lambda *a, **k: D.MINHASH_ADAPT_N + 1)
         big_plan = D.doc_minhash_lsh_pairs(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in big_plan, (
@@ -245,5 +243,4 @@ def test_merge_pin_gated_on_corpus_size(spark, tmp_path, monkeypatch):
             "(the measured sf30 driver-death shape)"
         )
     finally:
-        D._SIG_CACHE.clear()
-        D._SIG_CACHE.update(saved)
+        artifacts.clear("minhash_sig")

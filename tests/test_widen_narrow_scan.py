@@ -4,15 +4,14 @@
   splits), never a small-but-multi-split frame (r15 advice: on a real
   cluster 'narrower than the core count' is common and must not buy a
   payload shuffle);
-- memoizes the split-count probe per (session, table state) when given
-  a table_key, and invalidate_table clears the memo.
+- memoizes the split-count probe per (session, table) in the artifact
+  registry when given a table_key, and invalidate_table clears the memo.
 """
 
 from __future__ import annotations
 
+from ct_clickhouse_spark import artifacts
 from ct_clickhouse_spark.catalog import (
-    _SCAN_WIDTH_MEMO,
-    _session_key,
     invalidate_table,
     load_table,
     widen_narrow_scan,
@@ -38,16 +37,18 @@ def test_multi_split_frame_is_untouched(spark):
 
 
 def test_probe_memoized_per_table_and_invalidated(spark):
-    _SCAN_WIDTH_MEMO.pop(SF_DIR, None)
+    artifacts.clear("scan_width")
     docs = load_table(spark, SF_DIR, "documents")
     widen_narrow_scan(docs, spark, table_key=(SF_DIR, "documents"))
-    skey = _session_key(spark)
-    assert _SCAN_WIDTH_MEMO[SF_DIR][(skey, "documents")] == 1
+    assert artifacts.entries("scan_width", spark)[(SF_DIR, "documents")] == 1
     # memo hit: poison the stored value and confirm the gate reads it
-    _SCAN_WIDTH_MEMO[SF_DIR][(skey, "documents")] = 99
+    artifacts.clear("scan_width")
+    artifacts.get_or_build(
+        spark, "scan_width", (SF_DIR, "documents"), lambda: 99, max_entries=None
+    )
     assert (
         widen_narrow_scan(docs, spark, table_key=(SF_DIR, "documents"))
         is docs
     )
     invalidate_table(spark, SF_DIR, "documents")
-    assert SF_DIR not in _SCAN_WIDTH_MEMO
+    assert (SF_DIR, "documents") not in artifacts.entries("scan_width", spark)
