@@ -4,7 +4,10 @@ The engine keeps index state beside its queries: persisted shingle,
 signature, media and rollup frames, trained centroids and LM maps,
 Bloom bitmaps, on-disk IVF indexes and mutation snapshots. Each is built
 once per (session, input) and reused by later queries, the way ClickHouse
-keeps MergeTree parts and skip indexes beside its tables. Every such
+keeps MergeTree parts and skip indexes beside its tables. Only index
+state lives here: a query's answer (a pair set, converged group labels,
+a reassembled text) is computed on every call from these artifacts and
+never stored, so a warm timing measures the query, not a lookup. Every
 artifact goes through ``get_or_build``:
 
 - **Keying.** An entry lives under ``(name, session, *key)``. The session
@@ -22,18 +25,17 @@ artifact goes through ``get_or_build``:
   release: they are only dropped, because a checkpoint's lineage is
   truncated and a caller still holding the frame could not recompute it
   if its blocks were freed eagerly. Spark's ContextCleaner frees the
-  blocks once nothing can reach them (see
-  ``catalog.release_local_checkpoint``).
+  blocks once nothing can reach them.
 - **Staleness.** ``state`` is a token of the directory ``key[0]``, such
   as its ``catalog.path_state``. An entry built under another token
   means that directory changed: the directory is invalidated and the
   entry rebuilt.
 - **Invalidation.** ``invalidate(sf_dir)`` drops every entry whose
-  ``key[0]`` is ``sf_dir``. ``catalog.invalidate_table`` calls it; today
-  only the staleness checks of the embeddings artifacts reach it. The
-  mutation operators (``plans/maintenance.py``) do not call it, so an
-  in-engine merge, delete or compaction is not yet visible to artifacts
-  built before it.
+  ``key[0]`` is ``sf_dir``. ``catalog.invalidate_table`` calls it, from
+  the staleness checks of the embeddings artifacts and from every
+  mutation operator (``plans/maintenance.py``) once its rewrite is in
+  place, so an in-engine merge, delete, update or compaction is visible
+  to the next query.
 - **Exit cleanup.** On-disk artifacts live under one per-process
   directory (``mkdtemp``), removed at interpreter exit.
 - **Locking.** One lock guards the registry's dicts. Builds and releases

@@ -176,7 +176,8 @@ def invalidate_table(spark: SparkSession, sf_dir: str, name: str) -> None:
     tables) and Spark's own cached listing/data for the table's path, so
     the next load_table re-lists and re-reads. Reached from the
     staleness check of the embeddings artifacts when the table's
-    ``path_state`` changes; the mutation operators do not call it."""
+    ``path_state`` changes, and from the mutation operators
+    (``plans/maintenance.py``) after each rewrite."""
     artifacts.invalidate(sf_dir)
     _refresh_path(spark, table_path(sf_dir, name))
 
@@ -186,33 +187,6 @@ def _refresh_path(spark: SparkSession, path: str) -> None:
         spark.catalog.refreshByPath(path)
     except Exception:  # refresh is best-effort (connect-only sessions)
         pass
-
-
-def release_local_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint()ed frame's persisted RDD blocks eagerly.
-
-    Dataset.unpersist only clears CacheManager entries; a localCheckpoint
-    pins PERSISTED RDD BLOCKS, whose holder is the LogicalRDD's rdd —
-    reachable through the analyzed plan (r13 advice #3: the df.unpersist
-    release was a measured no-op on RDDStorageInfo; this empties it).
-    Falls back to GC-driven cleanup (ContextCleaner) when the JVM plan is
-    unreachable (connect-only sessions).
-
-    ONLY for frames whose data is KNOWN DEAD — staleness invalidation
-    (the source path changed) or session teardown. Never use it as a
-    capacity-eviction release for caches whose values callers may still
-    hold (r14 advice, medium): a checkpoint's lineage is truncated, so a
-    concurrently-held reference to an eagerly-freed frame fails at action
-    time with block-not-found and CANNOT recompute. Capacity eviction of
-    checkpointed frames must instead just DROP the reference: Python GC
-    detaches the py4j handle, and the JVM's ContextCleaner unpersists the
-    blocks once NO live reference (including in-flight jobs, which pin
-    the RDD through the DAG) can reach them — reachability is a free,
-    race-proof refcount."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # blocks are then freed by ContextCleaner on GC
 
 
 def _read_events(spark: SparkSession, path: str) -> DataFrame:

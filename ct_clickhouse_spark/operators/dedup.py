@@ -753,22 +753,6 @@ def doc_incremental_new(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The span-removal result frame per (session, sf): dup-gram set +
-# covered-start aggregation + reassembly join, materialized ONCE
-# (localCheckpoint) — a fixed point of the immutable corpus, same
-# lifecycle as the span-gram and ngram-group artifacts. Checkpoint blocks
-# free via ContextCleaner on eviction (reference dropped, never eagerly
-# unpersisted — see catalog.release_local_checkpoint's note).
-def _span_removal_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return artifacts.get_or_build(
-        spark, "span_removal", (sf_dir,),
-        lambda: remove_duplicate_spans(
-            _doc_base_cached(spark, sf_dir),
-            grams=_span_grams_cached(spark, sf_dir),
-        ).localCheckpoint(eager=True),
-    )
-
-
 def doc_exact_and_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup + duplicated-span removal under one slot, one row shape
     ``(kind, text_hash, keep_id, n_copies, aux)``:
@@ -789,12 +773,9 @@ def doc_exact_and_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All three sections read the ONE persisted tokenized/hashed base
     (``_doc_base_cached``) instead of re-deriving text intermediates per
-    section per run; the span-removal section additionally serves from
-    the per-(session, sf) reassembly artifact (``_span_removal_cached``,
-    r16 — the r15 verdict's #6): the covered-position aggregation +
-    reassembly join is a fixed point of the immutable corpus, and
-    re-running it per call cost ~1 s warm while the gram table feeding
-    it was already cached."""
+    section per run; the span-removal section also reads the cached
+    duplicated-gram table (``_span_grams_cached``) and runs the
+    covered-position aggregation and reassembly join on every call."""
     base = _doc_base_cached(spark, sf_dir)
     exact = (
         base.groupBy("text_hash")
@@ -810,7 +791,9 @@ def doc_exact_and_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("long").alias("aux"),
         )
     )
-    spans = _span_removal_cached(spark, sf_dir).select(
+    spans = remove_duplicate_spans(
+        base, grams=_span_grams_cached(spark, sf_dir)
+    ).select(
         F.lit("span_removal").alias("kind"),
         "text_hash",
         F.col("doc_id").alias("keep_id"),
@@ -819,40 +802,6 @@ def doc_exact_and_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     inc = doc_incremental_new(spark, sf_dir)
     return exact.unionByName(spans).unionByName(inc)
-
-
-def _ngram_pairs_and_labels_cached(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(pairs, converged labels) per (session, sf) — both materialized
-    ONCE (localCheckpoint). The pair join is the slot's expensive step
-    and lazy lineage would re-run it per consumer; the label-propagation
-    rounds converge to a FIXED point for a fixed pair set, so re-running
-    them every driver invocation (as before round 6) bought nothing —
-    same persisted-artifact lifecycle as the gram and shingle tables.
-    Checkpoint blocks are dropped by Spark's ContextCleaner when the
-    cache entry is evicted (no explicit unpersist handle exists for
-    localCheckpoint)."""
-    return artifacts.get_or_build(
-        spark, "ngram_groups", (sf_dir,),
-        lambda: _build_ngram_pairs_and_labels(spark, sf_dir),
-    )
-
-
-def _build_ngram_pairs_and_labels(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    from .similarity import label_propagate
-
-    pairs = doc_ngram_jaccard_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    ids = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id")
-    )
-    labels = label_propagate(
-        ids,
-        pairs.select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")),
-    ).localCheckpoint(eager=True)
-    return pairs, labels
 
 
 def ngram_pairs_and_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -867,7 +816,18 @@ def ngram_pairs_and_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
       score=1 rows. The oracle replays the grouping as a recursive CTE
       over the identical pair set, so a wrong component, canonical id,
       or keeper flag breaks the value hash."""
-    pairs, labels = _ngram_pairs_and_labels_cached(spark, sf_dir)
+    from .similarity import label_propagate
+
+    # the pairs feed both the pair rows and the propagation: pinned once
+    # per call so the pair join runs once
+    pairs = doc_ngram_jaccard_pairs(spark, sf_dir).localCheckpoint(eager=True)
+    ids = load_table(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("id")
+    )
+    labels = label_propagate(
+        ids,
+        pairs.select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")),
+    )
     p = pairs.select(
         F.lit("pair").alias("kind"),
         F.col("doc_a").alias("a"),
@@ -1258,17 +1218,6 @@ def doc_sketch_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Materialized 4-family pair artifact for the lsh_pairs slot, keyed
-# (session, sf) — the same slot-level pair-artifact lifecycle the ngram
-# slot has used since r6 (the ngram-group artifact above): each family's
-# banded/cell-local pair construction converges to a fixed set for a
-# fixed corpus, so re-running all four pipelines per driver invocation
-# (~4.8 s/call at sf0.1, with multi-second GC-pressure outliers — the
-# r15 verdict's "unstable warm path") bought nothing. Cold build cost
-# stays visible in the bench's first_run column. The family OPERATORS
-# (doc_minhash_lsh_pairs, lsh_candidate_pairs, semdedup_pairs,
-# embedding_incremental_pairs) stay pure pipelines — their recall tests
-# keep exercising the real plans.
 def lsh_pairs_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sub-quadratic candidate-pair families under one rows-only slot
     (sketch/cluster-derived pairs have no ANSI-SQL oracle; each family is
@@ -1290,62 +1239,50 @@ def lsh_pairs_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOTE: on a cold cache, building the semdedup side TRAINS the k-means
     centroids (IVF_ITERS distributed passes at construction time) — the
     same once-per-(session, sf) artifact build the IVF index pays."""
+    from .multimodal import perceptual_near_dups
+    from .similarity import (
+        embedding_incremental_pairs,
+        lsh_candidate_pairs,
+        semdedup_pairs,
+    )
 
-    def build() -> DataFrame:
-        from .similarity import (
-            embedding_incremental_pairs,
-            lsh_candidate_pairs,
-            semdedup_pairs,
-        )
-
-        mh = doc_minhash_lsh_pairs(spark, sf_dir).select(
-            F.lit("minhash").alias("family"),
-            F.col("doc_a").alias("id_a"),
-            F.col("doc_b").alias("id_b"),
-            F.col("est_jaccard").alias("score"),
-        )
-        hp = lsh_candidate_pairs(spark, sf_dir).select(
-            F.lit("hyperplane").alias("family"),
-            "id_a",
-            "id_b",
-            F.col("cosine").alias("score"),
-        )
-        sd = semdedup_pairs(spark, sf_dir).select(
-            F.lit("semdedup").alias("family"),
-            "id_a",
-            "id_b",
-            F.col("cosine").alias("score"),
-        )
-        batch_ids = (
-            load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") % INCREMENTAL_MOD == 0)
-            .select("vec_id")
-        )
-        inc = embedding_incremental_pairs(spark, sf_dir, batch_ids).select(
-            F.lit("ivf_inc").alias("family"),
-            F.col("batch_id").alias("id_a"),
-            F.col("corpus_id").alias("id_b"),
-            F.col("cosine").alias("score"),
-        )
-        return (
-            mh.unionByName(hp).unionByName(sd).unionByName(inc)
-        ).localCheckpoint(eager=True)
-
-    # no release: capacity eviction DROPS the checkpointed reference only
-    computed = artifacts.get_or_build(spark, "lsh_pairs", (sf_dir,), build)
+    mh = doc_minhash_lsh_pairs(spark, sf_dir).select(
+        F.lit("minhash").alias("family"),
+        F.col("doc_a").alias("id_a"),
+        F.col("doc_b").alias("id_b"),
+        F.col("est_jaccard").alias("score"),
+    )
+    hp = lsh_candidate_pairs(spark, sf_dir).select(
+        F.lit("hyperplane").alias("family"),
+        "id_a",
+        "id_b",
+        F.col("cosine").alias("score"),
+    )
+    sd = semdedup_pairs(spark, sf_dir).select(
+        F.lit("semdedup").alias("family"),
+        "id_a",
+        "id_b",
+        F.col("cosine").alias("score"),
+    )
+    batch_ids = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") % INCREMENTAL_MOD == 0)
+        .select("vec_id")
+    )
+    inc = embedding_incremental_pairs(spark, sf_dir, batch_ids).select(
+        F.lit("ivf_inc").alias("family"),
+        F.col("batch_id").alias("id_a"),
+        F.col("corpus_id").alias("id_b"),
+        F.col("cosine").alias("score"),
+    )
     # family='phash': image perceptual-hash near-dups over REAL decoded
     # pixels (multimodal.py multi-probe band-join; score = Hamming
     # distance), and family='phash_group': their components (id_b =
     # canonical label, score = 1.0 for the kept representative). EMPTY
     # pair set at the driver fixtures — the images there are distinct
     # random texts (expected pairwise Hamming ~32); planted-duplicate
-    # recall is pinned in tests/test_multimodal.py. Pairs AND converged
-    # labels are per-(session, sf) artifacts (perceptual_near_dups_cached
-    # — the trick that took the ngram slot from 5.4s to 0.1s): the
-    # band-join + propagation fixed point doesn't change per invocation.
-    from .multimodal import perceptual_near_dups_cached
-
-    ph_pairs, ph_labels, afp_pairs = perceptual_near_dups_cached(spark, sf_dir)
+    # recall is pinned in tests/test_multimodal.py.
+    ph_pairs, ph_labels, afp_pairs = perceptual_near_dups(spark, sf_dir)
     ph = ph_pairs.select(
         F.lit("phash").alias("family"),
         F.col("media_a").alias("id_a"),
@@ -1368,7 +1305,12 @@ def lsh_pairs_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("hamming").cast("double").alias("score"),
     )
     return (
-        computed.unionByName(ph).unionByName(pg).unionByName(af)
+        mh.unionByName(hp)
+        .unionByName(sd)
+        .unionByName(inc)
+        .unionByName(ph)
+        .unionByName(pg)
+        .unionByName(af)
     )
 
 

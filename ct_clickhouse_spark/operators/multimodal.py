@@ -1203,27 +1203,12 @@ def audio_near_dup_groups(
     )
 
 
-def perceptual_near_dups_cached(
+def perceptual_near_dups(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(image pairs, image converged group labels, audio pairs) per
-    (session, sf), each materialized ONCE via localCheckpoint — the same
-    maintained-artifact lifecycle as the ngram pair/label cache
-    (dedup.py): the band-join and the label-propagation rounds converge
-    to a fixed point for a fixed corpus, so re-running them on every
-    driver invocation of the lsh-pairs slot bought nothing. Capacity
-    eviction drops the reference only — ContextCleaner frees the
-    checkpoint blocks once no holder (caller or in-flight job) can reach
-    them (r14 advice, medium: eager release broke still-held references
-    unrecoverably; see catalog.release_local_checkpoint)."""
-    return artifacts.get_or_build(
-        spark, "perceptual", (sf_dir,), lambda: _build_perceptual(spark, sf_dir)
-    )
-
-
-def _build_perceptual(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(image pairs, image group labels, audio pairs) over the cached
+    image and audio signatures. The image pairs feed both the pair rows
+    and the propagation, so they are pinned once per call."""
     from .similarity import label_propagate
 
     sigs = image_signatures(spark, sf_dir)
@@ -1232,10 +1217,8 @@ def _build_perceptual(
     ph_labels = label_propagate(
         ids,
         ph_pairs.select(F.col("media_a").alias("id_a"), F.col("media_b").alias("id_b")),
-    ).localCheckpoint(eager=True)
-    afp_pairs = audio_near_dup_pairs(
-        audio_signatures(spark, sf_dir)
-    ).localCheckpoint(eager=True)
+    )
+    afp_pairs = audio_near_dup_pairs(audio_signatures(spark, sf_dir))
     return ph_pairs, ph_labels, afp_pairs
 
 

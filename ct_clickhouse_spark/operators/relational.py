@@ -541,7 +541,7 @@ def price_quantiles_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = [0.25, 0.5, 0.75]
     li = _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
     # boundaries are a property of the (immutable) fixture table — cache
-    # them per (session, dir), same keying as the ANN/pair artifact caches
+    # them per (session, dir), same keying as the ANN index artifacts
     ckey = (
         sf_dir,
         "lineitem",

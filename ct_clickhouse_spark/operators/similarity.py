@@ -185,27 +185,12 @@ def cosine_pairs(
     rows (the classic O(n·sqrt(P)) blocked-GEMM replication), each task
     holds only two tiles — sized to executor memory, never the corpus.
     The LSH/IVF tiers below remain the sub-quadratic 100 TB paths; this is
-    the exact tier done scale-honestly. Auto-sized (``blocks=None``)
-    pairs are persisted once per (session, sf)."""
-    if blocks is not None:
-        return _cosine_pairs_plan(spark, sf_dir, blocks)
-    # The exact pair table is consumed by its own slot AND as the default
-    # edge source of embedding_dedup_groups, and each lazy consumer would
-    # re-run the full blocked GEMM — the in-memory analog of the near-dup
-    # edge list a 100 TB pipeline materializes physically. The corpus
-    # count is memoized per (session, sf) too.
-    return artifacts.get_or_build(
-        spark, "cosine_pairs", (sf_dir,),
-        lambda: _cosine_pairs_plan(
-            spark, sf_dir, _gemm_blocks(table_rowcount(spark, sf_dir, "embeddings"))
-        ).persist(),
-        release=artifacts.unpersist,
-    )
-
-
-def _cosine_pairs_plan(spark: SparkSession, sf_dir: str, blocks: int) -> DataFrame:
+    the exact tier done scale-honestly."""
     import numpy as np
     import pandas as pd
+
+    if blocks is None:
+        blocks = _gemm_blocks(table_rowcount(spark, sf_dir, "embeddings"))
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     block = F.pmod(F.xxhash64("vec_id"), F.lit(blocks)).alias("block")
@@ -1742,8 +1727,16 @@ def _label_propagate_rounds(
     mis-labels long-chain graphs. ``max_iters`` is an optional safety
     bound for callers that know their graphs are dense (near-dup
     clusters converge in 2-3 rounds)."""
-    edges = pairs.unionByName(
-        pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
+    # both directions from ONE read of ``pairs``: a union of two
+    # projections would run an unpinned pair source (a GEMM or a band
+    # join) twice
+    edges = pairs.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("id_a").alias("id_a"), F.col("id_b").alias("id_b")),
+                F.struct(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")),
+            )
+        )
     ).localCheckpoint(eager=True)
     # Only nodes incident to an edge can ever change label (an isolated
     # node's component minimum IS itself): iterate over the pair-graph
@@ -1820,30 +1813,6 @@ def _label_propagate_rounds(
     return labels.unionByName(isolated), rounds
 
 
-def _emb_groups_cached(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(global groups, semdedup-cell groups), converged and materialized
-    ONCE per (session, sf) — the same persisted-artifact lifecycle as the
-    ngram labels (`_ngram_pairs_and_labels_cached`) and the perceptual
-    pair/label tables. Label propagation converges to a FIXED point for
-    a fixed pair set, so re-running the O(log d) join rounds on every
-    driver invocation buys nothing. Capacity eviction drops the
-    reference only — ContextCleaner frees the checkpoint blocks once no
-    holder (caller or in-flight job) can reach them (r14 advice, medium:
-    the r13 eager release broke still-held references unrecoverably;
-    see catalog.release_local_checkpoint)."""
-
-    def build() -> tuple[DataFrame, DataFrame]:
-        g = embedding_dedup_groups(spark, sf_dir).localCheckpoint(eager=True)
-        s = embedding_dedup_groups(
-            spark, sf_dir, pairs_fn=grid_cell_pairs
-        ).localCheckpoint(eager=True)
-        return g, s
-
-    return artifacts.get_or_build(spark, "emb_groups", (sf_dir,), build)
-
-
 def groups_global_and_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_embedding_groups slot, tagged union (kind, vec_id,
     canonical_id, is_keeper):
@@ -1856,16 +1825,11 @@ def groups_global_and_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       cell restriction) -> pointer-doubled components -> keeper = cell
       component minimum. A pair leaked across cells, a missed within-
       cell pair, or a wrong keeper all break the value hash. The k-means
-      cell variant (semantic_dedup_groups) keeps its pytest gates.
-
-    Both sides converge to fixed points, so they are per-(session, sf)
-    artifacts (`_emb_groups_cached`) like every sibling converged-label
-    family."""
-    g, s = _emb_groups_cached(spark, sf_dir)
-    g = g.select(
+      cell variant (semantic_dedup_groups) keeps its pytest gates."""
+    g = embedding_dedup_groups(spark, sf_dir).select(
         F.lit("global").alias("kind"), "vec_id", "canonical_id", "is_keeper"
     )
-    s = s.select(
+    s = embedding_dedup_groups(spark, sf_dir, pairs_fn=grid_cell_pairs).select(
         F.lit("semdedup_cell").alias("kind"),
         "vec_id",
         "canonical_id",

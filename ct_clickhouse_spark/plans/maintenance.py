@@ -11,8 +11,11 @@ small-file ratio crosses a threshold.
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..catalog import invalidate_table
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # standard HDFS-ish target
 
@@ -21,6 +24,13 @@ def _fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _invalidate(spark: SparkSession, path: str) -> None:
+    """Drop what the engine derived from the table at ``path`` (laid out
+    as ``catalog.table_path`` builds it: ``<sf_dir>/<name>.parquet``)."""
+    sf_dir, base = os.path.split(path.rstrip("/"))
+    invalidate_table(spark, sf_dir, base.removesuffix(".parquet"))
 
 
 def data_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
@@ -101,6 +111,7 @@ def compact_parquet(
         new_path = rewrite_versioned(
             spark, path, out, partition_by=partition_cols or None
         )
+        _invalidate(spark, path)
         # marker file is not a data file; stats count parquet only
         after, _ = data_file_stats(spark, new_path)
         return before, after
@@ -110,6 +121,7 @@ def compact_parquet(
     writer.parquet(tmp)
 
     _swap_in(spark, path, tmp, op="compact_parquet")
+    _invalidate(spark, path)
 
     after, _ = data_file_stats(spark, path)
     return before, after
@@ -192,10 +204,11 @@ def delete_where(
             # atomic publish: new version dir + one marker create — no
             # rename window (plans/versioned.py)
             rewrite_versioned(spark, path, survivors)
-            return n_del, 1
-        tmp = path.rstrip("/") + "__deleting"
-        survivors.write.mode("overwrite").parquet(tmp)
-        _swap_in(spark, path, tmp, op="delete_where")
+        else:
+            tmp = path.rstrip("/") + "__deleting"
+            survivors.write.mode("overwrite").parquet(tmp)
+            _swap_in(spark, path, tmp, op="delete_where")
+        _invalidate(spark, path)
         return n_del, 1
     if versioned:
         raise ValueError(
@@ -265,6 +278,7 @@ def delete_where(
     fully_deleted = {v for v in values if v not in surviving_values}
     if fully_deleted:
         _drop_partition_dirs(spark, path, partition_col, fully_deleted)
+    _invalidate(spark, path)
     return n_del, len(values)
 
 
@@ -372,6 +386,7 @@ def update_where(
         .partitionBy(partition_col)
         .parquet(path)
     )
+    _invalidate(spark, path)
     return n_upd, len(values)
 
 
@@ -471,4 +486,5 @@ def merge_upsert(
         .partitionBy(partition_col)
         .parquet(path)
     )
+    _invalidate(spark, path)
     return n_applied, len(values)

@@ -35,6 +35,7 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from .. import artifacts
 from ..api_queries import human_readable_size
 from ..catalog import CERT_DOMAINS_SCHEMA, path_state
 
@@ -88,20 +89,6 @@ def create_app(
     app = Flask("ct_clickhouse_spark")
     allowed_ips = load_allowed_ips()
 
-    # fail-fast schema check on the startup resolution (the resolved
-    # relation itself is seeded into the staleness-checked cache below).
-    # Fingerprint BEFORE reading: a file appended between the read (which
-    # pins its file listing) and a post-read fingerprint would be inside
-    # the stored state but outside the pinned listing — invisible until
-    # the directory changed AGAIN. Stat-then-read (the same order table()
-    # uses) at worst stores a stale fingerprint, which merely forces one
-    # extra re-resolution.
-    _seed_state = path_state(table_path)
-    cert = spark.read.parquet(table_path)
-    missing = set(f.name for f in CERT_DOMAINS_SCHEMA.fields) - set(cert.columns)
-    if missing:
-        raise ValueError(f"cert_domains table missing columns: {missing}")
-
     # staleness-safe relation cache (round-11, serving-floor item): a
     # DataFrame pins its file-listing snapshot (InMemoryFileIndex) at
     # creation, so a long-lived handle would never serve rows a
@@ -109,30 +96,34 @@ def create_app(
     # per-request re-resolution fixed. But re-resolving EVERY request
     # paid listing + parquet-footer schema inference (~100 ms at
     # sf0.01) on the point-lookup path the reference's ClickHouse
-    # serves in ~ms. The fix keeps both properties: a sub-ms local
+    # serves in ~ms. The registry keeps both properties: a sub-ms local
     # path_state fingerprint decides per request whether the cached
     # relation's listing is still the live one; any append/compaction/
     # mutation changes the fingerprint and forces one re-resolution.
-    # The e2e stream-serving test still pins the freshness semantics.
-    import threading
-
-    _tbl_lock = threading.Lock()
-    _tbl_cache: dict = {"state": None, "df": None}
-
+    # The fingerprint is taken BEFORE the read (it is an argument, so it
+    # is evaluated before get_or_build can build): a file appended
+    # between a read (which pins its listing) and a post-read
+    # fingerprint would be inside the stored state but outside the
+    # pinned listing — invisible until the directory changed AGAIN.
+    # Stat-then-read at worst stores a stale fingerprint, which merely
+    # forces one extra re-resolution. The e2e stream-serving test still
+    # pins the freshness semantics.
     def table():
-        st = path_state(table_path)
-        with _tbl_lock:
-            if st != _tbl_cache["state"]:
-                _tbl_cache["df"] = spark.read.parquet(table_path)
-                _tbl_cache["state"] = st
-            return _tbl_cache["df"]
+        return artifacts.get_or_build(
+            spark, "serving_table", (table_path,),
+            lambda: spark.read.parquet(table_path),
+            state=path_state(table_path),
+        )
 
-    # seed the cache with the startup resolution and pre-warm the point
-    # path once: the first query on a fresh session pays whole-stage
-    # codegen compilation + JVM JIT that every later request reuses —
-    # without this, one client eats a cold-start outlier
-    _tbl_cache["df"] = cert
-    _tbl_cache["state"] = _seed_state
+    # fail-fast schema check on the startup resolution, which seeds the
+    # cache; then pre-warm the point path once: the first query on a
+    # fresh session pays whole-stage codegen compilation + JVM JIT that
+    # every later request reuses — without this, one client eats a
+    # cold-start outlier
+    cert = table()
+    missing = set(f.name for f in CERT_DOMAINS_SCHEMA.fields) - set(cert.columns)
+    if missing:
+        raise ValueError(f"cert_domains table missing columns: {missing}")
     cert.filter(F.col("domain") == "\x00warmup\x00").orderBy(
         F.col("ts").desc()
     ).limit(100).collect()

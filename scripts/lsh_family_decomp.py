@@ -65,9 +65,7 @@ def run_families(spark, sf_dir: str) -> dict:
         INCREMENTAL_MOD,
         doc_minhash_lsh_pairs,
     )
-    from ct_clickhouse_spark.operators.multimodal import (
-        perceptual_near_dups_cached,
-    )
+    from ct_clickhouse_spark.operators.multimodal import perceptual_near_dups
     from ct_clickhouse_spark.operators.similarity import (
         embedding_incremental_pairs,
         lsh_candidate_pairs,
@@ -99,9 +97,7 @@ def run_families(spark, sf_dir: str) -> dict:
 
     def media_families():
         t0 = time.time()
-        ph_pairs, ph_labels, afp_pairs = perceptual_near_dups_cached(
-            spark, sf_dir
-        )
+        ph_pairs, ph_labels, afp_pairs = perceptual_near_dups(spark, sf_dir)
         n = ph_pairs.count() + ph_labels.count() + afp_pairs.count()
         sec = round(time.time() - t0, 2)
         out["families"]["phash+afp"] = {"sec": sec, "n_rows": int(n)}

@@ -205,3 +205,78 @@ def test_no_module_level_cache_dicts_outside_the_registry():
     assert found == [], (
         f"module-level cache dicts {found}: use artifacts.get_or_build"
     )
+
+
+def test_delete_where_is_visible_to_the_next_load_table(spark, tmp_path):
+    """A mutation drops the cached plan of the table it rewrote: without
+    the invalidation the next load_table serves the pre-delete listing."""
+    from ct_clickhouse_spark.catalog import load_table, table_path
+    from ct_clickhouse_spark.plans.maintenance import delete_where
+
+    d = str(tmp_path)
+    shutil.copy(table_path(SF_DIR, "documents"), d)
+    try:
+        before = load_table(spark, d, "documents").count()
+        n_del, _ = delete_where(
+            spark, table_path(d, "documents"), "doc_id % 2 = 0"
+        )
+        assert n_del > 0
+        assert load_table(spark, d, "documents").count() == before - n_del
+    finally:
+        artifacts.invalidate(d)
+
+
+# Every registry name, pinned. Each is index state derived from an input
+# (a table plan, a persisted scan, signatures, shingles, centroids, an LM
+# map, decoded media, an on-disk index); a slot's answer (a pair set,
+# converged labels, a reassembled text) is computed per call and must
+# never be added here.
+INDEX_ARTIFACTS = {
+    "ann_route", "audio_signatures", "bigram_lm", "bloom_dim", "bpe_merges",
+    "centroids", "cert_domains", "corpus_bloom", "doc_base", "emb_state",
+    "group_bounds", "image_signatures", "ivf_index", "ivf_probe_centroids",
+    "lm_maps", "media", "minhash_sig", "mutation_frames", "query_vectors",
+    "resize", "rollup_cms", "rollup_hist", "rollup_kmv", "rowcount",
+    "scan_width", "serving_table", "shingles", "simhash", "span_grams", "sq8",
+    "sq8_serving", "table",
+}
+
+
+def _registry_names(tree: ast.Module) -> set[str]:
+    """The name literals passed to ``get_or_build`` in one module. A name
+    forwarded through a parameter of the enclosing function resolves to
+    the literals passed for that parameter by the module's calls of it."""
+    def name_arg(call: ast.Call, pos: int, kw: str):
+        if len(call.args) > pos:
+            return call.args[pos]
+        return next((k.value for k in call.keywords if k.arg == kw), None)
+
+    def callee(call: ast.Call):
+        return getattr(call.func, "attr", getattr(call.func, "id", None))
+
+    calls = [n for n in ast.walk(tree) if isinstance(n, ast.Call)]
+    names: set[str] = set()
+    for fn in (n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)):
+        params = [a.arg for a in fn.args.args]
+        for call in (n for n in ast.walk(fn) if isinstance(n, ast.Call)):
+            if callee(call) != "get_or_build":
+                continue
+            arg = name_arg(call, 1, "name")
+            if isinstance(arg, ast.Name) and arg.id in params:
+                pos = params.index(arg.id)
+                args = [name_arg(c, pos, arg.id) for c in calls if callee(c) == fn.name]
+            else:
+                args = [arg]
+            for a in args:
+                assert isinstance(a, ast.Constant) and isinstance(a.value, str), (
+                    f"{fn.name}: get_or_build name is not a string literal"
+                )
+                names.add(a.value)
+    return names
+
+
+def test_registry_holds_only_index_artifacts():
+    found: set[str] = set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        found |= _registry_names(ast.parse(path.read_text(), filename=str(path)))
+    assert found == INDEX_ARTIFACTS

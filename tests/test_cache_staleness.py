@@ -5,10 +5,6 @@ they now carry the `path_state` fingerprint of the embeddings path as
 their registry state and re-resolve when a rewrite lands. These tests rewrite an embedding dir in
 place and observe the re-resolution — without the fingerprint they fail
 by serving the stale vector.
-
-Also pins catalog.release_local_checkpoint (r13 advice #3): the old
-`df.unpersist()` release was a measured no-op on a localCheckpoint'ed
-frame's RDD blocks; the plan-rdd unpersist actually empties storage.
 """
 
 from __future__ import annotations
@@ -114,24 +110,6 @@ def test_unchanged_path_is_a_cache_hit(spark, emb_dir):
     S._query_vector(spark, emb_dir, 2)
     assert per is artifacts.entries("query_vectors", spark)[(emb_dir,)]
     assert {1, 2} <= set(per)
-
-
-def test_release_local_checkpoint_frees_blocks(spark):
-    from ct_clickhouse_spark.catalog import release_local_checkpoint
-
-    def storage_ids() -> set[int]:
-        return {
-            i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        }
-
-    df = spark.range(10_000).selectExpr("id", "id * 2 AS v")
-    ck = df.localCheckpoint(eager=True)
-    rid = ck._jdf.queryExecution().analyzed().rdd().id()
-    assert rid in storage_ids(), "localCheckpoint did not pin RDD blocks?"
-    release_local_checkpoint(ck)
-    assert rid not in storage_ids(), (
-        "release_local_checkpoint left the checkpointed RDD blocks pinned"
-    )
 
 
 def test_rebuilt_entry_moves_to_newest():
