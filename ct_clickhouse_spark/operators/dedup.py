@@ -810,9 +810,11 @@ def ngram_pairs_and_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     - kind='pair': the exact word-3-gram Jaccard >= threshold near-dup
       pairs (a=doc_a, b=doc_b, score=jaccard) — as before;
     - kind='group': the END of the text near-dup story — connected
-      components over those pairs via the same pointer-doubled
-      label_propagate the embedding tier uses (a=doc_id, b=canonical_id,
-      score=1.0 for the kept representative else 0.0). dedup = keep the
+      components over those pairs via the same label_propagate the
+      embedding tier uses (union-find on the driver for a pair graph
+      within its cap, the distributed pointer-doubling loop above it;
+      a=doc_id, b=canonical_id, score=1.0 for the kept representative
+      else 0.0). dedup = keep the
       score=1 rows. The oracle replays the grouping as a recursive CTE
       over the identical pair set, so a wrong component, canonical id,
       or keeper flag breaks the value hash."""

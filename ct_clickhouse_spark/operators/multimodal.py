@@ -840,8 +840,10 @@ def media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # least one band (pigeonhole), so a band-equality shuffle join finds all
 # of them without an all-pairs compare; the exact Hamming check
 # (bit_count(a XOR b), pure JVM) then verifies candidates. Groups via
-# the shared pointer-doubled label_propagate. This is the SimHash
-# band-join design (operators/dedup.py) applied to the image modality.
+# the shared label_propagate: union-find on the driver while the pair
+# graph fits its cap, the distributed pointer-doubling loop above it.
+# This is the SimHash band-join design (operators/dedup.py) applied to
+# the image modality.
 
 PHASH_SCHEMA = StructType(
     [
@@ -1081,7 +1083,7 @@ def image_near_dup_groups(
     signatures: DataFrame, max_hamming: int = PHASH_MAX_HAMMING
 ) -> DataFrame:
     """Connected components over the pHash near-dup pairs via the shared
-    pointer-doubled label propagation; keeper = component minimum."""
+    label_propagate; keeper = component minimum."""
     from .similarity import label_propagate
 
     pairs = image_near_dup_pairs(signatures, max_hamming=max_hamming)
@@ -1190,7 +1192,7 @@ def audio_near_dup_groups(
     signatures: DataFrame, max_hamming: int = PHASH_MAX_HAMMING
 ) -> DataFrame:
     """Connected components over audio near-dup pairs (shared
-    pointer-doubled label propagation; keeper = component minimum)."""
+    label_propagate; keeper = component minimum)."""
     from .similarity import label_propagate
 
     pairs = audio_near_dup_pairs(signatures, max_hamming=max_hamming)

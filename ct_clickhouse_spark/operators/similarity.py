@@ -1658,7 +1658,6 @@ EXACT_PAIRS_MAX_ROWS = 100_000
 def embedding_dedup_groups(
     spark: SparkSession,
     sf_dir: str,
-    max_iters: int | None = None,
     pairs_fn=None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate dedup (the last of the dedup family:
@@ -1670,15 +1669,13 @@ def embedding_dedup_groups(
     GEMM (cosine_pairs) up to EXACT_PAIRS_MAX_ROWS, the sub-quadratic
     banded LSH (lsh_candidate_pairs) beyond — so the 100 TB path is the
     default at 100 TB, not a docstring suggestion.
-    Groups are the connected components of the pair graph, found by
-    min-label propagation with pointer-doubling shortcuts (see
-    label_propagate) — one neighbor-min join + one label-composition join
-    per round, converging in O(log diameter) rounds. Every round is fully
-    distributed (bounded shuffles, localCheckpoint cuts lineage); only the
-    scalar changed-count reaches the driver for loop control — the
-    standard Spark shape for iterative graph algorithms. Returns (vec_id,
-    canonical_id, is_keeper); keeper = component minimum, so dedup =
-    filter(is_keeper)."""
+    Groups are the connected components of the pair graph (see
+    label_propagate): a pair graph of at most
+    LABEL_PROPAGATE_DRIVER_MAX_PAIRS edges is read once to the driver and
+    resolved by union-find there; a larger one runs the distributed
+    pointer-doubling loop, which converges in O(log diameter) rounds.
+    Returns (vec_id, canonical_id, is_keeper); keeper = component
+    minimum, so dedup = filter(is_keeper)."""
     ids = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("id")
     )
@@ -1686,7 +1683,7 @@ def embedding_dedup_groups(
         n = table_rowcount(spark, sf_dir, "embeddings")
         pairs_fn = cosine_pairs if n <= EXACT_PAIRS_MAX_ROWS else lsh_candidate_pairs
     pairs = pairs_fn(spark, sf_dir).select("id_a", "id_b")
-    labels = label_propagate(ids, pairs, max_iters=max_iters)
+    labels = label_propagate(ids, pairs)
     return labels.select(
         F.col("id").alias("vec_id"),
         F.col("label").alias("canonical_id"),
@@ -1694,21 +1691,94 @@ def embedding_dedup_groups(
     )
 
 
-def label_propagate(
-    ids: DataFrame, pairs: DataFrame, max_iters: int | None = None
-) -> DataFrame:
-    """Distributed connected components (the core of
-    embedding_dedup_groups, reusable over any edge source — GEMM pairs,
-    LSH candidates, jaccard pairs). ``ids``: one `id` column; ``pairs``:
-    undirected edges (id_a, id_b). Returns (id, label) with label =
-    component minimum. See _label_propagate_rounds for the algorithm."""
-    labels, _ = _label_propagate_rounds(ids, pairs, max_iters=max_iters)
-    return labels
+# Up to this many pairs (after dropping pairs with an endpoint outside
+# ``ids``) label_propagate reads the pair graph to the driver and runs
+# union-find there; above it the distributed loop runs. The bound is set
+# by driver memory, not by speed: 1M pairs is 16 MB of ids in Arrow, a
+# few tens of MB of numpy state and at most 2M (id, label) rows
+# broadcast back, well inside a 3 GB driver. The driver route is still
+# the faster one at the bound: the label_propagation row of
+# scripts/stress_scaling.py (4 cores, 3 GB driver) took 17.2 s for
+# 999,747 pairs on the driver and 53.0 s for 1,000,188 pairs in the loop.
+LABEL_PROPAGATE_DRIVER_MAX_PAIRS = 1_000_000
 
 
-def _label_propagate_rounds(
-    ids: DataFrame, pairs: DataFrame, max_iters: int | None = None
-) -> tuple[DataFrame, int]:
+def label_propagate(ids: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Connected components (the core of embedding_dedup_groups, reusable
+    over any edge source — GEMM pairs, LSH candidates, jaccard pairs).
+    ``ids``: one `id` column; ``pairs``: undirected edges (id_a, id_b).
+    Returns (id, label) for every row of ``ids``, label = component
+    minimum.
+
+    The graph is the one ``pairs`` induces on ``ids``: a pair with an
+    endpoint outside ``ids`` is dropped, so it never connects two ids
+    through a missing node. Self-loops and duplicate or reversed edges
+    change nothing.
+
+    Routing — by pair-graph size, decided here:
+
+    - the induced pairs are pinned once (the pair source, a GEMM or a
+      band join, runs here and only here) and at most
+      LABEL_PROPAGATE_DRIVER_MAX_PAIRS + 1 of them are read back;
+    - at most LABEL_PROPAGATE_DRIVER_MAX_PAIRS: union-find on the driver
+      (_driver_components). The result is ``ids`` broadcast-joined to the
+      (id, label) rows of the nodes whose label is not their own id,
+      with ``coalesce(label, id)``; the builder fires no job beyond the
+      pin and the read.
+    - above it: the distributed pointer-doubling loop over the pin
+      (_label_propagate_rounds), the path for pair graphs that do not
+      fit the driver."""
+    edges = (
+        pairs.join(ids.select(F.col("id").alias("id_a")), "id_a", "left_semi")
+        .join(ids.select(F.col("id").alias("id_b")), "id_b", "left_semi")
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=True)
+    )
+    pdf = edges.limit(LABEL_PROPAGATE_DRIVER_MAX_PAIRS + 1).toPandas()
+    if len(pdf) > LABEL_PROPAGATE_DRIVER_MAX_PAIRS:
+        labels, _ = _label_propagate_rounds(ids, edges)
+        return labels
+    id_type = ids.schema["id"].dataType.simpleString()
+    label_map = ids.sparkSession.createDataFrame(
+        _driver_components(pdf["id_a"].to_numpy(), pdf["id_b"].to_numpy()),
+        f"id {id_type}, label {id_type}",
+    )
+    return ids.join(F.broadcast(label_map), "id", "left").select(
+        "id", F.coalesce("label", "id").alias("label")
+    )
+
+
+def _driver_components(a, b):
+    """Union-find over the edges (a[i], b[i]) on the driver: a pandas
+    (id, label) frame with the component minimum of every endpoint whose
+    minimum is not itself. Hook-and-shortcut over dense node indices,
+    numbered in id order, so each component's root is its minimum id:
+    every round hooks the larger of each edge's two roots under the
+    smaller one, then follows parent pointers until every node points at
+    a root, and the rounds stop once every edge's ends share a root."""
+    import numpy as np
+    import pandas as pd
+
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ea, eb = idx[: len(a)], idx[len(a) :]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[ea], parent[eb]
+        if (ra == rb).all():
+            break
+        lo = np.minimum(ra, rb)
+        np.minimum.at(parent, ra, lo)
+        np.minimum.at(parent, rb, lo)
+        while True:
+            up = parent[parent]
+            if (up == parent).all():
+                break
+            parent = up
+    moved = parent != np.arange(len(nodes))
+    return pd.DataFrame({"id": nodes[moved], "label": nodes[parent[moved]]})
+
+
+def _label_propagate_rounds(ids: DataFrame, pairs: DataFrame) -> tuple[DataFrame, int]:
     """Min-label propagation with pointer-doubling shortcuts; also returns
     the round count (the property the shortcut exists for).
 
@@ -1721,12 +1791,8 @@ def _label_propagate_rounds(
     every chain per round, so convergence is O(log diameter) rounds. Both
     steps preserve the invariant "label is an id inside the same
     component, <= own id", so the fixpoint (no change across a round) is
-    still exactly label = component minimum.
-
-    Runs to convergence by default — a fixed iteration cap silently
-    mis-labels long-chain graphs. ``max_iters`` is an optional safety
-    bound for callers that know their graphs are dense (near-dup
-    clusters converge in 2-3 rounds)."""
+    still exactly label = component minimum. Runs to convergence: a
+    fixed round cap would mis-label long-chain graphs."""
     # both directions from ONE read of ``pairs``: a union of two
     # projections would run an unpinned pair source (a GEMM or a band
     # join) twice
@@ -1808,7 +1874,7 @@ def _label_propagate_rounds(
         changed = frontier.count()
         labels = proposed.select("id", "label")
         rounds += 1
-        if changed == 0 or (max_iters is not None and rounds >= max_iters):
+        if changed == 0:
             break
     return labels.unionByName(isolated), rounds
 
@@ -1822,7 +1888,7 @@ def groups_global_and_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     - kind='semdedup_cell': the SemDeDup group/keeper machinery under
       the hard gate (r4 verdict #3) — cell-scoped pairs (deterministic
       sign-bit cells, so the DuckDB recursive-CTE oracle can replay the
-      cell restriction) -> pointer-doubled components -> keeper = cell
+      cell restriction) -> connected components -> keeper = cell
       component minimum. A pair leaked across cells, a missed within-
       cell pair, or a wrong keeper all break the value hash. The k-means
       cell variant (semantic_dedup_groups) keeps its pytest gates."""

@@ -153,10 +153,7 @@ def main() -> None:
         # O(n·d·bits) 100 TB similarity path (candidate-pair volume is a
         # data-density property that synthetic replication distorts, so
         # only the signature computation is timed)
-        from ct_clickhouse_spark.operators.similarity import (
-            _hyperplanes,
-            label_propagate,
-        )
+        from ct_clickhouse_spark.operators.similarity import _hyperplanes
 
         emb = multiplied(spark, "embeddings", ["vec_id"], k)
         comps = emb.select(
@@ -214,28 +211,6 @@ def main() -> None:
 
         timed("span_removal", k, lambda: remove_duplicate_spans(docs)
             .agg(F.sum("n_removed"), F.count(F.lit(1)))
-            .collect())
-
-        # connected-components label propagation over linearly replicated
-        # edges (k independent copies of the near-dup pair graph: edges,
-        # nodes, and components all scale k x, diameter constant)
-        from ct_clickhouse_spark.operators.similarity import cosine_pairs
-
-        base_pairs = cosine_pairs(spark, SF_DIR).select("id_a", "id_b")
-        pair_parts = []
-        for i in range(k):
-            pair_parts.append(
-                base_pairs.select(
-                    (F.col("id_a") + F.lit(i * 100_000_000)).alias("id_a"),
-                    (F.col("id_b") + F.lit(i * 100_000_000)).alias("id_b"),
-                )
-            )
-        pairs_k = pair_parts[0]
-        for p in pair_parts[1:]:
-            pairs_k = pairs_k.unionAll(p)
-        ids_k = emb.select(F.col("vec_id").alias("id"))
-        timed("label_propagation", k, lambda: label_propagate(ids_k, pairs_k)
-            .agg(F.count_distinct("label"))
             .collect())
 
         # range join (round 3): events x k against per-type maintenance
@@ -451,6 +426,56 @@ def main() -> None:
                 )
                 assert n_touched <= 4, (n_del, n_touched)
             shutil.rmtree(mut_dir, ignore_errors=True)
+
+    # connected-components label propagation (label_propagate) over k
+    # independent copies of the sf0.1 near-dup pair graph (edges, nodes
+    # and components scale k x, diameter constant), at its OWN
+    # multipliers: 1, the largest k whose pair graph still fits
+    # LABEL_PROPAGATE_DRIVER_MAX_PAIRS (driver union-find) and one more
+    # copy (the distributed loop) — the last two time both routes on
+    # nearly the same graph. Copies are a broadcast cross join of the
+    # pinned base pairs and ids, so the pair source runs once, not k
+    # times. The route each size took goes to stderr.
+    if not only or "label_propagation" in only:
+        from ct_clickhouse_spark.catalog import load_table
+        from ct_clickhouse_spark.operators.similarity import (
+            LABEL_PROPAGATE_DRIVER_MAX_PAIRS,
+            cosine_pairs,
+            label_propagate,
+        )
+        from ct_clickhouse_spark.plans import executed_plan
+
+        base_pairs = (
+            cosine_pairs(spark, SF_DIR).select("id_a", "id_b").localCheckpoint()
+        )
+        base_ids = load_table(spark, SF_DIR, "embeddings").select(
+            F.col("vec_id").cast("long").alias("id")
+        )
+        n_base = base_pairs.count()
+        k_fit = LABEL_PROPAGATE_DRIVER_MAX_PAIRS // n_base
+        for k in (1, k_fit, k_fit + 1):
+            reps = F.broadcast(
+                spark.range(k).select((F.col("id") * 100_000_000).alias("shift"))
+            )
+            pairs_k = base_pairs.crossJoin(reps).select(
+                (F.col("id_a") + F.col("shift")).alias("id_a"),
+                (F.col("id_b") + F.col("shift")).alias("id_b"),
+            )
+            ids_k = base_ids.crossJoin(reps).select(
+                (F.col("id") + F.col("shift")).alias("id")
+            )
+            last = {}
+
+            def propagate(ids_k=ids_k, pairs_k=pairs_k):
+                last["labels"] = label_propagate(ids_k, pairs_k)
+                return last["labels"].agg(F.count_distinct("label")).collect()
+
+            timed("label_propagation", k, propagate)
+            route = "distributed" if "Union" in executed_plan(last["labels"]) else "driver"
+            print(
+                f"label_propagation x{k}: {route} route ({n_base * k} pairs)",
+                file=sys.stderr,
+            )
 
     # perceptual multi-probe band-join grid (r6 #7 / r7 verdict #3):
     # runs at its OWN multipliers (1/10/100 — candidate volume is the

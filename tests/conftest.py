@@ -24,3 +24,14 @@ def duck():
     from ct_clickhouse_spark.testing import duckdb_fixture_connection
 
     return duckdb_fixture_connection(SF_DIR)
+
+
+def jobs_fired(spark, group: str, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -19,7 +19,7 @@ from ct_clickhouse_spark.operators.dedup import (
     doc_incremental_new,
     incremental_dedup,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_fired
 
 ROUTES = ("anti", "bloom")
 
@@ -175,34 +175,24 @@ def test_routing_threshold_row_identical(spark, n, bloom):
     assert _rows(got) == _rows(batch.join(corpus, "k", "left_anti"))
 
 
-def _jobs_fired(spark, group: str, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_small_route_builder_fires_only_the_routing_count(spark):
     """On the anti-join route the builder's only eager work is the corpus
     key count it routes on (under AQE that one count is two jobs: its
     shuffle stage and its result); a caller-supplied ``expected_items``
     leaves the builder with no job at all."""
     batch, corpus = _frames(spark)
-    count_jobs = _jobs_fired(
+    count_jobs = jobs_fired(
         spark, "test-inc-count", lambda: corpus.select("k").count()
     )
     assert count_jobs > 0
     assert (
-        _jobs_fired(
+        jobs_fired(
             spark, "test-inc-route", lambda: incremental_dedup(batch, corpus, "k")
         )
         == count_jobs
     )
     assert (
-        _jobs_fired(
+        jobs_fired(
             spark,
             "test-inc-sized",
             lambda: incremental_dedup(batch, corpus, "k", expected_items=500),

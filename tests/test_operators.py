@@ -7,7 +7,7 @@ import pytest
 
 from ct_clickhouse_spark.operators import dedup, relational, similarity, text, windows
 from ct_clickhouse_spark.testing import assert_matches_oracle
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_fired
 
 ALL_MODULES = [relational, windows, dedup, text, similarity]
 
@@ -235,12 +235,33 @@ def _union_find_components(n_nodes: int, edges: list[tuple[int, int]]) -> dict[i
     return {v: find(v) for v in range(n_nodes)}
 
 
-def test_label_propagate_matches_union_find_on_random_and_chain_graphs(spark):
+LABEL_ROUTES = ("driver", "distributed")
+
+
+def _label_route(monkeypatch, route: str) -> None:
+    """Force label_propagate onto ``route`` and fail if the other runs."""
+
+    def forbidden(*args):
+        raise AssertionError(f"label_propagate left the {route} route")
+
+    if route == "driver":
+        monkeypatch.setattr(similarity, "_label_propagate_rounds", forbidden)
+    else:
+        # -1, not 0: not even an empty pair graph is read to the driver
+        monkeypatch.setattr(similarity, "LABEL_PROPAGATE_DRIVER_MAX_PAIRS", -1)
+        monkeypatch.setattr(similarity, "_driver_components", forbidden)
+
+
+@pytest.mark.parametrize("route", LABEL_ROUTES)
+def test_label_propagate_matches_union_find_on_random_and_chain_graphs(
+    spark, monkeypatch, route
+):
     """label_propagate == exact union-find on seeded random graphs AND a
-    long path graph — the path's diameter (39) exceeds any small fixed
-    iteration cap, pinning the run-to-convergence default."""
+    long path graph, on both routes — the path's diameter (39) exceeds
+    any small fixed round cap, pinning the run-to-convergence loop."""
     import random
 
+    _label_route(monkeypatch, route)
     cases = []
     for seed in (7, 23):
         rng = random.Random(seed)
@@ -264,6 +285,97 @@ def test_label_propagate_matches_union_find_on_random_and_chain_graphs(spark):
             for r in similarity.label_propagate(ids, pairs).collect()
         }
         assert got == want
+
+
+def test_driver_components_matches_union_find_on_large_random_graph():
+    """The driver route's numpy union-find against the loop reference on
+    a graph too large to push through Spark in a unit test (15k random
+    edges over 20k nodes: small components beside one of 11k nodes)."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    n = 20_000
+    a, b = rng.integers(0, n, 15_000), rng.integers(0, n, 15_000)
+    want = _union_find_components(n, list(zip(a.tolist(), b.tolist())))
+    got = similarity._driver_components(a, b)
+    moved = dict(zip(got["id"].tolist(), got["label"].tolist()))
+    assert all(v != label for v, label in moved.items())
+    assert {v: moved.get(v, v) for v in range(n)} == want
+
+
+@pytest.mark.parametrize("route", LABEL_ROUTES)
+def test_label_propagate_degenerate_inputs(spark, monkeypatch, route):
+    """label_propagate's input contract, the same on both routes."""
+    _label_route(monkeypatch, route)
+    schema = "id_a long, id_b long"
+
+    def labels(ids, pairs):
+        ids = spark.createDataFrame([(i,) for i in ids], "id long")
+        got = similarity.label_propagate(ids, spark.createDataFrame(pairs, schema))
+        return sorted((r.id, r.label) for r in got.collect())
+
+    # no pairs: every id is its own component
+    assert labels([3, 1, 2], []) == [(1, 1), (2, 2), (3, 3)]
+    # no ids: no rows, whatever the pairs say
+    assert labels([], [(1, 2)]) == []
+    # self-loops, duplicate and reversed duplicate edges change nothing
+    assert labels([1, 2, 3, 4], [(4, 4), (2, 3), (2, 3), (3, 2), (1, 1)]) == [
+        (1, 1),
+        (2, 2),
+        (3, 2),
+        (4, 4),
+    ]
+    # endpoints absent from ids: 0 and 5 meet only through the missing 9,
+    # and 7 is joined to nothing present, so none of them moves
+    assert labels([0, 1, 2, 5, 7], [(0, 9), (5, 9), (1, 2), (7, 8)]) == [
+        (0, 0),
+        (1, 1),
+        (2, 1),
+        (5, 5),
+        (7, 7),
+    ]
+
+
+def test_label_propagate_driver_route_fires_only_its_bounded_read(spark):
+    """On the driver route the builder's only jobs are those of its one
+    bounded read of the pair source (the induced-pair pin and the capped
+    fetch, counted against a standalone run of the same read), and the
+    returned plan is ``ids`` broadcast-joined to the label map: no Union
+    with isolated nodes and no loop frame."""
+    from pyspark.sql import functions as F
+
+    from ct_clickhouse_spark.plans import executed_plan
+
+    ids = spark.range(40).select("id")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 38, 3)], "id_a long, id_b long"
+    )
+
+    def bounded_read():
+        edges = (
+            pairs.join(ids.select(F.col("id").alias("id_a")), "id_a", "left_semi")
+            .join(ids.select(F.col("id").alias("id_b")), "id_b", "left_semi")
+            .select("id_a", "id_b")
+            .localCheckpoint(eager=True)
+        )
+        edges.limit(similarity.LABEL_PROPAGATE_DRIVER_MAX_PAIRS + 1).toPandas()
+
+    read_jobs = jobs_fired(spark, "test-lp-read", bounded_read)
+    assert read_jobs > 0
+    out = []
+    assert (
+        jobs_fired(
+            spark,
+            "test-lp-route",
+            lambda: out.append(similarity.label_propagate(ids, pairs)),
+        )
+        == read_jobs
+    )
+    plan = executed_plan(out[0])
+    assert "BroadcastHashJoin" in plan and "Union" not in plan, plan
+    assert "ExistingRDD" not in plan, plan  # no checkpointed loop frame
+    want = {i: i - 1 if i % 3 == 1 else i for i in range(40)}
+    assert {r.id: r.label for r in out[0].collect()} == want
 
 
 def test_redact_pii_replaces_and_counts(spark):
