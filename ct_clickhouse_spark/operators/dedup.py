@@ -108,10 +108,10 @@ def minhash_report_prob(s: float, k: int, r: int, b: int) -> float:
     clears JACCARD_THRESHOLD (the verify filter). Exact DP: per band the
     agreement count is Binomial(r, s) — the seeded xxhash64 family gives
     independent Bernoulli(s) agreement per seed — tracking
-    (any-full-band, total agreements). Shared by the two-scale recall
-    gate (tests/test_minhash_plan.py) and the sf10 certification
-    (scripts/certify_sf10.py) so the measured recall is always compared
-    to the analytic of the plan actually chosen."""
+    (any-full-band, total agreements). The two-scale recall gate
+    (tests/test_minhash_plan.py) compares the measured recall to this
+    analytic of the plan actually chosen, and scripts/lsh_cost_decomp.py
+    reports it next to each plan's cost."""
     import math as _math
     from math import comb
 

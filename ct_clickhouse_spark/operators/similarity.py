@@ -250,46 +250,6 @@ def cosine_pairs(
     )
 
 
-def _hyperplanes(spark: SparkSession) -> DataFrame:
-    """LSH_BITS x EMBED_DIM pseudo-random ±1 hyperplane components, derived
-    from xxhash64 parity — a tiny broadcastable dim table built in-plan."""
-    return spark.range(LSH_BITS).select(
-        F.col("id").alias("bit"),
-        F.explode(F.sequence(F.lit(0), F.lit(EMBED_DIM - 1))).alias("pos"),
-    ).select(
-        "bit",
-        "pos",
-        (F.when(F.pmod(F.xxhash64("bit", "pos"), 2) == 0, 1.0).otherwise(-1.0)).alias(
-            "sign"
-        ),
-    )
-
-
-def lsh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit random-hyperplane signature per vector.
-
-    posexplode(embedding) -> broadcast-join the hyperplane table ->
-    groupBy(vec_id, bit) sum -> sign -> pack bits. Two hash aggregates,
-    all JVM; scales linearly in n·d·bits."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    comps = emb.select(
-        "vec_id", F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "v")
-    )
-    dots = (
-        comps.join(F.broadcast(_hyperplanes(spark)), "pos")
-        .groupBy("vec_id", "bit")
-        .agg(F.sum(F.col("v") * F.col("sign")).alias("dot"))
-    )
-    return (
-        dots.groupBy("vec_id")
-        .agg(
-            F.sum(
-                F.when(F.col("dot") > 0, F.expr("shiftleft(1L, CAST(bit AS INT))")).otherwise(F.lit(0))
-            ).alias("signature")
-        )
-    )
-
-
 LSH_BANDS = 4  # minimum band count (4 bands x 4 bits at fixture scale)
 LSH_TARGET_BUCKET = 512  # expected bucket membership the plan sizes for
 LSH_MAX_BITS = 16  # per-band bucket bits ceiling (65,536 buckets/band)
@@ -346,8 +306,8 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes by _lsh_plan (bits grow with log2 n, bands compensate recall),
     so the bucket-local work stays sub-quadratic at 100 TB. No candidate
     self-join, no driver collect, no full-matrix broadcast. The global
-    plane index gbit = band * bits + bit reproduces the original 16-bit
-    signature slicing exactly at the fixture-scale (4, 4) plan."""
+    plane index gbit = band * bits + bit makes the fixture-scale (4, 4)
+    plan one 16-bit signature sliced into four 4-bit bands."""
     import numpy as np
     import pandas as pd
 

@@ -53,18 +53,6 @@ def running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def order_gap_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag(): days since the customer's previous order."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    prev = F.lag("o_orderdate").over(w)
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.datediff(F.to_date("o_orderdate"), F.to_date(prev)).alias("gap_days"),
-    )
-
-
 def price_rank_in_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank + dense_rank within brand."""
     part = load_table(spark, sf_dir, "part")

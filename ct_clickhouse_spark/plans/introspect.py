@@ -23,12 +23,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def formatted_explain(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def has_pushed_filters(df: DataFrame, *fragments: str) -> bool:
     """True if every fragment appears inside a PushedFilters: [...] list."""
     plan = executed_plan(df)

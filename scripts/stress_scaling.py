@@ -149,26 +149,6 @@ def main() -> None:
             .agg(F.count(F.lit(1)))
             .collect())
 
-        # LSH signature pipeline on multiplied embeddings — the linear
-        # O(n·d·bits) 100 TB similarity path (candidate-pair volume is a
-        # data-density property that synthetic replication distorts, so
-        # only the signature computation is timed)
-        from ct_clickhouse_spark.operators.similarity import _hyperplanes
-
-        emb = multiplied(spark, "embeddings", ["vec_id"], k)
-        comps = emb.select(
-            "vec_id",
-            F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "v"),
-        )
-        hp = _hyperplanes(spark)
-        timed("lsh_signatures", k, lambda: comps.join(F.broadcast(hp), "pos")
-            .groupBy("vec_id", "bit")
-            .agg(F.sum(F.col("v") * F.col("sign")).alias("dot"))
-            .groupBy("vec_id")
-            .agg(F.sum(F.when(F.col("dot") > 0, 1).otherwise(0)))
-            .agg(F.count(F.lit(1)))
-            .collect())
-
         # exact GEMM pair tier (round 4): multiplied embeddings written to
         # a temp fixture dir so cosine_pairs runs its real path, including
         # the size-adaptive tile count (blocks = ceil(n/4096)): task

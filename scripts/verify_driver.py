@@ -11,17 +11,8 @@ Runs the public surface end-to-end:
      vs Spark int64 "3") fail here the way they fail there.
 
 Usage: python scripts/verify_driver.py [query-name-substring ...]
-                                       [--sf10-modes [CERT.json]]
 Exit 0 iff everything matches. Also warns if an oracle-backed query sits
 past the driver's 50-query correctness window.
-
-``--sf10-modes`` (r12 verdict #7) folds the sf10 certification ledger
-(scripts/certify_sf10.py output, default: newest CORRECTNESS_sf10_*.json
-at the repo root) into this run's emission: every queries() slot must
-appear in the certification with ok=true, each slot's named verification
-mode is printed and recorded in VERIFY_JSON_OUT under "sf10", and a slot
-MISSING from the certification fails the run — so a surface change can't
-silently skip re-certification.
 """
 
 from __future__ import annotations
@@ -47,71 +38,13 @@ def _err_record(err: str) -> dict:
     }
 
 
-def sf10_cert_order_key(path: str) -> tuple:
-    """Deterministic recency key for a CORRECTNESS_sf10_*.json artifact,
-    derived from CONTENT, never filesystem mtime — a fresh clone
-    normalizes mtimes, which made the newest-wins merge arbitrary (r13
-    advice #1). Primary: the `generated_utc` stamp certify_sf10 embeds
-    (r14+ artifacts). Fallback for older artifacts: the round number in
-    the filename, with suffixed overlays (…_r13_lsh) AFTER their round's
-    full ledger (an overlay is by construction a later re-cert); unnumbered
-    names (…_tolcheck) sort oldest. Filename is the final tiebreak."""
-    import json
-    import re
-
-    name = os.path.basename(path)
-    try:
-        with open(path, encoding="utf-8") as f:
-            stamp = json.load(f).get("generated_utc") or ""
-    except Exception:
-        stamp = ""
-    m = re.search(r"_r(\d+)(_\w+)?\.json$", name)
-    rnd = int(m.group(1)) if m else -1
-    overlay = 1 if (m and m.group(2)) else 0
-    return (stamp, rnd, overlay, name)
-
-
-def _resolve_sf10_cert(argv: list[str]) -> tuple[list[str], list[str] | None]:
-    """Pop ``--sf10-modes [path]`` from argv. With no explicit path, ALL
-    CORRECTNESS_sf10_*.json files at the repo root participate, oldest
-    first (content-derived order — sf10_cert_order_key), and per-slot
-    records are unioned newest-wins — a partial re-certification after a
-    single-operator plan change (e.g. CORRECTNESS_sf10_r13_lsh.json
-    re-certifying dedup_lsh_pairs) then overlays the full ledger instead
-    of masking it."""
-    if "--sf10-modes" not in argv:
-        return argv, None
-    i = argv.index("--sf10-modes")
-    rest = argv[:i] + argv[i + 1 :]
-    if i < len(argv) - 1 and argv[i + 1].endswith(".json"):
-        path = argv[i + 1]
-        rest.remove(path)
-        return rest, [path]
-    import glob
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    cands = glob.glob(os.path.join(repo, "CORRECTNESS_sf10_*.json"))
-    if not cands:
-        raise SystemExit("--sf10-modes: no CORRECTNESS_sf10_*.json found")
-    return rest, sorted(cands, key=sf10_cert_order_key)
-
-
 def main() -> int:
-    argv, sf10_cert_paths = _resolve_sf10_cert(sys.argv[1:])
-    only = argv
+    only = sys.argv[1:]
     import duckdb
 
     import __spark_entry__ as entrymod
     from ct_clickhouse_spark.session import get_spark
     from ct_clickhouse_spark.testing import pandas_signature, pandas_signature_rtol
-
-    # Tolerance-aware acceptance (sf1+/sf10 certification): exact
-    # str(double) hashing is scale-unsound for ~6e12 FP sums (last-ulp
-    # addition-order noise), so every run emits BOTH a strict and a
-    # relative-grid verdict per slot; VERIFY_ACCEPT=rtol lets the grid
-    # verdict satisfy the gate (the artifact still records which one
-    # held). Default remains strict — the round driver's own compare.
-    accept_rtol = os.environ.get("VERIFY_ACCEPT", "strict") == "rtol"
 
     spark = get_spark(app_name="verify-driver")
 
@@ -178,6 +111,8 @@ def main() -> int:
         hash_ok = ssig[2] == dsig[2]
         rtol_ok = ssig_r[2] == dsig_r[2]
         shape_ok = ssig[0] == dsig[0] and ssig[1] == dsig[1]
+        # the relative-grid verdict ("rtol") is recorded to tell FP
+        # last-ulp noise from a wrong answer; only "hash" passes the gate
         verdict = (
             "hash" if (hash_ok and shape_ok)
             else "rtol" if (rtol_ok and shape_ok)
@@ -195,74 +130,16 @@ def main() -> int:
         }
         if verdict == "hash":
             print(f"MATCH {name}: {ssig[1]} rows hash={ssig[2]} [{spark_sec:.1f}s]")
-        elif verdict == "rtol" and accept_rtol:
-            print(
-                f"MATCH(rtol) {name}: {ssig[1]} rows grid={ssig_r[2]} "
-                f"(strict {ssig[2]} != {dsig[2]}) [{spark_sec:.1f}s]"
-            )
         else:
             failures.append(name)
             print(f"FAIL  {name}: verdict={verdict}")
             print(f"   spark  cols={ssig[0]} rows={ssig[1]} hash={ssig[2]} grid={ssig_r[2]}")
             print(f"   duckdb cols={dsig[0]} rows={dsig[1]} hash={dsig[2]} grid={dsig_r[2]}")
     spark.stop()
-    sf10_summary = None
-    if sf10_cert_paths:
-        import json
-
-        cert_q: dict[str, dict] = {}
-        slot_src: dict[str, str] = {}
-        sf_dir_seen = None
-        for p in sf10_cert_paths:  # oldest -> newest: newest wins per slot
-            cert = json.load(open(p))
-            sf_dir_seen = cert.get("sf_dir") or sf_dir_seen
-            for slot, rec in cert.get("queries", {}).items():
-                cert_q[slot] = rec
-                slot_src[slot] = os.path.basename(p)
-        srcs = ", ".join(os.path.basename(p) for p in sf10_cert_paths)
-        print(f"== sf10 certification modes ({srcs}) ==")
-        sf10_missing, sf10_bad = [], []
-        modes: dict[str, dict] = {}
-        for name in qs:
-            if only and not any(s in name for s in only):
-                continue
-            rec = cert_q.get(name)
-            if rec is None:
-                sf10_missing.append(name)
-                print(f"sf10 MISSING {name}: not in certification — re-run certify_sf10")
-                continue
-            modes[name] = {
-                "mode": rec.get("mode"),
-                "ok": bool(rec.get("ok")),
-                "verdict": rec.get("verdict"),
-                "source": slot_src[name],
-            }
-            if not rec.get("ok"):
-                sf10_bad.append(name)
-            print(
-                f"sf10 {name}: mode={rec.get('mode')} ok={rec.get('ok')}"
-                + (f" verdict={rec.get('verdict')}" if rec.get("verdict") else "")
-                + f" [{slot_src[name]}]"
-            )
-        if sf10_missing or sf10_bad:
-            failures.extend(
-                [f"sf10-missing:{n}" for n in sf10_missing]
-                + [f"sf10-not-ok:{n}" for n in sf10_bad]
-            )
-        sf10_summary = {
-            "sources": [os.path.basename(p) for p in sf10_cert_paths],
-            "sf_dir": sf_dir_seen,
-            "n_slots": len(modes),
-            "n_ok": sum(1 for m in modes.values() if m["ok"]),
-            "missing": sf10_missing,
-            "modes": modes,
-        }
     if json_out:
         import json
 
         payload = {"sf_dir": ORACLE_DIR, "queries": record}
-        if sf10_summary is not None:
-            payload["sf10"] = sf10_summary
         with open(json_out, "w") as f:
             json.dump(payload, f, indent=1)
         print(f"wrote {json_out}")
