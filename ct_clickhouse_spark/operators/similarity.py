@@ -1,6 +1,6 @@
 """Similarity search over embedding vectors (north star, SURVEY §2.10).
 
-Four tiers, mirroring how ANN serving actually scales:
+The tiers, mirroring how ANN serving actually scales:
 1. brute-force cosine top-k — exact baseline; O(n·d) per query, fully
    JVM-side (zip_with/aggregate), distributes perfectly (map + TakeOrdered)
 2. all-pairs above threshold — exact, for offline dedup of small corpora
@@ -10,6 +10,14 @@ Four tiers, mirroring how ANN serving actually scales:
    candidates. Recall/precision tuned by bits-per-band vs band count.
 4. IVF (coarse quantizer + probed buckets) — the partition-pruning ANN
    path: assignment is a partition key, a probe reads 2/8 of the data.
+5. SQ8 (int8 scalar codes) — one TakeOrdered job scores the codes and
+   returns k·SQ8_REFINE candidates with their vectors; the exact re-rank
+   runs on the driver.
+6. random projection (JL, 64 -> 16 dims) — reduced-dimension candidate
+   scoring plus an exact re-rank, for well-separated corpora.
+
+One router, ann_topk_auto_rows, picks IVF or SQ8 per corpus from a
+sampled cell-concentration probe (ann_regime_probe); /similar serves it.
 
 The hyperplanes are pseudo-random ±1 vectors derived from xxhash64(bit,pos)
 parity: deterministic across runs/engines with no RNG state to ship.
@@ -115,9 +123,10 @@ def _gemm_blocks(n_rows: int) -> int:
 # artifact cache.
 #
 # STALENESS ENFORCED (r13 verdict #5 — was a documented immutable-fixture
-# assumption): this cache and the SQ8 caches below carry the
-# `path_state` fingerprint of the embeddings path they were resolved
-# from as their registry state; a fingerprint mismatch (a rewrite/
+# assumption): this cache, the SQ8 index, the IVF centroids and the ANN
+# route below carry the `path_state` fingerprint of the embeddings path
+# they were resolved from as their registry state; a fingerprint
+# mismatch (a rewrite/
 # compaction/mutation landed) invalidates the directory's artifacts and
 # table memos, and re-resolves. The probe is a TTL-memoized directory
 # fingerprint (_emb_state) — amortized noise next to the Spark job it
@@ -395,6 +404,26 @@ IVF_PROBES = 2
 IVF_ITERS = 2
 
 
+def _assign_cells(vectors, cents, p: int | None = None):
+    """The one cell-assignment rule of every IVF consumer: ``vectors`` as
+    float64 unit rows ``m``, then each row's home cell — argmax of
+    ``m @ cents.T`` — when ``p`` is None, or its ``p`` nearest cells as
+    an (n, p) array when ``p`` is given (argpartition, so the order
+    within the set is arbitrary; every cell when p >= the cell count).
+    Returns ``(m, cells)``. Used map-side, so it must stay a
+    module-level function (pickled by reference)."""
+    import numpy as np
+
+    m = np.array(vectors, dtype=np.float64)
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    sims = m @ cents.T
+    if p is None:
+        return m, np.argmax(sims, axis=1)
+    if p < cents.shape[0]:
+        return m, np.argpartition(-sims, p - 1, axis=1)[:, :p]
+    return m, np.tile(np.arange(cents.shape[0]), (len(m), 1))
+
+
 SEMDEDUP_PROBES = 2  # top-P nearest cells per vector (multi-probe recall lever)
 
 
@@ -431,7 +460,6 @@ def semdedup_pairs(
     in up to P cells) — strictly cell-local work, same shape as the LSH
     bucket kernel."""
     import numpy as np
-    import pandas as pd
 
     cents = _ivf_centroids(spark, sf_dir)
     bc = spark.sparkContext.broadcast(cents)
@@ -443,17 +471,10 @@ def semdedup_pairs(
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            m /= np.linalg.norm(m, axis=1, keepdims=True)
             # top-P cells via argpartition: O(k) per row where k is the
             # SemDeDup scale knob (k ~ n/target_size); cell order within
             # the probe set is irrelevant — both cells are probed
-            sims = m @ c.T
-            top = (
-                np.argpartition(-sims, p - 1, axis=1)[:, :p]
-                if p < c.shape[0]
-                else np.tile(np.arange(c.shape[0]), (len(pdf), 1))
-            )
+            _, top = _assign_cells(pdf["embedding"].tolist(), c, p)
             idx = np.repeat(np.arange(len(pdf)), p)
             out = pdf.iloc[idx][["vec_id", "embedding"]].copy()
             out.insert(0, "cluster", top.ravel())
@@ -591,9 +612,11 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str):
     parallelism. Nothing larger than k x d doubles is ever centralized,
     at any corpus size. Trained once per (session, sf): deterministic, so
     every consumer would retrain the identical array: the IVF build, the
-    SemDeDup assignment and per-call ivf_topk."""
+    SemDeDup assignment and per-call ivf_topk. Same `path_state`
+    staleness enforcement as the query vectors."""
     return artifacts.get_or_build(
-        spark, "centroids", (sf_dir,), lambda: _train_ivf_centroids(spark, sf_dir)
+        spark, "centroids", (sf_dir,), lambda: _train_ivf_centroids(spark, sf_dir),
+        state=_emb_state(spark, sf_dir),
     )
 
 
@@ -615,9 +638,7 @@ def _train_ivf_centroids(spark: SparkSession, sf_dir: str):
             for pdf in batches:
                 if pdf.empty:
                     continue
-                m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                m /= np.linalg.norm(m, axis=1, keepdims=True)
-                assign = np.argmax(m @ c.T, axis=1)
+                m, assign = _assign_cells(pdf["embedding"].tolist(), c)
                 out = []
                 for cl in np.unique(assign):
                     members = m[assign == cl]
@@ -695,9 +716,7 @@ def ivf_topk(
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            m /= np.linalg.norm(m, axis=1, keepdims=True)
-            assign = np.argmax(m @ cents_.T, axis=1)
+            m, assign = _assign_cells(pdf["embedding"].tolist(), cents_)
             in_probe = np.isin(assign, list(probe_)) & (
                 pdf["vec_id"].to_numpy() != query_vec_id
             )
@@ -758,13 +777,7 @@ def ivf_topk_batch(
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            m /= np.linalg.norm(m, axis=1, keepdims=True)
-            top = (
-                np.argpartition(-(m @ c.T), p - 1, axis=1)[:, :p]
-                if p < c.shape[0]
-                else np.tile(np.arange(c.shape[0]), (len(pdf), 1))
-            )
+            _, top = _assign_cells(pdf["embedding"].tolist(), c, p)
             idx = np.repeat(np.arange(len(pdf)), p)
             out = pdf.iloc[idx][["query_id", "embedding"]].copy()
             out.insert(0, "cluster", top.ravel())
@@ -778,10 +791,8 @@ def ivf_topk_batch(
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            m /= np.linalg.norm(m, axis=1, keepdims=True)
             out = pdf[["vec_id", "label", "embedding"]].copy()
-            out.insert(0, "cluster", np.argmax(m @ c.T, axis=1))
+            out.insert(0, "cluster", _assign_cells(pdf["embedding"].tolist(), c)[1])
             out.insert(1, "is_query", False)
             out.insert(4, "query_id", -1)
             yield out[["cluster", "is_query", "vec_id", "label", "query_id", "embedding"]]
@@ -892,9 +903,6 @@ def ivf_build(spark: SparkSession, sf_dir: str, index_path: str) -> None:
     PARTITION PRUNING — the scan physically reads IVF_PROBES/IVF_CLUSTERS
     of the corpus and nothing else, and training cost is paid once, not
     per query."""
-    import numpy as np
-    import pandas as pd
-
     cents = _ivf_centroids(spark, sf_dir)
     (
         spark.createDataFrame(
@@ -912,10 +920,8 @@ def ivf_build(spark: SparkSession, sf_dir: str, index_path: str) -> None:
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            m /= np.linalg.norm(m, axis=1, keepdims=True)
             out = pdf[["vec_id", "label", "embedding"]].copy()
-            out["cluster"] = np.argmax(m @ c.T, axis=1).astype("int32")
+            out["cluster"] = _assign_cells(pdf["embedding"].tolist(), c)[1].astype("int32")
             yield out
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -1072,37 +1078,24 @@ def sq8_quantize(
     return codes, scales
 
 
-def _sq8_persisted(emb: DataFrame) -> tuple[DataFrame, list[float]]:
-    codes, scales = sq8_quantize(emb)
-    return codes.persist(), scales
+def _sq8_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[float]]:
+    """The persisted SQ8 index: each vector's int8 codes beside its
+    label and its original vector, the layout FAISS-style serving
+    indexes use. It scans ~9x the bytes of the codes alone, but the
+    approximate TakeOrdered returns the candidates with their vectors,
+    so a query is ONE job plus a driver-side exact re-rank. Same
+    `path_state` staleness enforcement as the query vectors."""
 
-
-def _sq8_cached(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[float]]:
-    # same `path_state` staleness enforcement as the query vectors
-    return artifacts.get_or_build(
-        spark, "sq8", (sf_dir,),
-        lambda: _sq8_persisted(load_table(spark, sf_dir, "embeddings")),
-        release=lambda v: v[0].unpersist(), state=_emb_state(spark, sf_dir),
-    )
-
-
-def _sq8_serving_index(spark: SparkSession, sf_dir: str):
-    """The SERVING layout of the SQ8 index: codes co-located with the
-    result payload (label) AND the original vector — the classic ANN
-    serving trade (FAISS-style indexes keep re-rank vectors beside the
-    codes). Scanning it reads ~9x the bytes of the codes-only frame, but
-    the whole point lookup becomes ONE distributed job: approximate
-    TakeOrdered returns candidates WITH their vectors, and the exact
-    re-rank of k*refine rows runs driver-side. The codes-only
-    sq8_topk remains the scan-compression shape for batch/analytics.
-    Same `path_state` staleness enforcement as the query vectors."""
-    return artifacts.get_or_build(
-        spark, "sq8_serving", (sf_dir,),
-        lambda: _sq8_persisted(
+    def build():
+        codes, scales = sq8_quantize(
             load_table(spark, sf_dir, "embeddings").withColumn(
                 "embedding_raw", F.col("embedding")
             )
-        ),
+        )
+        return codes.persist(), scales
+
+    return artifacts.get_or_build(
+        spark, "sq8", (sf_dir,), build,
         release=lambda v: v[0].unpersist(), state=_emb_state(spark, sf_dir),
     )
 
@@ -1124,118 +1117,26 @@ def _round_half_up4(x: float) -> float:
     )
 
 
-def _sq8_serving_scored(
+def _sq8_scored(
     spark: SparkSession,
     sf_dir: str,
     k: int = TOPK,
-    refine: int = SQ8_REFINE,
     query_vec_id: int = QUERY_VEC_ID,
 ) -> list[tuple]:
-    """The single-job SQ8 point lookup (see sq8_topk_serving), returning
-    plain (vec_id, label, cosine) tuples: one TakeOrdered job over the
-    payload-carrying index (approx score from the codes, exactly as
-    sq8_topk computes it), then the exact re-rank of the k*refine
-    candidates DRIVER-side with bit-identical arithmetic — python's
-    left-to-right sum reproduces aggregate()'s fold order over the same
-    doubles, sqrt is IEEE-exact on both sides, and _round_half_up4 is
-    Spark's round."""
-    codes, scales = _sq8_serving_index(spark, sf_dir)
+    """SQ8 approximate top-k as (vec_id, label, cosine) tuples. The
+    approximate cosine sum(code_d * w_d), with w_d folding the query's
+    code and both scales, is one zip_with/aggregate in codegen; ONE
+    TakeOrdered job collects the k*SQ8_REFINE best candidates with their
+    vectors; the driver re-ranks them exactly, bit-identical to
+    cosine_topk's in-plan round(cosine, 4): the left-to-right sum is
+    aggregate()'s fold order, math.sqrt is IEEE-exact like Spark's sqrt,
+    and _round_half_up4 is Spark's round. Recall and bit-identity are
+    pytest-gated against the exact tier."""
+    import math
+
+    codes, scales = _sq8_index(spark, sf_dir)
     qrow = _query_vector(spark, sf_dir, query_vec_id)
-    qn = sum(x * x for x in qrow) ** 0.5
-    if qn <= 0.0:  # zero vector: every cosine is undefined, not 'low'
-        raise ValueError(f"query vector {query_vec_id} has zero norm")
-    qnorm = [x / qn for x in qrow]
-    weights = [
-        round(q / s * SQ8_LEVELS) * s * s / (SQ8_LEVELS * SQ8_LEVELS)
-        for q, s in zip(qnorm, scales)
-    ]
-    approx = F.expr(
-        f"aggregate(zip_with(codes, {_dbl_array_sql(weights)}, "
-        "(c, w) -> c * w), 0.0D, (s, v) -> s + v)"
-    )
-    cand = (
-        codes.filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id", "label", "embedding_raw", approx.alias("a"))
-        .orderBy(F.col("a").desc(), "vec_id")
-        .limit(k * refine)
-        .collect()
-    )
-    scored = []
-    for r in cand:
-        dot = 0.0
-        nrm = 0.0
-        for x, y in zip(r.embedding_raw, qrow):
-            dot += x * y
-            nrm += x * x
-        cos = _round_half_up4(dot / (nrm**0.5 * qn))
-        scored.append((int(r.vec_id), int(r.label), cos))
-    scored.sort(key=lambda t: (-t[2], t[0]))
-    return scored[:k]
-
-
-def sq8_topk_serving(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = TOPK,
-    refine: int = SQ8_REFINE,
-    query_vec_id: int = QUERY_VEC_ID,
-) -> DataFrame:
-    """sq8_topk's serving twin as a DataFrame — rows identical to
-    sq8_topk by construction (tests/test_sq8_serving.py pins it per
-    query id). The HTTP endpoint skips this wrapper and takes the raw
-    tuples (ann_topk_auto_rows): createDataFrame on 10 rows costs a
-    full extra job (~500 ms measured), which would give back everything
-    the single-job shape saves."""
-    return spark.createDataFrame(
-        _sq8_serving_scored(spark, sf_dir, k, refine, query_vec_id),
-        "vec_id long, label int, cosine double",
-    )
-
-
-def ann_topk_auto_rows(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = TOPK,
-    query_vec_id: int = QUERY_VEC_ID,
-    target_recall: float = 0.9,
-) -> list[list]:
-    """ann_topk_auto for the serving layer, returning JSON-ready rows
-    ([vec_id, label, cosine]) without a result DataFrame round trip.
-    SQ8 route: the single-job driver re-rank; IVF route: the probed
-    index query, collected."""
-    probe = ann_regime_probe(spark, sf_dir, k=k, target_recall=target_recall)
-    if probe["route"] == "ivf":
-        df = ivf_topk(
-            spark,
-            sf_dir,
-            query_vec_id=query_vec_id,
-            n_probes=probe["probes_for_target"],
-            k=k,
-        )
-        return [list(t) for t in (tuple(r) for r in df.collect())]
-    return [
-        list(t) for t in _sq8_serving_scored(spark, sf_dir, k, SQ8_REFINE, query_vec_id)
-    ]
-
-
-def sq8_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = TOPK,
-    refine: int = SQ8_REFINE,
-    query_vec_id: int = QUERY_VEC_ID,
-) -> DataFrame:
-    """SQ8 approximate top-k against the vec_id=0 query vector.
-
-    Plan: (1) approximate cosine = sum(code_d * w_d) over the int8 codes,
-    where w_d folds the query's code and both scale factors — ONE
-    zip_with/aggregate pair in whole-stage codegen, no Python; (2)
-    TakeOrdered k*refine candidates by approximate score; (3) exact
-    cosine re-rank of only those candidates (broadcast of k*refine ids).
-    Recall is pytest-gated against the exact brute-force tier."""
-    codes, scales = _sq8_cached(spark, sf_dir)
-    qrow = _query_vector(spark, sf_dir, query_vec_id)
-    qn = sum(x * x for x in qrow) ** 0.5
+    qn = math.sqrt(sum(x * x for x in qrow))
     if qn <= 0.0:  # zero vector: every cosine is undefined, not 'low'
         raise ValueError(f"query vector {query_vec_id} has zero norm")
     qnorm = [x / qn for x in qrow]
@@ -1248,45 +1149,48 @@ def sq8_topk(
         f"aggregate(zip_with(codes, {_dbl_array_sql(weights)}, "
         "(c, w) -> c * w), 0.0D, (s, v) -> s + v)"
     )
-    # candidate ids come to the driver as a BOUNDED list (k * refine
-    # rows — a TakeOrderedAndProject job over the code scan) and return
-    # to the plan as an isin literal: a broadcast join here added a
-    # third sequential job (broadcast build) to the serving hot path,
-    # and each job pays the ~95 ms scheduling floor PROFILE_serving_r11
-    # measured. Same candidate set, same final rows.
-    cand_ids = [
-        r.vec_id
-        for r in codes.filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id", approx.alias("approx_cos"))
-        .orderBy(F.col("approx_cos").desc(), "vec_id")
-        .limit(k * refine)
-        .select("vec_id")
+    cand = (
+        codes.filter(F.col("vec_id") != query_vec_id)
+        .select("vec_id", "label", "embedding_raw", approx.alias("a"))
+        .orderBy(F.col("a").desc(), "vec_id")
+        .limit(k * SQ8_REFINE)
         .collect()
-    ]
-    emb = _emb_double(load_table(spark, sf_dir, "embeddings"))
-    # the query vector is already resolved driver-side (cached, qrow):
-    # carried as a literal-array SQL string instead of a broadcast 1-row
-    # subplan — same doubles, same zip_with/aggregate arithmetic (array
-    # order matches python's left-to-right sum, sqrt is IEEE-exact on
-    # both sides), one fewer parquet-scan subtree and ~200 ms less py4j
-    # plan construction in the per-request serving job. norm(q) is the
-    # driver-computed qn, identical to the in-plan aggregate by
-    # construction.
-    cos = F.expr(
-        f"round(aggregate(zip_with(emb, {_dbl_array_sql(qrow)}, "
-        "(x, y) -> x * y), 0.0D, (s, v) -> s + v) / "
-        "(sqrt(aggregate(emb, 0.0D, (s, v) -> s + v * v)) * "
-        f"CAST('{float(qn)!r}' AS DOUBLE)), 4)"
     )
-    in_cand = F.expr(
-        "vec_id IN (" + ",".join(str(int(i)) for i in cand_ids) + ")"
-    ) if cand_ids else F.lit(False)
-    return (
-        emb.filter(in_cand)
-        .select("vec_id", "label", cos.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(k)
+    scored = []
+    for r in cand:
+        dot = 0.0
+        nrm = 0.0
+        for x, y in zip(r.embedding_raw, qrow):
+            dot += x * y
+            nrm += x * x
+        cos = _round_half_up4(dot / (math.sqrt(nrm) * qn))
+        scored.append((int(r.vec_id), int(r.label), cos))
+    scored.sort(key=lambda t: (-t[2], t[0]))
+    return scored[:k]
+
+
+def _topk_frame(spark: SparkSession, rows) -> DataFrame:
+    """(vec_id, label, cosine) rows as a DataFrame. Built from pandas so
+    it crosses through Arrow: a list of tuples runs a Spark job (0.41 s
+    against 0.08 s for ten rows on 4 local cores)."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["vec_id", "label", "cosine"]),
+        "vec_id long, label int, cosine double",
     )
+
+
+def sq8_topk(
+    spark: SparkSession,
+    sf_dir: str,
+    k: int = TOPK,
+    query_vec_id: int = QUERY_VEC_ID,
+) -> DataFrame:
+    """SQ8 approximate top-k against the query vector (default vec_id=0)
+    as a DataFrame: the rows of _sq8_scored. Recall is pytest-gated
+    against the exact brute-force tier."""
+    return _topk_frame(spark, _sq8_scored(spark, sf_dir, k, query_vec_id))
 
 
 RP_DIM = 16  # Johnson-Lindenstrauss target dimension (64 -> 16)
@@ -1394,10 +1298,9 @@ def rp_topk(
         .select("vec_id")
     )
     emb = _emb_double(load_table(spark, sf_dir, "embeddings"))
-    # exact re-rank against the literal query array — the same
-    # literal-carrier shape (and bit-identical arithmetic: left-to-right
-    # fold, IEEE sqrt) as sq8_topk's re-rank, one fewer per-call
-    # parquet-scan + broadcast subtree
+    # exact re-rank against the literal query array (left-to-right fold,
+    # IEEE sqrt in-plan): one fewer per-call parquet-scan + broadcast
+    # subtree than joining the query row
     qn = sum(v * v for v in qrow) ** 0.5
     if qn <= 0.0:
         raise ValueError(f"query vector {query_vec_id} has zero norm")
@@ -1420,6 +1323,16 @@ def rp_topk(
 BATCH_QUERY_IDS = [0, 7, 21]
 
 
+def _batch_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ivf_topk_batch over the BATCH_QUERY_IDS corpus vectors."""
+    queries = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id").isin(BATCH_QUERY_IDS))
+        .selectExpr("vec_id AS query_id", "embedding")
+    )
+    return ivf_topk_batch(spark, sf_dir, queries)
+
+
 def ann_topk_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The approximate-index family under one rows-only slot, one row
     shape (kind, vec_id, label, cosine): the persisted-IVF probe
@@ -1438,12 +1351,7 @@ def ann_topk_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     rp = rp_topk(spark, sf_dir).select(
         F.lit("rp").alias("kind"), "vec_id", "label", "cosine"
     )
-    qs = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id").isin(BATCH_QUERY_IDS))
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
-    batch = ivf_topk_batch(spark, sf_dir, qs).select(
+    batch = _batch_ivf_topk(spark, sf_dir).select(
         F.concat(F.lit("batch:"), F.col("query_id")).alias("kind"),
         "vec_id",
         "label",
@@ -1461,11 +1369,13 @@ def ann_topk_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 # while IVF needed 12 of 20 probes to reach 0.91 (cell pruning discards
 # true neighbors when neighbors don't align with cells); on a WELL-
 # SEPARATED corpus IVF hit 0.93 at 2 probes (pruning pays exactly there).
-# ann_topk_auto turns that lesson into the default: a cheap sampled
-# cell-concentration probe decides the regime, SQ8 unless the corpus is
-# demonstrably clustered, in which case IVF with a probe count sized to a
-# target recall ON THE SAMPLE. Existing driver slots (ivf_topk, sq8_topk,
-# ann_topk_variants) are untouched — this is the frame-level default for
+# ann_topk_auto_rows turns that lesson into the default and is the only
+# code that reads the probe's route: a cheap sampled cell-concentration
+# probe decides the regime, SQ8 unless the corpus is demonstrably
+# clustered, in which case IVF with a probe count sized to
+# ANN_TARGET_RECALL ON THE SAMPLE. /similar serves its rows and
+# ann_topk_auto wraps them in a DataFrame; the driver slots (ivf_topk,
+# sq8_topk, ann_topk_variants) do not route — this is the default for
 # callers who don't know their corpus.
 
 ANN_PROBE_SAMPLE = 512  # vectors collected for the probe (sample_n x d
@@ -1473,6 +1383,7 @@ ANN_PROBE_SAMPLE = 512  # vectors collected for the probe (sample_n x d
 ANN_PROBE_QUERIES = 64  # sample rows treated as queries
 ANN_CLUSTERED_MIN_RECALL = 0.6  # 1-probe sample recall above which the
 #   corpus counts as clustered (measured: 0.93 planted vs 0.20 sf1 noise)
+ANN_TARGET_RECALL = 0.9  # sample recall the routed IVF probe count targets
 
 
 def ann_regime_probe(
@@ -1480,7 +1391,7 @@ def ann_regime_probe(
     sf_dir: str,
     sample_n: int = ANN_PROBE_SAMPLE,
     k: int = TOPK,
-    target_recall: float = 0.9,
+    target_recall: float = ANN_TARGET_RECALL,
 ) -> dict:
     """Sampled cell-concentration probe: is this corpus's neighbor
     structure aligned with its IVF cells?
@@ -1508,6 +1419,7 @@ def ann_regime_probe(
     return artifacts.get_or_build(
         spark, "ann_route", (sf_dir, sample_n, k, target_recall),
         lambda: _ann_regime_probe(spark, sf_dir, sample_n, k, target_recall),
+        state=_emb_state(spark, sf_dir),
     )
 
 
@@ -1524,14 +1436,12 @@ def _ann_regime_probe(
         .limit(sample_n)
         .collect()
     )
-    m = np.array([r.embedding for r in rows], dtype=np.float64)
-    if len(m) < 2:
+    if len(rows) < 2:
         raise ValueError(
-            f"ann_regime_probe needs >= 2 sample vectors, got {len(m)}"
+            f"ann_regime_probe needs >= 2 sample vectors, got {len(rows)}"
         )
-    m /= np.linalg.norm(m, axis=1, keepdims=True)
-    cell_sims = m @ cents.T  # (n, n_cells)
-    assign = np.argmax(cell_sims, axis=1)
+    m, assign = _assign_cells([r.embedding for r in rows], cents)
+    cell_sims = m @ cents.T  # (n, n_cells), ranks each query's cells
     sims = m @ m.T
     np.fill_diagonal(sims, -np.inf)
     n_q = min(ANN_PROBE_QUERIES, len(m))
@@ -1562,37 +1472,42 @@ def _ann_regime_probe(
     }
 
 
-def ann_topk_auto(
+def ann_topk_auto_rows(
     spark: SparkSession,
     sf_dir: str,
     k: int = TOPK,
     query_vec_id: int = QUERY_VEC_ID,
-    target_recall: float = 0.9,
-    serving: bool = False,
-) -> DataFrame:
-    """Regime-routed ANN top-k — the recommended default when the
-    corpus's neighbor structure is unknown: SQ8 (measured regime-
-    independent at 4x compression) unless ann_regime_probe finds the
-    corpus clustered, then IVF with the probe count the sample says
-    reaches ``target_recall`` (cell pruning reads probes/n_cells of the
+) -> list[list]:
+    """Regime-routed ANN top-k as JSON-ready [vec_id, label, cosine]
+    rows — the recommended default when the corpus's neighbor structure
+    is unknown, and the /similar endpoint's query: SQ8 (measured
+    regime-independent at 4x compression) unless ann_regime_probe finds
+    the corpus clustered, then IVF with the probe count the sample says
+    reaches ANN_TARGET_RECALL (cell pruning reads probes/n_cells of the
     data — strictly cheaper than SQ8's full code scan when it applies).
-    Output shape is the tiers' common (vec_id, label, cosine)."""
-    probe = ann_regime_probe(spark, sf_dir, k=k, target_recall=target_recall)
+    Either route runs one Spark job once the probe and the query vector
+    are cached."""
+    probe = ann_regime_probe(spark, sf_dir, k=k)
     if probe["route"] == "ivf":
-        return ivf_topk(
+        df = ivf_topk(
             spark,
             sf_dir,
             query_vec_id=query_vec_id,
             n_probes=probe["probes_for_target"],
             k=k,
         )
-    if serving:
-        # row-identical single-job twin (see sq8_topk_serving) — the
-        # point-lookup latency shape for the /similar endpoint
-        return sq8_topk_serving(spark, sf_dir, k=k, query_vec_id=query_vec_id)
-    return sq8_topk(spark, sf_dir, k=k, query_vec_id=query_vec_id).select(
-        "vec_id", "label", "cosine"
-    )
+        return [list(r) for r in df.collect()]
+    return [list(t) for t in _sq8_scored(spark, sf_dir, k, query_vec_id)]
+
+
+def ann_topk_auto(
+    spark: SparkSession,
+    sf_dir: str,
+    k: int = TOPK,
+    query_vec_id: int = QUERY_VEC_ID,
+) -> DataFrame:
+    """ann_topk_auto_rows as a (vec_id, label, cosine) DataFrame."""
+    return _topk_frame(spark, ann_topk_auto_rows(spark, sf_dir, k, query_vec_id))
 
 
 def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2002,13 +1917,7 @@ SECTIONS = {
         "ivf": ivf_topk_indexed,
         "sq8": sq8_topk,
         "rp": rp_topk,
-        "batch": lambda s, d: ivf_topk_batch(
-            s,
-            d,
-            load_table(s, d, "embeddings")
-            .filter(F.col("vec_id").isin(BATCH_QUERY_IDS))
-            .selectExpr("vec_id AS query_id", "embedding"),
-        ),
+        "batch": _batch_ivf_topk,
     },
     "sim_topk_centroids": {
         "topk": cosine_topk,

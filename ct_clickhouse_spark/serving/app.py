@@ -80,9 +80,10 @@ def create_app(
 
     ``embeddings_sf_dir`` (optional) enables ``/similar/<vec_id>``:
     regime-routed ANN top-k over that directory's embeddings table via
-    ann_topk_auto — the serving face of the ANN tier. Beyond the
-    reference's 8 endpoints (its ClickHouse schema has no vector
-    column); omitted -> the route 404s."""
+    ann_topk_auto_rows, the ANN tier's one router (IVF or SQ8, one
+    Spark job a request). Beyond the reference's 8 endpoints (its
+    ClickHouse schema has no vector column); omitted -> the route
+    404s."""
     if not HAVE_FLASK:
         raise NotImplementedError("flask not installed; serving layer unavailable")
 
@@ -308,11 +309,10 @@ def create_app(
 
         try:
             # the regime probe inside is cached per (session, sf,
-            # params): only the first request pays it; every later one
-            # runs just the routed tier's query under this request's
-            # FAIR pool. Rows come back directly (no result-DataFrame
-            # round trip — sq8's serving shape is one job + a driver
-            # re-rank, row-identical to the batch tier by test)
+            # params) and re-run when the embeddings change: only the
+            # first request pays it; every later one runs just the
+            # routed tier's one job under this request's FAIR pool.
+            # Rows come back directly, with no result DataFrame
             rows = ann_topk_auto_rows(
                 spark, embeddings_sf_dir, k=k, query_vec_id=vec_id
             )

@@ -96,6 +96,7 @@ def main() -> int:
     import numpy as np
 
     from ct_clickhouse_spark.operators.similarity import (
+        ANN_TARGET_RECALL,
         ann_regime_probe,
         ann_topk_auto,
     )
@@ -156,7 +157,7 @@ def main() -> int:
         "n": N,
         "d": D,
         "k": K,
-        "target_recall": 0.9,
+        "target_recall": ANN_TARGET_RECALL,
         "threshold_cell_recall": 0.6,
         "sweep": sweep,
     }

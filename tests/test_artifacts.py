@@ -238,7 +238,7 @@ INDEX_ARTIFACTS = {
     "lm_maps", "media", "minhash_sig", "mutation_frames", "query_vectors",
     "resize", "rollup_cms", "rollup_hist", "rollup_kmv", "rowcount",
     "scan_width", "serving_table", "shingles", "simhash", "span_grams", "sq8",
-    "sq8_serving", "table",
+    "table",
 }
 
 

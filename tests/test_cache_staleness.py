@@ -1,10 +1,9 @@
-"""Staleness enforcement for the embedding-derived serving artifacts (r13
-verdict #5): the query-vector, SQ8 and SQ8-serving artifacts were keyed
-on (session, sf_dir) under a DOCUMENTED immutable-fixture assumption;
-they now carry the `path_state` fingerprint of the embeddings path as
-their registry state and re-resolve when a rewrite lands. These tests rewrite an embedding dir in
-place and observe the re-resolution — without the fingerprint they fail
-by serving the stale vector.
+"""Staleness enforcement for the embedding-derived artifacts (r13
+verdict #5): the query vectors, the SQ8 index, the IVF centroids and
+the ANN route carry the `path_state` fingerprint of the embeddings path
+as their registry state and re-resolve when a rewrite lands. These
+tests rewrite an embedding dir in place and observe the re-resolution —
+without the fingerprint they fail by serving the stale artifact.
 """
 
 from __future__ import annotations
@@ -69,34 +68,57 @@ def test_query_vector_reresolves_after_rewrite(spark, emb_dir):
     )
 
 
-def test_sq8_serving_index_reresolves_after_rewrite(spark, emb_dir):
-    from ct_clickhouse_spark.operators.similarity import _sq8_serving_index
+def test_sq8_cached_reresolves_after_rewrite(spark, emb_dir):
+    from ct_clickhouse_spark.operators.similarity import _sq8_index
 
     import math
 
-    codes1, scales1 = _sq8_serving_index(spark, emb_dir)
+    codes1, scales1 = _sq8_index(spark, emb_dir)
     codes1.count()
     _write_embeddings(emb_dir, scale=10.0)
-    codes2, scales2 = _sq8_serving_index(spark, emb_dir)
+    _codes2, scales2 = _sq8_index(spark, emb_dir)
     # normalized dim0 component: scale/sqrt(scale^2+1) -> 0.707 at 1x,
     # 0.995 at 10x — a stale cache keeps the old per-dim scale
     assert scales2[0] == pytest.approx(10.0 / math.sqrt(101.0), rel=1e-3), (
-        "stale sq8_serving entry served after the embeddings "
-        "path changed"
+        "stale sq8 entry served after the embeddings path changed"
     )
     assert scales1[0] == pytest.approx(1.0 / math.sqrt(2.0), rel=1e-3)
 
 
-def test_sq8_cached_reresolves_after_rewrite(spark, emb_dir):
-    from ct_clickhouse_spark.operators.similarity import _sq8_cached
+def test_centroids_reresolve_after_rewrite(spark, emb_dir):
+    from ct_clickhouse_spark.operators.similarity import _ivf_centroids
 
     import math
 
-    _codes1, scales1 = _sq8_cached(spark, emb_dir)
-    assert scales1[0] == pytest.approx(1.0 / math.sqrt(2.0), rel=1e-3)
+    # every vector points along (scale, 1): the first cell's centroid is
+    # that unit direction
+    assert _ivf_centroids(spark, emb_dir)[0][0] == pytest.approx(
+        1.0 / math.sqrt(2.0), rel=1e-6
+    )
     _write_embeddings(emb_dir, scale=10.0)
-    _codes2, scales2 = _sq8_cached(spark, emb_dir)
-    assert scales2[0] == pytest.approx(10.0 / math.sqrt(101.0), rel=1e-3)
+    assert _ivf_centroids(spark, emb_dir)[0][0] == pytest.approx(
+        10.0 / math.sqrt(101.0), rel=1e-6
+    ), "stale centroids served after the embeddings path changed"
+
+
+def test_ann_route_reprobes_after_rewrite(spark, emb_dir):
+    # nothing else reads the directory between the rewrite and the probe,
+    # so only the route's own fingerprint can notice the rewrite
+    from ct_clickhouse_spark import artifacts
+    from ct_clickhouse_spark.operators.similarity import ann_regime_probe
+
+    def builds():
+        return artifacts.stats().get("ann_route", {}).get("builds", 0)
+
+    ann_regime_probe(spark, emb_dir)
+    before = builds()
+    ann_regime_probe(spark, emb_dir)
+    assert builds() == before  # unchanged path: a cache hit
+    _write_embeddings(emb_dir, scale=10.0)
+    ann_regime_probe(spark, emb_dir)
+    assert builds() == before + 1, (
+        "stale ann_route served after the embeddings path changed"
+    )
 
 
 def test_unchanged_path_is_a_cache_hit(spark, emb_dir):

@@ -464,7 +464,7 @@ def test_sq8_codes_are_int8_and_candidates_prune(spark):
 
     from ct_clickhouse_spark.catalog import load_table
 
-    codes, scales = similarity._sq8_cached(spark, SF_DIR)
+    codes, scales = similarity._sq8_index(spark, SF_DIR)
     assert dict(codes.dtypes)["codes"] == "array<tinyint>"
     assert len(scales) == similarity.EMBED_DIM
     # every code must be representable in int8 (symmetric scheme)
