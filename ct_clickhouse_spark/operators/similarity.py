@@ -9,7 +9,8 @@ The tiers, mirroring how ANN serving actually scales:
    bucket-local candidate generation, exact cosine verification only on
    candidates. Recall/precision tuned by bits-per-band vs band count.
 4. IVF (coarse quantizer + probed buckets) — the partition-pruning ANN
-   path: assignment is a partition key, a probe reads 2/8 of the data.
+   path: one persisted index per embeddings state stores each vector's
+   home cell as a partition key, so a probe reads n_probes/cells of it.
 5. SQ8 (int8 scalar codes) — one TakeOrdered job scores the codes and
    returns k·SQ8_REFINE candidates with their vectors; the exact re-rank
    runs on the driver.
@@ -123,12 +124,12 @@ def _gemm_blocks(n_rows: int) -> int:
 # artifact cache.
 #
 # STALENESS ENFORCED (r13 verdict #5 — was a documented immutable-fixture
-# assumption): this cache, the SQ8 index, the IVF centroids and the ANN
-# route below carry the `path_state` fingerprint of the embeddings path
-# they were resolved from as their registry state; a fingerprint
-# mismatch (a rewrite/
-# compaction/mutation landed) invalidates the directory's artifacts and
-# table memos, and re-resolves. The probe is a TTL-memoized directory
+# assumption): this cache, the SQ8 index, the IVF centroids and index
+# and the ANN route below carry the `path_state` fingerprint of the
+# embeddings path they were resolved from as their registry state; a
+# fingerprint mismatch (a rewrite/compaction/mutation landed)
+# invalidates the directory's artifacts and table memos, and
+# re-resolves. The probe is a TTL-memoized directory
 # fingerprint (_emb_state) — amortized noise next to the Spark job it
 # guards.
 QVEC_CACHE_MAX_IDS = 4096
@@ -177,6 +178,20 @@ def _query_vector(spark: SparkSession, sf_dir: str, vec_id: int) -> list:
             vecs.pop(next(iter(vecs)))
         vecs[vec_id] = v
     return v
+
+
+def _query_norm(qrow, query_vec_id: int) -> float:
+    """The query vector's L2 norm as Spark computes it in plan: a
+    left-to-right sum of squares (aggregate()'s fold order), then the
+    correctly rounded math.sqrt (python's ``** 0.5`` is C pow, which can
+    land one ULP off). A zero vector raises ValueError: every cosine
+    against it is undefined, not 'low'."""
+    import math
+
+    qn = math.sqrt(sum(x * x for x in qrow))
+    if qn <= 0.0:
+        raise ValueError(f"query vector {query_vec_id} has zero norm")
+    return qn
 
 
 def cosine_pairs(
@@ -611,9 +626,10 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str):
     leak into assignments — keeping the index deterministic at any
     parallelism. Nothing larger than k x d doubles is ever centralized,
     at any corpus size. Trained once per (session, sf): deterministic, so
-    every consumer would retrain the identical array: the IVF build, the
-    SemDeDup assignment and per-call ivf_topk. Same `path_state`
-    staleness enforcement as the query vectors."""
+    every consumer would retrain the identical array: the IVF index
+    build, the SemDeDup assignment and the router's probe. An empty
+    table has no cells: a (0, 0) array. Same `path_state` staleness
+    enforcement as the query vectors."""
     return artifacts.get_or_build(
         spark, "centroids", (sf_dir,), lambda: _train_ivf_centroids(spark, sf_dir),
         state=_emb_state(spark, sf_dir),
@@ -627,6 +643,8 @@ def _train_ivf_centroids(spark: SparkSession, sf_dir: str):
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n_clusters = _adaptive_clusters(table_rowcount(spark, sf_dir, "embeddings"))
     seed_rows = emb.orderBy("vec_id").limit(n_clusters).collect()
+    if not seed_rows:  # empty table: no cells
+        return np.empty((0, 0))
     cents = np.array([r.embedding for r in seed_rows], dtype=np.float64)
     cents /= np.linalg.norm(cents, axis=1, keepdims=True)
 
@@ -684,57 +702,26 @@ def ivf_topk(
     spark: SparkSession,
     sf_dir: str,
     query_vec_id: int = QUERY_VEC_ID,
-    n_probes: int | None = None,
+    n_probes: int = IVF_PROBES,
     k: int = TOPK,
 ) -> DataFrame:
     """IVF approximate top-k (the other classic ANN scale path, besides
-    LSH): vectors are bucketed by nearest coarse centroid; the query
-    probes only its ``n_probes`` (default IVF_PROBES) closest buckets
-    and runs exact cosine there. At scale the assignment is a partition
-    key — the probe reads n_probes/IVF_CLUSTERS of the data instead of
-    all of it. Training is distributed (see _ivf_centroids); only the k
-    centroids and the single query vector are broadcast."""
-    import numpy as np
-    import pandas as pd
-
-    if n_probes is not None and n_probes < 1:
+    LSH) against a corpus vector, the query excluded: the query ranks
+    the coarse centroids and probes its ``n_probes`` closest cells of
+    the persisted index (_ivf_index), running exact cosine over those
+    cluster partitions only (ivf_probe) — the scan reads about
+    n_probes/cells of the corpus. The index is built once per
+    embeddings state; after that a call runs one Spark job. A zero query
+    vector raises ValueError, an unknown id IndexError."""
+    if n_probes < 1:
         raise ValueError(f"n_probes must be >= 1, got {n_probes}")
-    cents = _ivf_centroids(spark, sf_dir)
-    qvec = np.array(_query_vector(spark, sf_dir, query_vec_id), dtype=np.float64)
-    qvec /= np.linalg.norm(qvec)
-    probe = set(
-        np.argsort(-(cents @ qvec))[
-            : (IVF_PROBES if n_probes is None else n_probes)
-        ].tolist()
-    )
-    bc_cents = spark.sparkContext.broadcast((cents, probe, qvec))
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-
-    def _search(batches):
-        cents_, probe_, q = bc_cents.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m, assign = _assign_cells(pdf["embedding"].tolist(), cents_)
-            in_probe = np.isin(assign, list(probe_)) & (
-                pdf["vec_id"].to_numpy() != query_vec_id
-            )
-            if not in_probe.any():
-                continue
-            sims = np.round(m[in_probe] @ q, 4)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy()[in_probe],
-                    "label": pdf["label"].to_numpy()[in_probe],
-                    "cosine": sims,
-                }
-            )
-
-    return (
-        emb.mapInPandas(_search, "vec_id long, label int, cosine double")
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(k)
+    # the query vector first: a staleness drop it triggers lands before
+    # the index is resolved, never between resolving it and its scan
+    qvec = _query_vector(spark, sf_dir, query_vec_id)
+    _query_norm(qvec, query_vec_id)
+    return ivf_probe(
+        spark, _ivf_index(spark, sf_dir), qvec, k=k,
+        exclude_vec_id=query_vec_id, n_probes=n_probes,
     )
 
 
@@ -753,22 +740,23 @@ def ivf_topk_batch(
     ``queries``: (query_id long, embedding array<float>). Returns
     (query_id, rank, vec_id, label, cosine) with rank 1..k per query.
 
-    Plan: queries assign map-side to their ``probes`` nearest coarse
-    cells (the multi-probe recall lever); corpus vectors assign to their
-    one home cell (the same rule the persisted index materializes as a
-    partition key). ONE shuffle co-locates each cell's corpus slice with
-    the queries probing it; a dense numpy kernel scores cell-locally and
-    emits each query's local top-k; a final window keeps the global
-    top-k per query. Nothing all-pairs: cost is
-    O(n_queries * probes * cell_size * d) kernel work + one shuffle of
-    corpus + query rows — and cells stay bounded because the cluster
-    count is size-adaptive (_adaptive_clusters). Exactness caveat is
-    IVF's usual one: recall only (a neighbor is missed iff its home cell
-    is unprobed), pytest-pinned against the brute-force tier."""
+    Plan: queries assign map-side to their ``probes`` nearest cells of
+    the persisted index's centroids (the multi-probe recall lever); the
+    corpus side is the index's vectors/, each row already carrying its
+    home ``cluster`` (_ivf_index). ONE shuffle co-locates each cell's
+    corpus slice with the queries probing it; a dense numpy kernel
+    scores cell-locally and emits each query's local top-k, cut by
+    (-cosine, vec_id); a final window keeps the global top-k per query.
+    Nothing all-pairs: cost is O(n_queries * probes * cell_size * d)
+    kernel work + one shuffle of corpus + query rows — and cells stay
+    bounded because the cluster count is size-adaptive
+    (_adaptive_clusters). Exactness caveat is IVF's usual one: recall
+    only (a neighbor is missed iff its home cell is unprobed),
+    pytest-pinned against the brute-force tier."""
     import numpy as np
     import pandas as pd
 
-    cents = _ivf_centroids(spark, sf_dir)
+    _path, cents, vectors = _ivf_index(spark, sf_dir)
     bc = spark.sparkContext.broadcast(cents)
 
     def _assign_queries(batches):
@@ -786,25 +774,15 @@ def ivf_topk_batch(
             out.insert(3, "label", -1)
             yield out[["cluster", "is_query", "vec_id", "label", "query_id", "embedding"]]
 
-    def _assign_corpus(batches):
-        c = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = pdf[["vec_id", "label", "embedding"]].copy()
-            out.insert(0, "cluster", _assign_cells(pdf["embedding"].tolist(), c)[1])
-            out.insert(1, "is_query", False)
-            out.insert(4, "query_id", -1)
-            yield out[["cluster", "is_query", "vec_id", "label", "query_id", "embedding"]]
-
-    shape = (
+    q = queries.select("query_id", "embedding").mapInPandas(
+        _assign_queries,
         "cluster int, is_query boolean, vec_id long, label int, "
-        "query_id long, embedding array<float>"
+        "query_id long, embedding array<float>",
     )
-    q = queries.select("query_id", "embedding").mapInPandas(_assign_queries, shape)
-    corpus = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding"
-    ).mapInPandas(_assign_corpus, shape)
+    corpus = vectors.select(
+        "cluster", F.lit(False).alias("is_query"), "vec_id", "label",
+        F.lit(-1).cast("long").alias("query_id"), "embedding",
+    )
 
     empty = pd.DataFrame(
         {"query_id": [], "vec_id": [], "label": [], "cosine": []}
@@ -821,14 +799,20 @@ def ivf_topk_batch(
         cv /= np.linalg.norm(cv, axis=1, keepdims=True)
         sims = np.round(qv @ cv.T, 4)
         kk = min(k, sims.shape[1])
-        # local top-k per query within this cell — bounded output
-        top = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
+        # local top-k per query within this cell — bounded output — cut
+        # by (-cosine, vec_id): the final window cannot bring back a
+        # lower vec_id dropped here, so rows tied at the cut must not be
+        # chosen by row order
+        vids = cm["vec_id"].to_numpy()
+        top = np.lexsort(
+            (np.broadcast_to(vids, sims.shape), -sims), axis=1
+        )[:, :kk]
         rows = np.repeat(np.arange(len(qm)), kk)
         cols = top.ravel()
         return pd.DataFrame(
             {
                 "query_id": qm["query_id"].to_numpy()[rows],
-                "vec_id": cm["vec_id"].to_numpy()[cols],
+                "vec_id": vids[cols],
                 "label": cm["label"].to_numpy()[cols],
                 "cosine": sims[rows, cols],
             }
@@ -895,19 +879,31 @@ def embedding_incremental_pairs(
     )
 
 
-def ivf_build(spark: SparkSession, sf_dir: str, index_path: str) -> None:
-    """Materialize the IVF index: train the coarse quantizer once, then
-    write (a) the k centroids and (b) every vector under its assigned
-    cluster as a Hive PARTITION column. This is the piece ivf_topk's
-    per-call shape lacks at scale: with assignments on disk, a probe is
-    PARTITION PRUNING — the scan physically reads IVF_PROBES/IVF_CLUSTERS
-    of the corpus and nothing else, and training cost is paid once, not
-    per query."""
+_IVF_CENTROIDS_SCHEMA = "cluster int, centroid array<double>"
+_IVF_VECTORS_SCHEMA = "vec_id long, label int, embedding array<float>, cluster int"
+
+
+def ivf_build(spark: SparkSession, sf_dir: str, index_path: str):
+    """Materialize the IVF index under ``index_path``: the trained
+    centroids (_ivf_centroids) in centroids/, and every vector under its
+    home cell (_assign_cells) as the Hive PARTITION column ``cluster`` in
+    vectors/. With the assignments on disk a probe is PARTITION PRUNING
+    — the scan reads only the probed cells — and the n x cells
+    assignment is paid once per index, not per query. Returns the
+    centroid array it wrote; _ivf_index keeps one index per embeddings
+    state."""
+    import pandas as pd
+
     cents = _ivf_centroids(spark, sf_dir)
     (
+        # from pandas, so the k rows cross through Arrow: a list of
+        # tuples runs a Python parallelize job (1.0 s against 0.2 s on 4
+        # local cores), and the build sits on the first /similar
         spark.createDataFrame(
-            [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
-            "cluster int, centroid array<double>",
+            pd.DataFrame(
+                {"cluster": range(len(cents)), "centroid": [c.tolist() for c in cents]}
+            ),
+            _IVF_CENTROIDS_SCHEMA,
         )
         .coalesce(1)
         .write.mode("overwrite")
@@ -928,49 +924,73 @@ def ivf_build(spark: SparkSession, sf_dir: str, index_path: str) -> None:
         "vec_id", "label", "embedding"
     )
     (
-        emb.mapInPandas(
-            _assign, "vec_id long, label int, embedding array<float>, cluster int"
-        )
+        emb.mapInPandas(_assign, _IVF_VECTORS_SCHEMA)
         .write.mode("overwrite")
         .partitionBy("cluster")
         .parquet(index_path + "/vectors")
+    )
+    return cents
+
+
+def _ivf_vectors(spark: SparkSession, index_path: str) -> DataFrame:
+    """The partitioned scan of an index's vectors/, read with an explicit
+    schema so the index of an empty table (no partition directories)
+    reads as zero rows."""
+    return spark.read.schema(_IVF_VECTORS_SCHEMA).parquet(index_path + "/vectors")
+
+
+def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple:
+    """The persisted IVF index of ``sf_dir``'s embeddings as (path,
+    centroids, vectors scan): the one corpus-side home-cell assignment,
+    built once per embeddings state by ivf_build and read by every IVF
+    search. Holding the scan saves each query re-listing the index
+    directory. Same `path_state` staleness enforcement as the query
+    vectors; the directory is removed when the entry leaves the registry
+    and at interpreter exit."""
+
+    def build() -> tuple:
+        path = artifacts.mkdtemp("ivf_index_")
+        cents = ivf_build(spark, sf_dir, path)
+        return path, cents, _ivf_vectors(spark, path)
+
+    return artifacts.get_or_build(
+        spark, "ivf_index", (sf_dir,), build,
+        release=lambda index: artifacts.remove_dir(index[0]),
+        state=_emb_state(spark, sf_dir),
     )
 
 
 def ivf_probe(
     spark: SparkSession,
-    index_path: str,
+    index,
     query_vec,
     k: int = TOPK,
     exclude_vec_id: int | None = None,
+    n_probes: int = IVF_PROBES,
 ) -> DataFrame:
-    """Top-k over the persisted IVF index: rank centroids on the driver
-    (k rows), then scan ONLY the probed cluster partitions (the filter on
-    the partition column prunes at planning time — verify PartitionFilters
-    in .explain) and run exact cosine there. ``exclude_vec_id`` drops one
-    id before the top-k (the query vector itself, for self-search)."""
+    """Top-k over a persisted IVF index: rank the centroids on the
+    driver, then scan ONLY the ``n_probes`` nearest cluster partitions
+    (the filter on the partition column prunes at planning time — verify
+    PartitionFilters in .explain) and run exact cosine there.
+    ``exclude_vec_id`` drops one id before the top-k (the query vector
+    itself, for self-search). ``index`` is an _ivf_index entry, or the
+    directory ivf_build wrote, whose centroids/ is then read."""
     import numpy as np
     import pandas as pd
 
-    from ..catalog import path_state
-
-    # the centroid table is part of the persisted index ARTIFACT
-    # (immutable once built — rebuilds land in a fresh tmpdir), so the
-    # per-call collect job it cost (~0.6 s/probe: one scheduling-floor
-    # Spark job to fetch n_cells rows) is memoized per (session, index
-    # path, path_state fingerprint); driver-side centroid RANKING below
-    # stays per-call (it depends on the query).
-    def build():
-        rows = spark.read.parquet(index_path + "/centroids").orderBy("cluster").collect()
-        return np.array([r.centroid for r in rows], dtype=np.float64)
-
-    cents = artifacts.get_or_build(
-        spark, "ivf_probe_centroids",
-        (index_path, path_state(index_path + "/centroids")), build,
-    )
+    if isinstance(index, str):
+        rows = (
+            spark.read.schema(_IVF_CENTROIDS_SCHEMA)
+            .parquet(index + "/centroids")
+            .orderBy("cluster")
+            .collect()
+        )
+        cents = np.array([r.centroid for r in rows], dtype=np.float64)
+        index = (index, cents, _ivf_vectors(spark, index))
+    _path, cents, vectors = index
     q = np.array(query_vec, dtype=np.float64)
     q /= np.linalg.norm(q)
-    probe = [int(c) for c in np.argsort(-(cents @ q))[:IVF_PROBES]]
+    probe = [int(c) for c in np.argsort(-(cents @ q))[:n_probes]]
     bq = spark.sparkContext.broadcast(q)
 
     def _score(batches):
@@ -988,9 +1008,7 @@ def ivf_probe(
                 }
             )
 
-    vectors = spark.read.parquet(index_path + "/vectors").filter(
-        F.col("cluster").isin(probe)
-    )
+    vectors = vectors.filter(F.col("cluster").isin(probe))
     if exclude_vec_id is not None:
         vectors = vectors.filter(F.col("vec_id") != exclude_vec_id)
     return (
@@ -999,30 +1017,6 @@ def ivf_probe(
         .orderBy(F.col("cosine").desc(), "vec_id")
         .limit(k)
     )
-
-
-def ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The driver-slot IVF query: build the persisted index ONCE per
-    (session, sf-dir) via ivf_build, then answer through ivf_probe — so
-    the driver row exercises the partition-pruned path (PartitionFilters
-    on the cluster column, test-asserted in tests/test_ivf_index.py)
-    instead of retraining centroids per call. Same output contract as
-    ivf_topk: top-k against the vec_id=0 query vector, query excluded.
-
-    The cached object is the index path, not data; repeated probes pay
-    the partition-pruned scan only, exactly the at-scale serving shape.
-    The dir is removed on eviction and at interpreter exit."""
-
-    def build() -> str:
-        path = artifacts.mkdtemp("ivf_index_")
-        ivf_build(spark, sf_dir, path)
-        return path
-
-    path = artifacts.get_or_build(
-        spark, "ivf_index", (sf_dir,), build, release=artifacts.remove_dir
-    )
-    qvec = _query_vector(spark, sf_dir, QUERY_VEC_ID)
-    return ivf_probe(spark, path, qvec, exclude_vec_id=QUERY_VEC_ID)
 
 
 # --- SQ8 scalar quantization (FAISS-SQ8 analog) -------------------------
@@ -1129,16 +1123,15 @@ def _sq8_scored(
     TakeOrdered job collects the k*SQ8_REFINE best candidates with their
     vectors; the driver re-ranks them exactly, bit-identical to
     cosine_topk's in-plan round(cosine, 4): the left-to-right sum is
-    aggregate()'s fold order, math.sqrt is IEEE-exact like Spark's sqrt,
-    and _round_half_up4 is Spark's round. Recall and bit-identity are
+    aggregate()'s fold order, math.sqrt is IEEE-exact like Spark's sqrt
+    (_query_norm for the query side), and _round_half_up4 is Spark's
+    round. Recall and bit-identity are
     pytest-gated against the exact tier."""
     import math
 
     codes, scales = _sq8_index(spark, sf_dir)
     qrow = _query_vector(spark, sf_dir, query_vec_id)
-    qn = math.sqrt(sum(x * x for x in qrow))
-    if qn <= 0.0:  # zero vector: every cosine is undefined, not 'low'
-        raise ValueError(f"query vector {query_vec_id} has zero norm")
+    qn = _query_norm(qrow, query_vec_id)
     qnorm = [x / qn for x in qrow]
     # w_d = q_code_d * scale_d^2 / 127^2, so sum(code_d * w_d) ~= cosine
     weights = [
@@ -1301,9 +1294,7 @@ def rp_topk(
     # exact re-rank against the literal query array (left-to-right fold,
     # IEEE sqrt in-plan): one fewer per-call parquet-scan + broadcast
     # subtree than joining the query row
-    qn = sum(v * v for v in qrow) ** 0.5
-    if qn <= 0.0:
-        raise ValueError(f"query vector {query_vec_id} has zero norm")
+    qn = _query_norm(qrow, query_vec_id)
     cos = F.expr(
         f"aggregate(zip_with(emb, {_dbl_array_sql(qrow)}, "
         "(x, y) -> x * y), 0.0D, (s, v) -> s + v) / "
@@ -1335,14 +1326,14 @@ def _batch_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ann_topk_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The approximate-index family under one rows-only slot, one row
-    shape (kind, vec_id, label, cosine): the persisted-IVF probe
-    (partition-pruned scan), the SQ8 scalar-quantized search (int8
+    shape (kind, vec_id, label, cosine): the IVF search (partition-pruned
+    scan of the persisted index), the SQ8 scalar-quantized search (int8
     code-domain scoring + exact re-rank), the Johnson-Lindenstrauss
     random-projection search (16-dim scoring + exact re-rank), and the
     BATCHED multi-query search ('batch:<query_id>' rows — one
     distributed pass answers all three queries, the ANN serving shape).
     All are pytest-gated on recall/identity against the exact tier."""
-    ivf = ivf_topk_indexed(spark, sf_dir).select(
+    ivf = ivf_topk(spark, sf_dir).select(
         F.lit("ivf").alias("kind"), "vec_id", "label", "cosine"
     )
     sq8 = sq8_topk(spark, sf_dir).select(
@@ -1372,8 +1363,10 @@ def ann_topk_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ann_topk_auto_rows turns that lesson into the default and is the only
 # code that reads the probe's route: a cheap sampled cell-concentration
 # probe decides the regime, SQ8 unless the corpus is demonstrably
-# clustered, in which case IVF with a probe count sized to
-# ANN_TARGET_RECALL ON THE SAMPLE. /similar serves its rows and
+# clustered, in which case ivf_topk probes the persisted IVF index with a
+# probe count sized to ANN_TARGET_RECALL ON THE SAMPLE. The index is
+# built once per embeddings state, so only the first IVF-routed request
+# after a change pays its write job. /similar serves its rows and
 # ann_topk_auto wraps them in a DataFrame; the driver slots (ivf_topk,
 # sq8_topk, ann_topk_variants) do not route — this is the default for
 # callers who don't know their corpus.
@@ -1485,8 +1478,8 @@ def ann_topk_auto_rows(
     the corpus clustered, then IVF with the probe count the sample says
     reaches ANN_TARGET_RECALL (cell pruning reads probes/n_cells of the
     data — strictly cheaper than SQ8's full code scan when it applies).
-    Either route runs one Spark job once the probe and the query vector
-    are cached."""
+    Either route runs one Spark job once the probe, the query vector and
+    the route's index are built."""
     probe = ann_regime_probe(spark, sf_dir, k=k)
     if probe["route"] == "ivf":
         df = ivf_topk(
@@ -1914,7 +1907,7 @@ SECTIONS = {
         ),
     },
     "sim_ivf_topk": {
-        "ivf": ivf_topk_indexed,
+        "ivf": ivf_topk,
         "sq8": sq8_topk,
         "rp": rp_topk,
         "batch": _batch_ivf_topk,

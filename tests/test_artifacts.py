@@ -234,11 +234,10 @@ def test_delete_where_is_visible_to_the_next_load_table(spark, tmp_path):
 INDEX_ARTIFACTS = {
     "ann_route", "audio_signatures", "bigram_lm", "bloom_dim", "bpe_merges",
     "centroids", "cert_domains", "corpus_bloom", "doc_base", "emb_state",
-    "group_bounds", "image_signatures", "ivf_index", "ivf_probe_centroids",
-    "lm_maps", "media", "minhash_sig", "mutation_frames", "query_vectors",
-    "resize", "rollup_cms", "rollup_hist", "rollup_kmv", "rowcount",
-    "scan_width", "serving_table", "shingles", "simhash", "span_grams", "sq8",
-    "table",
+    "group_bounds", "image_signatures", "ivf_index", "lm_maps", "media",
+    "minhash_sig", "mutation_frames", "query_vectors", "resize",
+    "rollup_cms", "rollup_hist", "rollup_kmv", "rowcount", "scan_width",
+    "serving_table", "shingles", "simhash", "span_grams", "sq8", "table",
 }
 
 
@@ -280,3 +279,35 @@ def test_registry_holds_only_index_artifacts():
     for path in sorted(PACKAGE.rglob("*.py")):
         found |= _registry_names(ast.parse(path.read_text(), filename=str(path)))
     assert found == INDEX_ARTIFACTS
+
+
+# Every function that calls the cell-assignment rule, pinned. The corpus
+# side's home cells are assigned once, by ivf_build, into the persisted
+# IVF index every IVF search reads; the trainer assigns for its partial
+# sums, the router's probe its sample, semdedup_pairs its top-P cells and
+# ivf_topk_batch its queries. A new per-call corpus assignment fails here.
+ASSIGN_CELLS_CALLERS = {
+    "ivf_build._assign",
+    "_train_ivf_centroids._partial",
+    "_ann_regime_probe",
+    "semdedup_pairs._assign",
+    "ivf_topk_batch._assign_queries",
+}
+
+
+def _callers(node: ast.AST, name: str, scope: tuple = ()):
+    """Dotted paths of the (nested) functions that call ``name``."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, ast.Call) and name in (
+            getattr(child.func, "id", None), getattr(child.func, "attr", None)
+        ):
+            yield ".".join(scope)
+        inner = (*scope, child.name) if isinstance(child, ast.FunctionDef) else scope
+        yield from _callers(child, name, inner)
+
+
+def test_only_pinned_functions_assign_cells():
+    found: set[str] = set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        found |= set(_callers(ast.parse(path.read_text(), filename=str(path)), "_assign_cells"))
+    assert found == ASSIGN_CELLS_CALLERS

@@ -168,3 +168,20 @@ def test_lsh_plan_bounds_buckets_and_preserves_recall():
         assert n / (1 << bits) <= LSH_TARGET_BUCKET * 1.01, (n, bits)
         recall = 1.0 - (1.0 - p**bits) ** bands
         assert recall >= ref - 1e-9, (n, bits, bands, recall, ref)
+
+
+def test_query_norm_is_sparks_sqrt(spark):
+    """The driver-side query norm rp_topk and _sq8_scored share is the
+    in-plan sqrt(aggregate(...)) bit for bit, on a vector where python's
+    ``** 0.5`` (C pow) lands one ULP away from it."""
+    import math
+
+    from ct_clickhouse_spark.operators.similarity import _dbl_array_sql, _query_norm
+
+    v = [0.4917809069156647, 2.4136950969696045, 1.2318906784057617, -0.8977571725845337]
+    s = sum(x * x for x in v)
+    assert s ** 0.5 != math.sqrt(s)
+    in_plan = spark.sql(
+        f"SELECT sqrt(aggregate({_dbl_array_sql(v)}, 0.0D, (s, x) -> s + x * x)) AS n"
+    ).first().n
+    assert _query_norm(v, 0) == in_plan
