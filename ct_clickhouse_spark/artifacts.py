@@ -12,8 +12,9 @@ artifact goes through ``get_or_build``:
 
 - **Keying.** An entry lives under ``(name, session, *key)``. The session
   part is the JVM application id (``_session_key``), so a new session
-  never aliases a dead one's frames. By convention ``key[0]`` is the
-  input directory (``sf_dir``) the artifact derives from.
+  never aliases a dead one's frames. ``reads`` (required) names the
+  table paths the entry derives from; an artifact built from a frame
+  the caller passes in names the table that frame was loaded from.
 - **Bounds.** Each name holds at most ``max_entries`` entries (``None``:
   unbounded) in least-recently-used order; a hit or a re-insert moves
   the entry to the newest slot, and inserting past the bound evicts the
@@ -26,16 +27,16 @@ artifact goes through ``get_or_build``:
   truncated and a caller still holding the frame could not recompute it
   if its blocks were freed eagerly. Spark's ContextCleaner frees the
   blocks once nothing can reach them.
-- **Staleness.** ``state`` is a token of the directory ``key[0]``, such
-  as its ``catalog.path_state``. An entry built under another token
-  means that directory changed: the directory is invalidated and the
-  entry rebuilt.
-- **Invalidation.** ``invalidate(sf_dir)`` drops every entry whose
-  ``key[0]`` is ``sf_dir``. ``catalog.invalidate_table`` calls it, from
-  the staleness checks of the embeddings artifacts and from every
-  mutation operator (``plans/maintenance.py``) once its rewrite is in
-  place, so an in-engine merge, delete, update or compaction is visible
-  to the next query.
+- **Staleness.** Every lookup fingerprints each read (``path_state``),
+  with no TTL, before anything is built. An entry built under another
+  fingerprint alone is dropped and released (so the ``table`` entry's
+  ``refreshByPath`` runs before the new read), then rebuilt.
+  Stat-then-read: a write landing during a build at worst stores an old
+  fingerprint, which forces one extra rebuild.
+- **Invalidation.** ``invalidate(path)`` drops every entry that reads
+  ``path``, and no other. ``catalog.invalidate_table`` calls it
+  from every mutation operator (``plans/maintenance.py``) once its
+  rewrite is in place.
 - **Exit cleanup.** On-disk artifacts live under one per-process
   directory (``mkdtemp``), removed at interpreter exit.
 - **Locking.** One lock guards the registry's dicts. Builds and releases
@@ -48,6 +49,7 @@ artifact goes through ``get_or_build``:
 from __future__ import annotations
 
 import atexit
+import os
 import shutil
 import tempfile
 import threading
@@ -65,7 +67,7 @@ class _Shelf:
     __slots__ = ("entries", "hits", "misses", "builds", "evictions")
 
     def __init__(self) -> None:
-        # (session, *key) -> (value, state, release)
+        # (session, *key) -> (value, reads, state, release)
         self.entries: dict[tuple, tuple] = {}
         self.hits = self.misses = self.builds = self.evictions = 0
 
@@ -108,8 +110,35 @@ def _shelf(name: str) -> _Shelf:
     return shelf
 
 
+def path_state(path: str) -> tuple:
+    """Staleness fingerprint of a local table path (file OR directory):
+    (file count, total bytes, max mtime_ns), one os.stat per file. A
+    streaming append adds files, a compaction rewrites them (count,
+    size) and a mutation lands new mtimes. A missing path fingerprints
+    as (0, 0, 0), so a later write is always a change."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return (0, 0, 0)
+    if not os.path.isdir(path):
+        return (1, st.st_size, st.st_mtime_ns)
+    n = total = mx = 0
+    for root, _dirs, files in os.walk(path):
+        for fn in files:
+            try:
+                s = os.stat(os.path.join(root, fn))
+            except OSError:
+                # a rewrite can remove a file between the listing and
+                # the stat; the changed listing perturbs the fingerprint
+                continue
+            n += 1
+            total += s.st_size
+            mx = max(mx, s.st_mtime_ns)
+    return (n, total, mx)
+
+
 def _release(entries) -> None:
-    for value, _state, release in entries:
+    for value, _reads, _state, release in entries:
         if release is not None:
             try:
                 release(value)
@@ -123,31 +152,36 @@ def get_or_build(
     key: tuple,
     build,
     *,
+    reads: tuple,
     release=None,
-    state=None,
     max_entries: int | None = ARTIFACT_CACHE_MAX,
 ):
     """The value cached under ``(name, session of spark, *key)``, or the
     result of ``build()`` stored there. See the module docstring for
-    bounds, release, staleness and locking."""
+    reads, bounds, release, staleness and locking."""
+    if not reads:
+        raise ValueError(f"{name}: reads must name the tables it derives from")
+    state = tuple(path_state(p) for p in reads)
     k = (_session_key(spark), *key)
     with _LOCK:
         shelf = _shelf(name)
         hit = shelf.entries.get(k)
-        if hit is not None and hit[1] == state:
+        if hit is not None and hit[2] == state:
             shelf.entries[k] = shelf.entries.pop(k)  # most recently used
             shelf.hits += 1
             return hit[0]
         shelf.misses += 1
-    if hit is not None:  # stale: drops and releases it too
-        invalidate(key[0])
+        if hit is not None:  # stale
+            del shelf.entries[k]
+    if hit is not None:
+        _release([hit])
     value = build()
-    entry = (value, state, release)
+    entry = (value, reads, state, release)
     with _LOCK:
         shelf = _shelf(name)  # anew: it may have been cleared meanwhile
         shelf.builds += 1
         won = shelf.entries.pop(k, None)
-        if won is not None and won[1] == state:
+        if won is not None and won[2] == state:
             shelf.entries[k] = won  # a concurrent build got there first
             dropped = [entry]
             value = won[0]
@@ -161,13 +195,13 @@ def get_or_build(
     return value
 
 
-def invalidate(sf_dir: str) -> None:
-    """Drop and release every entry, of any name and session, whose
-    ``key[0]`` is ``sf_dir``."""
+def invalidate(path: str) -> None:
+    """Drop and release every entry, of any name and session, that
+    reads ``path``."""
     dropped = []
     with _LOCK:
         for shelf in _STORE.values():
-            dead = [k for k in shelf.entries if len(k) > 1 and k[1] == sf_dir]
+            dead = [k for k, e in shelf.entries.items() if path in e[1]]
             dropped.extend(shelf.entries.pop(k) for k in dead)
     _release(dropped)
 

@@ -142,44 +142,17 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def path_state(path: str) -> tuple:
-    """Cheap staleness fingerprint of a local table path (file OR
-    directory): (file count, total bytes, max mtime_ns). One os.stat per
-    file — a token that changes iff the file listing changed: a
-    streaming append adds files, a compaction rewrites them (count/size)
-    and a mutation lands new mtimes. Missing paths fingerprint as
-    (0, 0, 0) so a later write is always a change."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return (0, 0, 0)
-    if not os.path.isdir(path):
-        return (1, st.st_size, st.st_mtime_ns)
-    n = total = mx = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            try:
-                s = os.stat(os.path.join(root, fn))
-            except OSError:
-                # a rewrite can remove a file between the listing and
-                # the stat; the changed listing perturbs the fingerprint
-                continue
-            n += 1
-            total += s.st_size
-            mx = max(mx, s.st_mtime_ns)
-    return (n, total, mx)
-
-
-def invalidate_table(spark: SparkSession, sf_dir: str, name: str) -> None:
-    """Drop every artifact of ``sf_dir`` (``artifacts.invalidate``:
-    logical plans, rowcounts, probes and derived artifacts of all its
-    tables) and Spark's own cached listing/data for the table's path, so
-    the next load_table re-lists and re-reads. Reached from the
-    staleness check of the embeddings artifacts when the table's
-    ``path_state`` changes, and from the mutation operators
-    (``plans/maintenance.py``) after each rewrite."""
-    artifacts.invalidate(sf_dir)
-    _refresh_path(spark, table_path(sf_dir, name))
+def invalidate_table(spark: SparkSession, path: str) -> None:
+    """Drop the artifacts that read the table at ``path``
+    (``artifacts.invalidate``: its logical plan, row count and scan
+    width, and every artifact derived from it) and Spark's own cached
+    listing/data for the path, so the next load_table re-lists and
+    re-reads. Artifacts of the directory's other tables stay. Called by
+    the mutation operators (``plans/maintenance.py``) after each
+    rewrite."""
+    path = path.rstrip("/")
+    artifacts.invalidate(path)
+    _refresh_path(spark, path)
 
 
 def _refresh_path(spark: SparkSession, path: str) -> None:
@@ -306,27 +279,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return _normalize(df, SCHEMAS[name])
 
     return artifacts.get_or_build(
-        spark, "table", (sf_dir, name), build,
+        spark, "table", (sf_dir, name), build, reads=(path,),
         release=lambda _df: _refresh_path(spark, path), max_entries=None,
     )
 
 
 def table_rowcount(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Row count of a fixture table, memoized per (session, sf, table).
+    """Row count of a fixture table, memoized per (session, sf, table)
+    and recounted when the table changes.
 
-    Fixture tables are immutable inputs, and several operators size
-    themselves from the corpus count (GEMM tile count, SemDeDup grid
-    bits, exact-vs-LSH routing) — re-running a count() job per
-    invocation is a redundant scan for a number that cannot change
-    (r7 verdict #7). The one count that does run resolves from parquet
-    footer metadata (aggregate pushdown), so even the miss is cheap."""
+    Several operators size themselves from the corpus count (GEMM tile
+    count, SemDeDup grid bits, exact-vs-LSH routing) — re-running a
+    count() job per invocation is a redundant scan for a number that
+    changes only with the table (r7 verdict #7). The one count that does
+    run resolves from parquet footer metadata (aggregate pushdown), so
+    even the miss is cheap."""
     # plain ints need no artifact-sized bound: ARTIFACT_CACHE_MAX=4 is
     # sized for checkpointed tables, and a session sweeping >4 (sf,
     # table) keys (one stress multiplier grid) would thrash this cache
     # back into the per-invocation count jobs it removes
     return artifacts.get_or_build(
         spark, "rowcount", (sf_dir, name),
-        lambda: load_table(spark, sf_dir, name).count(), max_entries=512,
+        lambda: load_table(spark, sf_dir, name).count(),
+        reads=(table_path(sf_dir, name),), max_entries=512,
     )
 
 
@@ -381,7 +356,8 @@ def widen_narrow_scan(
         # the split count of a fixture table's scan is memoized per
         # (session, table), unbounded (r15 verdict #9)
         nparts = probe() if table_key is None else artifacts.get_or_build(
-            spark, "scan_width", table_key, probe, max_entries=None
+            spark, "scan_width", table_key, probe,
+            reads=(table_path(*table_key),), max_entries=None,
         )
     except Exception:  # pragma: no cover - connect-only sessions
         return df

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from . import artifacts
-from .catalog import load_table
+from .catalog import load_table, table_path
 
 _TEMPLATE = """
 WITH cert_base AS (
@@ -126,7 +126,7 @@ def oracle_with_cert_domains(select_sql: str) -> str:
 
 def build_cert_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the cert_domains DataFrame and register it as a temp view.
-    The (immutable) lineage is cached per (session, sf_dir) so repeated
+    The lineage is cached per (session, orders table state) so repeated
     queries skip re-parsing the construction SQL; views are re-registered
     each call so spark.sql always resolves."""
 
@@ -151,7 +151,8 @@ def build_cert_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.sql(cert_domains_spark_sql()).cache()
 
     df = artifacts.get_or_build(
-        spark, "cert_domains", (sf_dir,), build, release=artifacts.unpersist
+        spark, "cert_domains", (sf_dir,), build,
+        reads=(table_path(sf_dir, "orders"),), release=artifacts.unpersist,
     )
     df.createOrReplaceTempView("cert_domains")
     return df

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import artifacts
-from ..catalog import load_table, table_rowcount
+from ..catalog import load_table, table_path, table_rowcount
 from ..cert_domains import (
     build_cert_domains,
     cert_domains_duckdb_sql,
@@ -199,7 +199,8 @@ def _mutation_frames(spark: SparkSession, sf_dir: str) -> tuple:
 
     return artifacts.get_or_build(
         spark, "mutation_frames", (sf_dir,),
-        lambda: _build_mutation_frames(spark, sf_dir), release=release,
+        lambda: _build_mutation_frames(spark, sf_dir),
+        reads=(table_path(sf_dir, "orders"),), release=release,
     )
 
 
@@ -474,7 +475,7 @@ def _span_grams_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: _span_grams(_doc_base_cached(spark, sf_dir))
         .repartition(default_parallelism(), "gh")
         .persist(),
-        release=artifacts.unpersist,
+        reads=(table_path(sf_dir, "documents"),), release=artifacts.unpersist,
     )
 
 
@@ -691,7 +692,9 @@ def _corpus_bloom_cached(
             return None, n
         return build_bloom(corpus, "text_hash", n), n
 
-    return artifacts.get_or_build(spark, "corpus_bloom", (sf_dir,), build)
+    return artifacts.get_or_build(
+        spark, "corpus_bloom", (sf_dir,), build, reads=(table_path(sf_dir, "documents"),)
+    )
 
 
 # The three dedup_doc_exact sections (exact, span-removal, incremental)
@@ -721,7 +724,8 @@ def _doc_base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return artifacts.get_or_build(
-        spark, "doc_base", (sf_dir,), build, release=artifacts.unpersist
+        spark, "doc_base", (sf_dir,), build,
+        reads=(table_path(sf_dir, "documents"),), release=artifacts.unpersist,
     )
 
 
@@ -955,7 +959,7 @@ def _kept_shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: _kept_shingles(
             load_table(spark, sf_dir, "documents").repartition(default_parallelism())
         ).persist(),
-        release=artifacts.unpersist,
+        reads=(table_path(sf_dir, "documents"),), release=artifacts.unpersist,
     )
 
 
@@ -1023,7 +1027,8 @@ def _minhash_sig_df(
         ).persist()
 
     sig = artifacts.get_or_build(
-        spark, "minhash_sig", (sf_dir, k_plan), build, release=artifacts.unpersist
+        spark, "minhash_sig", (sf_dir, k_plan), build,
+        reads=(table_path(sf_dir, "documents"),), release=artifacts.unpersist,
     )
     if k < k_plan:
         return sig.select("doc_id", *[f"h{i}" for i in range(k)])
@@ -1188,7 +1193,7 @@ def _doc_simhash_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return artifacts.get_or_build(
         spark, "simhash", (sf_dir,),
         lambda: doc_simhash(spark, sf_dir).persist(),
-        release=artifacts.unpersist,
+        reads=(table_path(sf_dir, "documents"),), release=artifacts.unpersist,
     )
 
 

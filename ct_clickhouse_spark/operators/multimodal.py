@@ -46,7 +46,7 @@ from pyspark.sql.types import (
 )
 
 from .. import artifacts
-from ..catalog import load_table
+from ..catalog import load_table, table_path
 
 FRAME_BYTES = 256  # fake video "frame" size
 FRAME_STRIDE = 4  # sample every 4th frame
@@ -458,7 +458,7 @@ def build_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doc_id so both engines can reconstruct it."""
     return artifacts.get_or_build(
         spark, "media", (sf_dir,), lambda: _build_media(spark, sf_dir),
-        release=artifacts.unpersist,
+        reads=(table_path(sf_dir, "documents"),), release=artifacts.unpersist,
     )
 
 
@@ -715,7 +715,8 @@ def resize_media(
         return thumbs
 
     return artifacts.get_or_build(
-        spark, "resize", (sf_dir,), build, release=artifacts.unpersist
+        spark, "resize", (sf_dir,), build,
+        reads=(table_path(sf_dir, "documents"),), release=artifacts.unpersist,
     )
 
 
@@ -924,7 +925,7 @@ def image_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return artifacts.get_or_build(
         spark, "image_signatures", (sf_dir,),
         lambda: _build_image_signatures(spark, sf_dir),
-        release=artifacts.unpersist,
+        reads=(table_path(sf_dir, "documents"),), release=artifacts.unpersist,
     )
 
 
@@ -1154,7 +1155,7 @@ def audio_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return artifacts.get_or_build(
         spark, "audio_signatures", (sf_dir,),
         lambda: _build_audio_signatures(spark, sf_dir),
-        release=artifacts.unpersist,
+        reads=(table_path(sf_dir, "documents"),), release=artifacts.unpersist,
     )
 
 

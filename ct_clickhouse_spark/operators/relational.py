@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import artifacts
-from ..catalog import load_table
+from ..catalog import load_table, table_path
 
 SHIP_CUTOFF = "1998-09-02"
 Q3_DATE = "1996-03-15"
@@ -230,12 +230,11 @@ QUANTILE_RANGE_PARTITIONS = 64
 # only thing at stake.
 QUANTILE_BOUNDARY_ACCURACY = 500
 
-# Frozen per-group boundary frames are cached per (session, dataset
-# identity). Boundaries are a property of the DATA, not the query:
-# repeated quantile queries over one immutable fixture dir re-derive the
-# same |groups|-row aggregate, so caching it (same discipline as the ANN
-# index / pair caches) drops one of the three base scans from the warm
-# path. A cached frame is a localCheckpoint of a tiny aggregated frame —
+# Frozen per-group boundary frames are cached per (session, table
+# state). Boundaries are a property of the DATA, not the query:
+# repeated quantile queries over one table re-derive the same
+# |groups|-row aggregate, so caching it (same discipline as the ANN
+# index caches) drops one of the three base scans from the warm path. A cached frame is a localCheckpoint of a tiny aggregated frame —
 # never row-level data.
 
 # Sample fraction for the boundary sketch scan (balance-only, see
@@ -245,7 +244,7 @@ BOUNDS_SAMPLE_FRACTION = 0.01
 
 
 def _group_bounds(
-    base: DataFrame, gcol: str, vcol: str, n_b: int, cache_key
+    base: DataFrame, gcol: str, vcol: str, n_b: int, table: str | None
 ) -> DataFrame:
     """Frozen per-group bucket boundaries: approx_percentile at the n_b-1
     interior fractions, localCheckpoint'ed (tiny: |groups| rows of
@@ -260,7 +259,8 @@ def _group_bounds(
     sample misses entirely gets NULL boundaries -> every row in bucket 0
     (both consumers LEFT-join the boundary frame), which is correct and
     only costs a whole-group window for that (by construction small)
-    group."""
+    group. ``table``: the path ``base`` was loaded from, which caches
+    the boundaries per (session, table, columns, n_b)."""
     fracs = [i / n_b for i in range(1, n_b)]
 
     def build() -> DataFrame:
@@ -275,12 +275,13 @@ def _group_bounds(
             .localCheckpoint(eager=True)
         )
 
-    if cache_key is None:
+    if table is None:
         return build()
     # no release: capacity eviction DROPS a checkpointed frame (r14
     # advice, medium) — see the artifacts module docstring
     return artifacts.get_or_build(
-        base.sparkSession, "group_bounds", cache_key, build
+        base.sparkSession, "group_bounds", (table, gcol, vcol, n_b), build,
+        reads=(table,),
     )
 
 
@@ -310,7 +311,7 @@ def exact_group_quantiles(
     vcol: str,
     ps: list[float],
     n_partitions: int = QUANTILE_RANGE_PARTITIONS,
-    bounds_cache_key=None,
+    bounds_table: str | None = None,
 ) -> DataFrame:
     """Exact interpolated per-group percentiles WITHOUT buffering a group
     in memory (Spark's `percentile` materializes each group's values) and
@@ -370,7 +371,7 @@ def exact_group_quantiles(
     base = df.select(gcol, vcol)
     n_b = max(1, int(n_partitions))
     if n_b > 1:
-        bounds = _group_bounds(base, gcol, vcol, n_b, bounds_cache_key)
+        bounds = _group_bounds(base, gcol, vcol, n_b, bounds_table)
         ranged = (
             base.alias("_f")
             .join(
@@ -540,17 +541,10 @@ def price_quantiles_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the real shape at cluster scale."""
     ps = [0.25, 0.5, 0.75]
     li = _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
-    # boundaries are a property of the (immutable) fixture table — cache
-    # them per (session, dir), same keying as the ANN index artifacts
-    ckey = (
-        sf_dir,
-        "lineitem",
-        "l_returnflag",
-        "l_extendedprice",
-        QUANTILE_RANGE_PARTITIONS,
-    )
+    # boundaries are a property of the table: cache them per its state
     long = exact_group_quantiles(
-        li, "l_returnflag", "l_extendedprice", ps, bounds_cache_key=ckey
+        li, "l_returnflag", "l_extendedprice", ps,
+        bounds_table=table_path(sf_dir, "lineitem"),
     )
     return long.groupBy("l_returnflag").agg(
         *[
@@ -869,6 +863,7 @@ def bloom_join_section(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitmap = artifacts.get_or_build(
         spark, "bloom_dim", (sf_dir,),
         lambda: build_bloom(dim, "o_custkey", max(1, dim.count())),
+        reads=(table_path(sf_dir, "customer"),),
     )
     return bloom_prune_prebuilt(orders, "o_custkey", bitmap).join(
         dim, "o_custkey", "inner"

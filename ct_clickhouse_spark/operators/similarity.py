@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import artifacts
-from ..catalog import load_table, table_rowcount
+from ..catalog import load_table, table_path, table_rowcount
 
 TOPK = 10
 QUERY_VEC_ID = 0
@@ -122,48 +122,13 @@ def _gemm_blocks(n_rows: int) -> int:
 # serving 404 contract) and are NOT negative-cached — a vector ingested
 # later must become visible. Bounded at both levels like every sibling
 # artifact cache.
-#
-# STALENESS ENFORCED (r13 verdict #5 — was a documented immutable-fixture
-# assumption): this cache, the SQ8 index, the IVF centroids and index
-# and the ANN route below carry the `path_state` fingerprint of the
-# embeddings path they were resolved from as their registry state; a
-# fingerprint mismatch (a rewrite/compaction/mutation landed)
-# invalidates the directory's artifacts and table memos, and
-# re-resolves. The probe is a TTL-memoized directory
-# fingerprint (_emb_state) — amortized noise next to the Spark job it
-# guards.
 QVEC_CACHE_MAX_IDS = 4096
-
-
-# path_state on a directory-shaped table is a full os.walk + per-file
-# stat — NOT "one os.stat per lookup" (r14 advice #3), and it sat on the
-# serving hot path growing with file count per query. Memoized with a
-# short TTL: the walk runs at most once per TTL per path, so staleness
-# detection lags a mutation by <= _EMB_STATE_TTL_S (a freshly-landed
-# rewrite is visible on the next tick) while the hot path pays a dict
-# probe + one monotonic clock read.
-_EMB_STATE_TTL_S = 1.0
-
-
-def _emb_state(spark: SparkSession, sf_dir: str) -> tuple:
-    import time as _time
-
-    from ..catalog import path_state, table_path
-
-    # [time of the last walk, its fingerprint], refreshed in place
-    memo = artifacts.get_or_build(
-        spark, "emb_state", (sf_dir,), lambda: [float("-inf"), None], max_entries=64
-    )
-    now = _time.monotonic()
-    if now - memo[0] >= _EMB_STATE_TTL_S:
-        memo[1] = path_state(table_path(sf_dir, "embeddings"))
-        memo[0] = now
-    return memo[1]
 
 
 def _query_vector(spark: SparkSession, sf_dir: str, vec_id: int) -> list:
     vecs = artifacts.get_or_build(
-        spark, "query_vectors", (sf_dir,), dict, state=_emb_state(spark, sf_dir)
+        spark, "query_vectors", (sf_dir,), dict,
+        reads=(table_path(sf_dir, "embeddings"),),
     )
     v = vecs.get(vec_id)
     if v is None:
@@ -628,11 +593,10 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str):
     at any corpus size. Trained once per (session, sf): deterministic, so
     every consumer would retrain the identical array: the IVF index
     build, the SemDeDup assignment and the router's probe. An empty
-    table has no cells: a (0, 0) array. Same `path_state` staleness
-    enforcement as the query vectors."""
+    table has no cells: a (0, 0) array."""
     return artifacts.get_or_build(
         spark, "centroids", (sf_dir,), lambda: _train_ivf_centroids(spark, sf_dir),
-        state=_emb_state(spark, sf_dir),
+        reads=(table_path(sf_dir, "embeddings"),),
     )
 
 
@@ -715,8 +679,6 @@ def ivf_topk(
     vector raises ValueError, an unknown id IndexError."""
     if n_probes < 1:
         raise ValueError(f"n_probes must be >= 1, got {n_probes}")
-    # the query vector first: a staleness drop it triggers lands before
-    # the index is resolved, never between resolving it and its scan
     qvec = _query_vector(spark, sf_dir, query_vec_id)
     _query_norm(qvec, query_vec_id)
     return ivf_probe(
@@ -944,9 +906,8 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple:
     centroids, vectors scan): the one corpus-side home-cell assignment,
     built once per embeddings state by ivf_build and read by every IVF
     search. Holding the scan saves each query re-listing the index
-    directory. Same `path_state` staleness enforcement as the query
-    vectors; the directory is removed when the entry leaves the registry
-    and at interpreter exit."""
+    directory. The directory is removed when the entry leaves the
+    registry and at interpreter exit."""
 
     def build() -> tuple:
         path = artifacts.mkdtemp("ivf_index_")
@@ -955,8 +916,8 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple:
 
     return artifacts.get_or_build(
         spark, "ivf_index", (sf_dir,), build,
+        reads=(table_path(sf_dir, "embeddings"),),
         release=lambda index: artifacts.remove_dir(index[0]),
-        state=_emb_state(spark, sf_dir),
     )
 
 
@@ -1077,8 +1038,7 @@ def _sq8_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[float]
     label and its original vector, the layout FAISS-style serving
     indexes use. It scans ~9x the bytes of the codes alone, but the
     approximate TakeOrdered returns the candidates with their vectors,
-    so a query is ONE job plus a driver-side exact re-rank. Same
-    `path_state` staleness enforcement as the query vectors."""
+    so a query is ONE job plus a driver-side exact re-rank."""
 
     def build():
         codes, scales = sq8_quantize(
@@ -1090,7 +1050,8 @@ def _sq8_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[float]
 
     return artifacts.get_or_build(
         spark, "sq8", (sf_dir,), build,
-        release=lambda v: v[0].unpersist(), state=_emb_state(spark, sf_dir),
+        reads=(table_path(sf_dir, "embeddings"),),
+        release=lambda v: v[0].unpersist(),
     )
 
 
@@ -1412,7 +1373,7 @@ def ann_regime_probe(
     return artifacts.get_or_build(
         spark, "ann_route", (sf_dir, sample_n, k, target_recall),
         lambda: _ann_regime_probe(spark, sf_dir, sample_n, k, target_recall),
-        state=_emb_state(spark, sf_dir),
+        reads=(table_path(sf_dir, "embeddings"),),
     )
 
 
@@ -1479,7 +1440,10 @@ def ann_topk_auto_rows(
     reaches ANN_TARGET_RECALL (cell pruning reads probes/n_cells of the
     data — strictly cheaper than SQ8's full code scan when it applies).
     Either route runs one Spark job once the probe, the query vector and
-    the route's index are built."""
+    the route's index are built. The query vector is resolved first, so
+    an unknown id raises IndexError (the serving 404) even on an empty
+    table, where the probe has no sample."""
+    _query_vector(spark, sf_dir, query_vec_id)
     probe = ann_regime_probe(spark, sf_dir, k=k)
     if probe["route"] == "ivf":
         df = ivf_topk(

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import artifacts
-from ..catalog import load_table
+from ..catalog import load_table, table_path
 from ..session import default_parallelism
 
 # Tiny in-query stopword lists for the language-ID heuristic.
@@ -610,6 +610,7 @@ def _bpe_merges_cached(spark: SparkSession, sf_dir: str) -> list:
         lambda: bpe_train(
             hash_sample(load_table(spark, sf_dir, "documents"), "doc_id", BPE_SAMPLE)
         ),
+        reads=(table_path(sf_dir, "documents"),),
     )
 
 
@@ -983,13 +984,15 @@ def train_bigram_lm(
     return c12, v
 
 
-def _lm_cached(spark: SparkSession, sf_dir: str, docs: DataFrame) -> tuple[DataFrame, int]:
-    """The bigram LM trained on ``docs``' ``lang = LM_LANG`` slice, once
-    per (session, sf); ``docs`` is the sf's documents table."""
+def _lm_cached(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """The bigram LM trained on the documents' ``lang = LM_LANG`` slice,
+    once per (session, documents state)."""
     return artifacts.get_or_build(
         spark, "bigram_lm", (sf_dir,),
-        lambda: train_bigram_lm(docs.filter(F.col("lang") == LM_LANG)),
-        release=lambda v: v[0].unpersist(),
+        lambda: train_bigram_lm(
+            load_table(spark, sf_dir, "documents").filter(F.col("lang") == LM_LANG)
+        ),
+        reads=(table_path(sf_dir, "documents"),), release=lambda v: v[0].unpersist(),
     )
 
 
@@ -1007,14 +1010,11 @@ def _lm_cached(spark: SparkSession, sf_dir: str, docs: DataFrame) -> tuple[DataF
 # equal by tests/test_text.py::test_lm_inline_matches_join_path.
 LM_INLINE_MAX_ENTRIES = 2048
 
-# (m12 map Column, m1 map Column) per (session, sf, lm identity) — built
-# once from the persisted c12 artifact iff it passes the gate; a None
-# entry memoizes "too big (or unencodable), use the join path". The lm
-# identity (id of the c12 frame + V) is part of the key (r15 advice): a
-# retrained artifact is a NEW DataFrame object, so its maps can never be
-# served from the previous artifact's entry. (id() recycling can only
-# alias two artifacts of the SAME immutable (session, sf) corpus, whose
-# maps are identical by construction.)
+# (m12 map Column, m1 map Column) per (session, sf) — built once from
+# the persisted c12 artifact iff it passes the gate; a None entry
+# memoizes "too big (or unencodable), use the join path". The entry
+# reads the documents table, like the LM it is built from, so a
+# retrained LM (the documents changed) never meets the old maps.
 
 # Each lookup table is ONE string literal parsed by a foldable str_to_map
 # — not a map_from_arrays over per-entry literals, which costs one py4j
@@ -1031,7 +1031,8 @@ def _lm_maps(spark: SparkSession, sf_dir: str, lm: tuple[DataFrame, int]):
     """Literal lookup-map COLUMNS for the inline scoring path, or None
     when the LM is past LM_INLINE_MAX_ENTRIES (driver + plan size stay
     bounded: the collect is gated BEFORE it runs) or a key contains the
-    encoding separators (the join path then guarantees correctness)."""
+    encoding separators (the join path then guarantees correctness).
+    ``lm`` is ``sf_dir``'s own _lm_cached LM, so the key is the sf alone."""
     c12, _v = lm
 
     def build():
@@ -1056,7 +1057,8 @@ def _lm_maps(spark: SparkSession, sf_dir: str, lm: tuple[DataFrame, int]):
         )
 
     return artifacts.get_or_build(
-        spark, "lm_maps", (sf_dir, id(c12), _v), build, max_entries=16
+        spark, "lm_maps", (sf_dir,), build,
+        reads=(table_path(sf_dir, "documents"),), max_entries=16,
     )
 
 
@@ -1140,7 +1142,7 @@ def bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the inline literal-map projection — one scan, zero
     exchanges; larger LMs take lm_score's join path."""
     docs = load_table(spark, sf_dir, "documents")
-    lm = _lm_cached(spark, sf_dir, docs)
+    lm = _lm_cached(spark, sf_dir)
     maps = _lm_maps(spark, sf_dir, lm)
     if maps is None:
         return lm_score(docs, lm=lm)
@@ -1545,7 +1547,7 @@ def doc_profile_with_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (past LM_INLINE_MAX_ENTRIES) keep the join shape — the path
     # decontamination uses.
     docs_raw = load_table(spark, sf_dir, "documents")
-    lm = _lm_cached(spark, sf_dir, docs_raw)
+    lm = _lm_cached(spark, sf_dir)
     maps = _lm_maps(spark, sf_dir, lm)
     scored = scored.withColumn("pred_lang", pred)
     if maps is None:

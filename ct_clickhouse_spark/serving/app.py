@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from .. import artifacts
 from ..api_queries import human_readable_size
-from ..catalog import CERT_DOMAINS_SCHEMA, path_state
+from ..catalog import CERT_DOMAINS_SCHEMA
 
 try:
     from flask import Flask, Response, jsonify, request, stream_with_context
@@ -97,23 +97,15 @@ def create_app(
     # per-request re-resolution fixed. But re-resolving EVERY request
     # paid listing + parquet-footer schema inference (~100 ms at
     # sf0.01) on the point-lookup path the reference's ClickHouse
-    # serves in ~ms. The registry keeps both properties: a sub-ms local
-    # path_state fingerprint decides per request whether the cached
-    # relation's listing is still the live one; any append/compaction/
-    # mutation changes the fingerprint and forces one re-resolution.
-    # The fingerprint is taken BEFORE the read (it is an argument, so it
-    # is evaluated before get_or_build can build): a file appended
-    # between a read (which pins its listing) and a post-read
-    # fingerprint would be inside the stored state but outside the
-    # pinned listing — invisible until the directory changed AGAIN.
-    # Stat-then-read at worst stores a stale fingerprint, which merely
-    # forces one extra re-resolution. The e2e stream-serving test still
-    # pins the freshness semantics.
+    # serves in ~ms. The registry keeps both properties: it
+    # fingerprints the table (its reads) on every lookup, before any
+    # read, and re-resolves the relation only when an append,
+    # compaction or mutation changed it (the artifacts module's
+    # staleness rule). The e2e stream-serving test pins the freshness.
     def table():
         return artifacts.get_or_build(
             spark, "serving_table", (table_path,),
-            lambda: spark.read.parquet(table_path),
-            state=path_state(table_path),
+            lambda: spark.read.parquet(table_path), reads=(table_path,),
         )
 
     # fail-fast schema check on the startup resolution, which seeds the

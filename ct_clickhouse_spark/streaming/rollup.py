@@ -390,12 +390,12 @@ def _rollup_cached(spark: SparkSession, sf_dir: str, name: str, backfill) -> Dat
     """The events table's ``backfill`` rollup, persisted once per
     (session, sf)."""
     from .. import artifacts
-    from ..catalog import load_table
+    from ..catalog import load_table, table_path
 
     return artifacts.get_or_build(
         spark, name, (sf_dir,),
         lambda: backfill(load_table(spark, sf_dir, "events")).persist(),
-        release=artifacts.unpersist,
+        reads=(table_path(sf_dir, "events"),), release=artifacts.unpersist,
     )
 
 

@@ -1,6 +1,7 @@
 """The artifact registry (ct_clickhouse_spark/artifacts.py): staleness,
-invalidation, bounds, concurrency and counters — plus a guard that the
-package keeps it as its one cache mechanism."""
+invalidation, bounds, concurrency and counters — plus guards that the
+package keeps it as its one cache mechanism and that every entry names
+the tables it reads."""
 
 from __future__ import annotations
 
@@ -23,58 +24,77 @@ PACKAGE = Path(__file__).resolve().parent.parent / "ct_clickhouse_spark"
 
 
 @pytest.fixture()
-def fake():
+def fake(tmp_path):
     """A session of its own (its key is a one-time tag), so counters
-    and entries start empty; the test's names are cleared afterwards."""
+    and entries start empty, and a read path under ``tmp_path``; the
+    test's names are cleared afterwards."""
     names: list[str] = []
-    yield types.SimpleNamespace(), names
+    yield types.SimpleNamespace(), names, (str(tmp_path / "t.parquet"),)
     for n in names:
         artifacts.clear(n)
 
 
+def _rewrite(path: str, data: bytes) -> None:
+    """Write ``data`` to ``path`` with its mtime pushed ahead, so the
+    rewrite is a new fingerprint even on a coarse-mtime filesystem."""
+    with open(path, "wb") as f:
+        f.write(data)
+    now = os.stat(path).st_mtime + 2
+    os.utime(path, (now, now))
+
+
 def test_state_change_rebuilds_and_releases_old(fake):
-    sess, names = fake
+    sess, names, reads = fake
     names.append("t_state")
     released: list = []
     builds = iter(["v1", "v2"])
 
-    def get(state):
+    def get():
         return artifacts.get_or_build(
             sess, "t_state", ("/d",), lambda: next(builds),
-            release=released.append, state=state,
+            reads=reads, release=released.append,
         )
 
-    assert get("s1") == "v1"
-    assert get("s1") == "v1" and released == []  # same token: a hit
-    assert get("s2") == "v2"
+    _rewrite(reads[0], b"one")
+    assert get() == "v1"
+    assert get() == "v1" and released == []  # same fingerprint: a hit
+    _rewrite(reads[0], b"two!")
+    assert get() == "v2"  # no wait: the next lookup sees the rewrite
     assert released == ["v1"]
     assert artifacts.entries("t_state", sess) == {("/d",): "v2"}
 
 
-def test_invalidate_drops_only_that_directory(fake):
-    sess, names = fake
+def test_invalidate_drops_only_that_directory(fake, tmp_path):
+    # only the entries that read the table: not its sibling in the same
+    # directory, nor the same table name in another directory
+    sess, names, _reads = fake
     names += ["t_inv_a", "t_inv_b"]
     released: list = []
+    keys = [(d, t) for d in ("d1", "d2") for t in ("x", "y")]
     for name in ("t_inv_a", "t_inv_b"):
-        for d in ("/d1", "/d2"):
+        for d, t in keys:
             artifacts.get_or_build(
-                sess, name, (d, 7), lambda n=name, d=d: (n, d),
+                sess, name, (d, t), lambda n=name, d=d, t=t: (n, d, t),
+                reads=(str(tmp_path / d / f"{t}.parquet"),),
                 release=released.append,
             )
-    artifacts.invalidate("/d1")
-    assert sorted(released) == [("t_inv_a", "/d1"), ("t_inv_b", "/d1")]
+    artifacts.invalidate(str(tmp_path / "d1" / "x.parquet"))
+    assert sorted(released) == [("t_inv_a", "d1", "x"), ("t_inv_b", "d1", "x")]
     for name in ("t_inv_a", "t_inv_b"):
-        assert artifacts.entries(name, sess) == {("/d2", 7): (name, "/d2")}
+        assert artifacts.entries(name, sess) == {
+            k: (name, *k) for k in keys if k != ("d1", "x")
+        }
 
 
 def test_bound_evicts_oldest_and_hit_refreshes(fake):
-    sess, names = fake
+    sess, names, reads = fake
     names.append("t_lru")
     released: list = []
 
     def get(k):
         return artifacts.get_or_build(
-            sess, "t_lru", (k,), lambda: k, release=released.append, max_entries=2
+            sess, "t_lru", (k,), lambda: k, reads=reads,
+            release=released.append, max_entries=2,
         )
 
     get("a"), get("b"), get("a"), get("c")  # "a" was used after "b"
@@ -83,11 +103,13 @@ def test_bound_evicts_oldest_and_hit_refreshes(fake):
 
 
 def test_stats_counts_a_known_sequence(fake):
-    sess, names = fake
+    sess, names, reads = fake
     names.append("t_stats")
 
     def get(k):
-        return artifacts.get_or_build(sess, "t_stats", (k,), lambda: k, max_entries=2)
+        return artifacts.get_or_build(
+            sess, "t_stats", (k,), lambda: k, reads=reads, max_entries=2
+        )
 
     for k in ["a", "a", "b", "c", "c", "a"]:
         get(k)
@@ -97,8 +119,8 @@ def test_stats_counts_a_known_sequence(fake):
     }
 
 
-def test_concurrent_get_or_build_from_8_threads(fake):
-    sess, names = fake
+def test_concurrent_get_or_build_from_8_threads(fake, tmp_path):
+    sess, names, _reads = fake
     names.append("t_threads")
     errors: list = []
     wrong: list = []
@@ -108,13 +130,15 @@ def test_concurrent_get_or_build_from_8_threads(fake):
         try:
             for i in range(calls):
                 k = (t * 7 + i) % 11
+                path = str(tmp_path / f"{k}.parquet")
                 got = artifacts.get_or_build(
-                    sess, "t_threads", (k,), lambda k=k: ("v", k), max_entries=5
+                    sess, "t_threads", (k,), lambda k=k: ("v", k),
+                    reads=(path,), max_entries=5,
                 )
                 if got != ("v", k):
                     wrong.append((k, got))
                 if i % 50 == 0:
-                    artifacts.invalidate(k)
+                    artifacts.invalidate(path)
         except Exception as exc:  # pragma: no cover - the failure mode
             errors.append(exc)
 
@@ -167,7 +191,8 @@ def test_cert_and_shingle_caches_are_bounded(spark, tmp_path):
             assert len(live) <= ARTIFACT_CACHE_MAX, name
     finally:
         for d in dirs:
-            artifacts.invalidate(d)
+            for table in ("orders", "documents"):
+                artifacts.invalidate(os.path.join(d, f"{table}.parquet"))
 
 
 _CACHE_NAME = re.compile(r"^_\w*(CACHE|MEMO)\w*$")
@@ -230,10 +255,12 @@ def test_delete_where_is_visible_to_the_next_load_table(spark, tmp_path):
 # (a table plan, a persisted scan, signatures, shingles, centroids, an LM
 # map, decoded media, an on-disk index); a slot's answer (a pair set,
 # converged labels, a reassembled text) is computed per call and must
-# never be added here.
+# never be added here. "simhash" is index state: one signature per
+# document, a pure function of that document's text, like "minhash_sig";
+# the sketch-signatures slot joins it, but no answer is stored in it.
 INDEX_ARTIFACTS = {
     "ann_route", "audio_signatures", "bigram_lm", "bloom_dim", "bpe_merges",
-    "centroids", "cert_domains", "corpus_bloom", "doc_base", "emb_state",
+    "centroids", "cert_domains", "corpus_bloom", "doc_base",
     "group_bounds", "image_signatures", "ivf_index", "lm_maps", "media",
     "minhash_sig", "mutation_frames", "query_vectors", "resize",
     "rollup_cms", "rollup_hist", "rollup_kmv", "rowcount", "scan_width",
@@ -279,6 +306,25 @@ def test_registry_holds_only_index_artifacts():
     for path in sorted(PACKAGE.rglob("*.py")):
         found |= _registry_names(ast.parse(path.read_text(), filename=str(path)))
     assert found == INDEX_ARTIFACTS
+
+
+def test_every_get_or_build_call_declares_its_reads():
+    """Staleness by construction: each call passes ``reads=`` as a
+    non-empty tuple literal of the table paths it derives from, which
+    the registry fingerprints on every lookup."""
+    calls, missing = 0, []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for call in (n for n in ast.walk(tree) if isinstance(n, ast.Call)):
+            callee = getattr(call.func, "attr", getattr(call.func, "id", None))
+            if callee != "get_or_build":
+                continue
+            calls += 1
+            reads = next((k.value for k in call.keywords if k.arg == "reads"), None)
+            if not (isinstance(reads, ast.Tuple) and reads.elts):
+                missing.append(f"{path.relative_to(PACKAGE)}:{call.lineno}")
+    assert calls >= len(INDEX_ARTIFACTS) - 2  # the three rollup names share a call
+    assert missing == [], f"get_or_build calls without reads=: {missing}"
 
 
 # Every function that calls the cell-assignment rule, pinned. The corpus

@@ -59,10 +59,8 @@ def _reference_topk(spark, sf_dir, n_probes=IVF_PROBES, k=TOPK):
 
 def _write_embeddings(sf_dir, vecs, ids=None):
     """``vecs`` as the catalog's embeddings table under ``sf_dir``, with
-    the file's mtime pushed ahead and the fingerprint TTL waited out, so
-    an out-of-band rewrite is seen by the next call."""
-    from ct_clickhouse_spark.operators.similarity import _EMB_STATE_TTL_S
-
+    the file's mtime pushed ahead, so an out-of-band rewrite is a new
+    fingerprint even on a coarse-mtime filesystem."""
     vecs = np.asarray(vecs, dtype=np.float32)
     ids = np.arange(len(vecs)) if ids is None else np.asarray(ids)
     path = os.path.join(sf_dir, "embeddings.parquet")
@@ -78,7 +76,6 @@ def _write_embeddings(sf_dir, vecs, ids=None):
     )
     now = time.time() + 2
     os.utime(path, (now, now))
-    time.sleep(_EMB_STATE_TTL_S + 0.05)
 
 
 @pytest.fixture()
@@ -161,9 +158,10 @@ def test_ivf_topk_rejects_zero_query(spark, emb_dir):
 
 def test_empty_embeddings_table(spark, emb_dir):
     """On an empty embeddings table the cell-based operators return zero
-    rows, and ivf_topk raises the unknown-id IndexError (the serving 404
-    contract)."""
+    rows, and ivf_topk and the ANN router raise the unknown-id IndexError
+    (the serving 404 contract)."""
     from ct_clickhouse_spark.operators.similarity import (
+        ann_topk_auto_rows,
         embedding_incremental_pairs,
         semdedup_pairs,
     )
@@ -178,6 +176,8 @@ def test_empty_embeddings_table(spark, emb_dir):
     assert embedding_incremental_pairs(spark, emb_dir, batch_ids).count() == 0
     with pytest.raises(IndexError):
         ivf_topk(spark, emb_dir)
+    with pytest.raises(IndexError):
+        ann_topk_auto_rows(spark, emb_dir)
 
 
 def test_batch_topk_single_query_equals_ivf_topk(spark):

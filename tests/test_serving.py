@@ -137,6 +137,29 @@ def test_similar_unknown_vec_is_404(sim_client):
     assert r.status_code == 404
 
 
+def test_similar_on_empty_embeddings_is_404(spark, table_path, tmp_path):
+    """An empty embeddings table has no vector for any id: 404, not the
+    router's sampling error as a 500."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ct_clickhouse_spark.serving.app import create_app
+
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([], pa.int64()),
+                "embedding": pa.array([], pa.list_(pa.float32())),
+                "label": pa.array([], pa.int32()),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    app = create_app(spark, table_path, embeddings_sf_dir=str(tmp_path))
+    app.config["TESTING"] = True
+    assert app.test_client().get("/similar/0").status_code == 404
+
+
 def test_similar_unconfigured_is_404(client):
     r = client.get("/similar/3")
     assert r.status_code == 404

@@ -62,69 +62,89 @@ def test_each_request_gets_its_own_fair_pool(app, spark):
     assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") is None
 
 
-def test_fair_pools_prevent_head_of_line_blocking(spark):
-    """The property the serving fix exists for, measured at the Spark
-    level where it is deterministic: a multi-wave slow job saturates all
-    task slots from pool A; a tiny job submitted from pool B must finish
-    while the slow job is still running (FAIR gives it a share of the
-    slots at the next wave boundary). Under FIFO-in-one-pool the tiny
-    job's task queues behind every remaining slow-job task and finishes
-    only with the slow job.
+HOL_WAVES, HOL_WAVE_S = 4, 0.5
 
-    Timing-robust (ADVICE r7): one attempt can be perturbed by a GC
-    pause or scheduler delay on a loaded box, so an attempt only COUNTS
-    when the slow job was verifiably still mid-flight as the fast query
-    returned, and a failed attempt is retried once before the test
-    fails."""
+
+def _fast_end_and_last_wave(spark, fast_pool: str) -> tuple[int, int]:
+    """Run a slow job of HOL_WAVES waves of sleeping tasks (one task per
+    core each) in pool "hol-slow" and, once it runs, a one-task job in
+    ``fast_pool``. Returns (the fast job's end, the launch of the slow
+    job's first last-wave task), in ms, as the status store recorded
+    them: the order the scheduler ran the jobs, not a wall-clock bound."""
     import threading
-    import time
+    import uuid
 
     sc = spark.sparkContext
     cores = sc.defaultParallelism
-    waves, wave_s = 4, 0.5
+    tracker = sc.statusTracker()
+    slow_group, fast_group = (f"hol-{n}-{uuid.uuid4().hex}" for n in ("slow", "fast"))
 
-    def slow():
-        sc.setLocalProperty("spark.scheduler.pool", "hol-slow")
+    def run(pool: str, group: str, job) -> None:
+        sc.setLocalProperty("spark.scheduler.pool", pool)
+        sc.setLocalProperty("spark.jobGroup.id", group)
         try:
-            (
-                spark.range(cores * waves)
-                .repartition(cores * waves)
-                .rdd.foreachPartition(lambda it: time.sleep(wave_s))
-            )
+            job()
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
+            sc.setLocalProperty("spark.jobGroup.id", None)
 
-    def attempt() -> tuple[bool, float]:
-        """(slow_job_was_mid_flight, fast_elapsed_seconds)."""
-        t_slow = threading.Thread(target=slow)
-        t_slow.start()
-        time.sleep(wave_s * 0.6)  # land inside the slow job's first wave
-        sc.setLocalProperty("spark.scheduler.pool", "hol-fast")
-        try:
-            t0 = time.time()
-            assert spark.range(10).count() == 10
-            fast_elapsed = time.time() - t0
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
-        slow_running = t_slow.is_alive()
-        t_slow.join(timeout=waves * wave_s * 10)
-        return slow_running, fast_elapsed
-
-    # FIFO would queue the tiny job behind ~3 remaining waves (>= 1.5s);
-    # FAIR schedules it at the next wave boundary (<= ~1 wave + overhead)
-    bound = waves * wave_s * 0.6
-    last = None
-    for _ in range(2):
-        slow_running, fast_elapsed = attempt()
-        if slow_running and fast_elapsed < bound:
-            return
-        last = (slow_running, fast_elapsed)
-    slow_running, fast_elapsed = last
-    assert slow_running, "slow job finished too early to exercise the race"
-    assert fast_elapsed < bound, (
-        f"point lookup took {fast_elapsed:.2f}s behind a "
-        f"{waves * wave_s:.1f}s scan: head-of-line blocking"
+    t_slow = threading.Thread(
+        target=run,
+        args=("hol-slow", slow_group, lambda: sc.parallelize(
+            range(cores * HOL_WAVES), cores * HOL_WAVES
+        ).foreach(lambda _: time.sleep(HOL_WAVE_S))),
     )
+    t_slow.start()
+    deadline = time.time() + 60
+    while not tracker.getJobIdsForGroup(slow_group) and time.time() < deadline:
+        time.sleep(0.01)
+    time.sleep(HOL_WAVE_S * 0.6)  # land inside the slow job's first wave
+    run(fast_pool, fast_group, lambda: spark.range(0, 10, 1, 1).collect())
+    t_slow.join(timeout=HOL_WAVES * HOL_WAVE_S * 30)
+    assert not t_slow.is_alive()
+
+    (slow_id,) = tracker.getJobIdsForGroup(slow_group)
+    (fast_id,) = tracker.getJobIdsForGroup(fast_group)
+    store = sc._jsc.sc().statusStore()
+    # the status store is fed by the listener bus: wait until it has
+    # seen both jobs end, which orders every task launch before it
+    while (
+        tracker.getJobInfo(slow_id).status != "SUCCEEDED"
+        or not store.job(fast_id).completionTime().isDefined()
+    ) and time.time() < deadline:
+        time.sleep(0.01)
+    (stage,) = tracker.getJobInfo(slow_id).stageIds
+    tasks = store.taskList(
+        stage, tracker.getStageInfo(stage).currentAttemptId, cores * HOL_WAVES
+    )
+    launches = sorted(tasks.apply(i).launchTime().getTime() for i in range(tasks.size()))
+    assert len(launches) == cores * HOL_WAVES
+    fast_end = store.job(fast_id).completionTime().get().getTime()
+    return fast_end, launches[(HOL_WAVES - 1) * cores]
+
+
+def test_fair_pools_prevent_head_of_line_blocking(spark):
+    """The property the serving fix exists for, judged at the Spark
+    level by scheduling order: a multi-wave slow job saturates all task
+    slots from pool A; a tiny job from pool B must END before the slow
+    job's last wave STARTS (FAIR gives it a slot at the next wave
+    boundary). Under FIFO-in-one-pool the tiny job's task queues behind
+    every remaining slow-job task, so it ends only after the last wave
+    started — test_shared_fifo_pool_blocks_the_fast_job pins that this
+    check sees the difference."""
+    fast_end, last_wave = _fast_end_and_last_wave(spark, "hol-fast")
+    assert fast_end < last_wave, (
+        f"point lookup ended {fast_end - last_wave} ms after the slow "
+        "job's last wave started: head-of-line blocking"
+    )
+
+
+def test_shared_fifo_pool_blocks_the_fast_job(spark):
+    """The control: with both jobs in one pool (FIFO inside it) the
+    fast job ends after the slow job's last wave started, so the check
+    above fails when pools are not per request."""
+    fast_end, last_wave = _fast_end_and_last_wave(spark, "hol-slow")
+    assert fast_end > last_wave
 
 
 def test_pool_namespace_is_bounded_ring(app, spark, monkeypatch):

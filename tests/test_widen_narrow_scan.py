@@ -14,6 +14,7 @@ from ct_clickhouse_spark import artifacts
 from ct_clickhouse_spark.catalog import (
     invalidate_table,
     load_table,
+    table_path,
     widen_narrow_scan,
 )
 from tests.conftest import SF_DIR
@@ -44,11 +45,12 @@ def test_probe_memoized_per_table_and_invalidated(spark):
     # memo hit: poison the stored value and confirm the gate reads it
     artifacts.clear("scan_width")
     artifacts.get_or_build(
-        spark, "scan_width", (SF_DIR, "documents"), lambda: 99, max_entries=None
+        spark, "scan_width", (SF_DIR, "documents"), lambda: 99,
+        reads=(table_path(SF_DIR, "documents"),), max_entries=None,
     )
     assert (
         widen_narrow_scan(docs, spark, table_key=(SF_DIR, "documents"))
         is docs
     )
-    invalidate_table(spark, SF_DIR, "documents")
+    invalidate_table(spark, table_path(SF_DIR, "documents"))
     assert (SF_DIR, "documents") not in artifacts.entries("scan_width", spark)
